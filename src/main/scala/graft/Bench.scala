@@ -15,10 +15,9 @@ object Bench {
     * query in the round-3 bench). XOR is closed over Long — overflow
     * is impossible — and still consumes every hashed row.
     */
-  private[graft] def force(df: DataFrame): Long = {
+  private[graft] def force(df: DataFrame): Unit = {
     val hashed = df.select(xxhash64(df.columns.map(col): _*).as("h"))
     hashed.agg(bit_xor(col("h"))).collect()
-    0L
   }
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")

@@ -14,6 +14,26 @@ import graft.sources.Tables
   * that these plans survive scale-up. Not part of the driver contract.
   */
 object ScaleProbe {
+  private val Alphabet = "abcdefghijklmnopqrstuvwxyz"
+
+  /** Letter permutation for document copy `c`: a seeded Fisher–Yates
+    * shuffle (identity for copy 0, so the 1x corpus is a literal
+    * subset) that stays collision-free at ANY factor — a `rotate by
+    * c % 26` would wrap at factor 27+, making copies 26+k exact text
+    * twins of copies k.
+    */
+  private def permFor(c: Int): String = {
+    val arr = Alphabet.toCharArray
+    if (c > 0) {
+      val rnd = new scala.util.Random(c)
+      for (i <- arr.length - 1 to 1 by -1) {
+        val j = rnd.nextInt(i + 1)
+        val t = arr(i); arr(i) = arr(j); arr(j) = t
+      }
+    }
+    new String(arr)
+  }
+
   def main(args: Array[String]): Unit = {
     val factor = if (args.nonEmpty) args(0).toInt else 4
     val base = "/root/testdata/sf0.1"
@@ -30,10 +50,19 @@ object ScaleProbe {
     // a DISTINCT deterministic permutation per copy so copies are
     // genuinely DIFFERENT documents — otherwise every doc has N
     // near-dup variants and the dedup result set grows quadratically by
-    // construction, which would mask the plan's own scaling (see
-    // [[ProbeStaging]] — shared with TokenProbe/LoaderProbe; the shape
+    // construction, which would mask the plan's own scaling (the shape
     // pipe_source_cap's flat cap-bounded output is asserted against)
-    ProbeStaging.stageDocuments(spark, base, stage, factor)
+    val docs = Tables.documents(spark, base)
+    (0 until factor).map { c =>
+      docs.select((col("doc_id") + lit(c.toLong * 100000000L)).as("doc_id"),
+        translate(col("text"), Alphabet, permFor(c)).as("text"),
+        col("lang"),
+        // source carries through unchanged: the realistic growth mode
+        // is the SAME domains getting more docs (per-source population
+        // scales with the corpus)
+        col("source"), col("n_chars"))
+    }.reduce(_ unionByName _)
+      .write.mode("overwrite").parquet(s"$stage/documents.parquet")
 
     // the staged copy writes ts as epoch-nanos LONG — Tables.events is
     // schema-adaptive (LONG ⇒ nanos shim, timestamp ⇒ pass-through), so

@@ -75,26 +75,4 @@ object Decay {
     val nc = count - raw
     when(nc <= 0L, lit(1L)).otherwise(nc)
   }
-
-  /** New count under goforget semantics. */
-  def newCountGo(raw: Column, count: Column, prune: Boolean): Column =
-    count - clampGo(raw, count, prune)
-}
-
-/** Registered-function wrappers around [[Poisson]]. A plain Scala UDF is
-  * deterministic here because the randomness is a pure function of the
-  * seed column — safe under retries, though opaque to codegen. The hot
-  * batch paths default to DecayMode.Expected which stays entirely inside
-  * whole-stage codegen; Sampled is the fidelity mode.
-  */
-object PoissonUdfs {
-  import org.apache.spark.sql.functions.udf
-
-  private val decayUdf = udf { (lambda: Double, seed: Long) =>
-    val k = Poisson.sampleWithUniform(lambda, Poisson.uniform(seed))
-    if (k == -1) 0L else k.toLong
-  }
-
-  def poissonDecay(lambda: Column, seed: Column): Column =
-    decayUdf(lambda, seed).cast("long")
 }

@@ -10,13 +10,12 @@ import graft.core.Poisson
 
 /** Native Catalyst expression for the seeded Poisson decay draw.
   *
-  * Same semantics as `graft.core.PoissonUdfs.poissonDecay` (which mirrors
-  * the reference sampler `goforget/decay.go:12-34` + the `-1 => no decay`
-  * caller contract of `goforget/decay.go:50-54`), but participates in
-  * whole-stage codegen instead of going through the UDF bridge: no
-  * `InternalRow` boxing, no Scala-function invocation per row, and the
-  * surrounding `when(...)` clamp algebra stays inside the same generated
-  * loop. The generated code is a static call into [[Poisson]] — the same
+  * Mirrors the reference sampler `goforget/decay.go:12-34` + the
+  * `-1 => no decay` caller contract of `goforget/decay.go:50-54`, and
+  * participates in whole-stage codegen instead of going through a UDF
+  * bridge: no `InternalRow` boxing, no Scala-function invocation per
+  * row, and the surrounding `when(...)` clamp algebra stays inside the
+  * same generated loop. The generated code is a static call into [[Poisson]] — the same
   * pattern Spark's own math expressions use for non-trivial kernels.
   *
   * Deterministic by construction: the draw is a pure function of

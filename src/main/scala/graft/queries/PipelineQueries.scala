@@ -97,11 +97,12 @@ object PipelineQueries {
   final val PackEpochs = 3
   /** pipe_seqs*_loader_batches: ceiling on max-over-mean bucket mass
     * (integer percent) the loader read's range splits must stay under.
-    * LoaderProbe measures <= 117 at 30x; the gate is looser because it
+    * BASELINE.md's "Round-16 loader read addendum (mm + 30x)" measures
+    * <= 117 at 30x; the gate is looser because it
     * must also hold at tiny SF (multinomial fluctuation over 16 buckets
     * is proportionally larger there) — it exists to catch a STRUCTURAL
     * hot split (broken salt, truncated key), which blows past any
-    * constant, not to re-measure the probe's plateau.
+    * constant, not to re-measure the receipt's plateau.
     */
   final val LoaderBalancePct = 200L
   /** [[LoaderBalancePct]] for the CURATED read: the survivor set is
@@ -687,7 +688,8 @@ object PipelineQueries {
   /** A batch's per-doc piece lists under the frozen artifact. The
     * micro-batch CONTRACT is (doc_id, text) — a batch arrives carrying
     * its payload, so the render is row-local: zero corpus I/O on the
-    * maintenance path (TokenProbe's 100x receipt: the id-only
+    * maintenance path (BASELINE.md's "Round-17 artifact maintenance at
+    * 100x" receipt: the id-only
     * fallback's corpus scan was the whole fraction-law violation —
     * 14.4 s of a 25 s maintain at 500k docs, growing with the corpus).
     * An id-only batch (replayed takedown lists re-used as adds, older
@@ -765,9 +767,10 @@ object PipelineQueries {
       batchFn: (SparkSession, String, DataFrame) => DataFrame,
       repackFn: (SparkSession, String, Seq[Long], Option[DataFrame],
         Option[DataFrame]) => Unit): Unit = {
-    // stage-timing receipts for the scale probes (TokenProbe drives
-    // this at 1x..100x; attributing a fraction-law violation needs the
-    // per-stage split, not the lump sum). Off unless the env asks.
+    // stage-timing receipts for scale runs (BASELINE.md's "Round-17
+    // artifact maintenance at 100x" used it; attributing a fraction-law
+    // violation needs the per-stage split, not the lump sum). Off
+    // unless the env asks.
     val timing = sys.env.contains("SPARK_GRAFT_MAINTAIN_TIMING")
     def timed[T](stage: String)(f: => T): T =
       if (!timing) f else {
@@ -889,7 +892,8 @@ object PipelineQueries {
   /** The per-epoch order key for ONE (epoch, shard, seq_id) — the
     * generic derivation behind [[seqEpochOrder]], usable over ANY seq
     * inventory (a VLM loader applies it to the mm artifact's distinct
-    * (shard, seq_id) set; graft.LoaderProbe's mm mode drives that).
+    * (shard, seq_id) set; BASELINE.md's "Round-16 loader read addendum
+    * (mm + 30x)" measured that read).
     */
   private[graft] def epochOrderKey(epoch: org.apache.spark.sql.Column)
       : org.apache.spark.sql.Column =
@@ -1542,17 +1546,17 @@ object PipelineQueries {
     // splits are contiguous key intervals (key_lo/key_hi nest in the
     // bucket range by construction) and near-uniform in mass (salted
     // uniform keys -> no hot split). Throughput at 1x/10x is
-    // graft.LoaderProbe's receipt in BASELINE.md.
+    // BASELINE.md's "Round-16 loader read receipt".
     // The throughput contract's SKEW HALF is hash-gated here too, not
     // just probe-measured: balance_pct = max bucket mass over mean
     // bucket mass (integer percent, exact BIGINT arithmetic on both
     // engines), and balance_ok pins it under LoaderBalancePct. The
-    // LoaderProbe receipt measures <= 117 at 30x; the gate is looser
+    // 30x loader receipt measures <= 117; the gate is looser
     // because the bound must also hold at tiny SF where multinomial
     // fluctuation over 16 buckets is proportionally larger — it exists
     // to catch a STRUCTURAL hot split (a broken salt or key
     // truncation blows past any constant), not to re-measure the
-    // probe's plateau.
+    // receipt's plateau.
     "pipe_seqs_loader_batches" -> ((s, dir) => {
       val keys = seqEpochOrder(s, dir).filter(col("epoch") === 0L)
       val fills = seqTokens(s, dir).groupBy("shard", "seq_id")

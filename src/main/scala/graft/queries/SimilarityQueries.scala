@@ -110,7 +110,8 @@ object SimilarityQueries {
     * This is the drift shape that actually hurts a frozen quantizer:
     * the wave quantizes badly (gauge fires hard) AND piles into the
     * one stale cell nearest its region (hot-partition scans —
-    * graft.DriftProbe prices both). Returns (drift wave, offset). The
+    * BASELINE.md's "Round-14 quantizer-retrain lifecycle receipt"
+    * prices both). Returns (drift wave, offset). The
     * +2.0 shift is one IEEE add per component — bit-reproducible in
     * the oracle ([[driftVecsCtes]]).
     */
@@ -938,7 +939,8 @@ object SimilarityQueries {
     // corpus — retrain-from-index is bit-exact against it, hash-gating
     // build -> upsert -> trigger -> retrain -> swap -> probe end to
     // end. BASELINE.md records the recall degraded->recovered receipt
-    // and the measured retrain cost (graft.DriftProbe).
+    // and the measured retrain cost ("Round-14 quantizer-retrain
+    // lifecycle receipt").
     "sim_ann_ivf_retrain" -> ((s, dir) => {
       val idxDir = graft.sources.TempDirs.scratch("graft_ivfrt_")
       val all = vecs(s, dir)
@@ -965,7 +967,8 @@ object SimilarityQueries {
     // codes table back to the embedding store, since a PQ index holds
     // no floats) — and the response re-fits all PqM codebooks over the
     // live id set and bulk RE-ENCODES every live vector (the 100 TB
-    // line item graft.DriftProbe prices) before the swap. The stored
+    // line item BASELINE.md's "Round-14 quantizer-retrain lifecycle
+    // receipt" prices) before the swap. The stored
     // OPQ permutation would be preserved; this index has none. Oracle:
     // one-shot PQ ADC over the drifted union — hash-gating
     // train -> bulk -> append -> trigger -> retrain -> re-encode ->

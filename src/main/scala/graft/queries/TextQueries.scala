@@ -397,7 +397,8 @@ object TextQueries {
     * listing RPC), not a data aggregate: an earlier data fingerprint
     * (count + max id + char mass) re-scanned the whole text column on
     * EVERY artifact resolution, which a per-batch maintenance loop
-    * cannot afford at 100 TB (graft.TokenProbe measured the tax) — and
+    * cannot afford at 100 TB (BASELINE.md, "Round-15 token-artifact
+    * maintenance receipt", measured the tax) — and
     * any in-place regeneration rewrites the part files, so the
     * metadata signature catches exactly the same staleness.
     *
@@ -618,7 +619,8 @@ object TextQueries {
     * maintenance micro-batch path: a batch that arrives carrying its
     * own text is rendered ROW-LOCALLY under the frozen artifact, zero
     * corpus scan (at 100 TB a per-batch corpus scan would dominate the
-    * whole maintenance budget — TokenProbe measured the tax at 100x).
+    * whole maintenance budget — BASELINE.md's "Round-17 artifact
+    * maintenance at 100x" receipt measured the tax).
     */
   private[graft] def bpeDocPieceListOf(s: SparkSession, dir: String,
       docs: DataFrame): DataFrame = {
@@ -1063,7 +1065,8 @@ object TextQueries {
     // chain over the union corpus, so the gate is convergence:
     // maintained retrain == fresh train on the final corpus,
     // bit-exact. Dependent artifact re-encode cost is the priced
-    // 100 TB line item (graft.TokenProbe receipts).
+    // 100 TB line item (BASELINE.md, "Round-17 artifact maintenance at
+    // 100x").
     "text_bpe_retrain" -> ((s, dir) => {
       import s.implicits._
       val aDir = graft.sources.TempDirs.scratch("graft_bperetrain_") +

@@ -74,8 +74,9 @@ object BpeStore {
     * tokenizer is merges + alphabet, and freezing both is what keeps a
     * MAINTENANCE batch from paying a corpus-wide distinct-characters
     * scan per call just to rebuild the id table (the 100 TB ingest-loop
-    * tax graft.TokenProbe measured). Sorted on write; bounded (the
-    * character inventory of the corpus).
+    * tax measured under BASELINE.md's "Round-15 token-artifact
+    * maintenance receipt"). Sorted on write; bounded (the character
+    * inventory of the corpus).
     */
   def saveAlphabet(spark: SparkSession, dir: String,
       alphabet: Seq[String]): Unit = {
@@ -155,7 +156,8 @@ object BpeStore {
     * corpus scan); dependent artifacts (token/mm/curated exports
     * shipping `_tokenizer`) re-encode against the new version — the
     * priced 100 TB line item, same as a PQ codebook retrain's
-    * re-encode (graft.TokenProbe receipts).
+    * re-encode (BASELINE.md's "Round-17 artifact maintenance at 100x"
+    * receipt).
     *
     * GDPR note: this is also the takedown-complete answer for the
     * tokenizer — merges are TRAINED state, so after a retraction the

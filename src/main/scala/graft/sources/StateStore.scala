@@ -102,8 +102,9 @@ object StateStore {
     * write-back (goforget/redis_utils.go:156-191, which rewrites a
     * distribution's surviving bins and its `_Z`/`_T` after each
     * update). The snapshot batch must carry each touched dist's FULL
-    * surviving bin set (exactly what `ForgetStream.apply` emits per
-    * micro-batch), so bins pruned by decay disappear from the store.
+    * surviving bin set (exactly what `ForgetStream.requests` emits for a
+    * micro-batch of increments), so bins pruned by decay disappear from
+    * the store.
     *
     * Scale/correctness shape:
     *   - Only the hash buckets containing touched dists are read and

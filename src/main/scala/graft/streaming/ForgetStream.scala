@@ -5,9 +5,6 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 
 import graft.core.Poisson
 
-/** One `/incr` request: distribution, bin, weight, event-time seconds. */
-final case class IncrEvent(dist: String, bin: String, n: Long, tsSec: Long)
-
 /** Per-distribution streaming state — the live analog of the reference's
   * three Redis keys (counts sorted-set, `._Z`, `._T`;
   * goforget/redis_utils.go:222-233).
@@ -63,10 +60,12 @@ object ForgetStream {
   final case class Params(rate: Double, prune: Boolean = true, sigma: Double = 2.0)
 
   /** Pure state transition: merge a batch of increments, then decay.
-    * `nowSec` is the processing time injected by the caller (tests pass a
-    * fixed clock; production passes the micro-batch time).
+    * `incrs` are `"incr"` requests (`op`/`k` are ignored); a new
+    * distribution's `T` is the first one's `tsSec`. `nowSec` is the
+    * processing time injected by the caller (tests pass a fixed clock;
+    * production passes the micro-batch time).
     */
-  def transition(dist: String, incrs: Seq[IncrEvent], prev: Option[DistState],
+  def transition(dist: String, incrs: Seq[FtRequest], prev: Option[DistState],
                  nowSec: Long, p: Params): DistState = {
     val base = prev.getOrElse(DistState(Map.empty, 0L, incrs.headOption.map(_.tsSec).getOrElse(nowSec)))
     // ZINCRBY + INCRBY: counts and Z grow by the batch's increments
@@ -77,16 +76,23 @@ object ForgetStream {
     // lazy decay at read-repair time (UpdateDistribution: Fill -> Decay ->
     // Normalize; goforget/redis_utils.go:146-152)
     val dt = math.max(0L, nowSec - base.t)
-    val decayed = merged.map { case (bin, count) =>
-      val seed = scala.util.hashing.MurmurHash3.stringHash(s"$dist:$bin").toLong ^ (nowSec << 20)
-      val raw = Poisson.decayAmount(count, p.rate, dt, seed)
-      val l =
-        if (raw >= count) { if (p.prune) count else count - 1 }
-        else raw
-      bin -> (count - l)
-    }
+    val decayed = merged.map { case (bin, count) => bin -> decayBin(dist, bin, count, dt, nowSec, p) }
     val pruned = if (p.prune) decayed.filter(_._2 > 0L) else decayed
     DistState(pruned, pruned.values.sum, nowSec)
+  }
+
+  /** One bin's count after `dt` seconds of seeded Poisson decay, with the
+    * goforget clamp: a draw that would take the bin to or below zero
+    * removes it (prune) or leaves 1.
+    */
+  private def decayBin(dist: String, bin: String, count: Long, dt: Long, nowSec: Long,
+                       p: Params): Long = {
+    val seed = scala.util.hashing.MurmurHash3.stringHash(s"$dist:$bin").toLong ^ (nowSec << 20)
+    val raw = Poisson.decayAmount(count, p.rate, dt, seed)
+    val l =
+      if (raw >= count) { if (p.prune) count else count - 1 }
+      else raw
+    count - l
   }
 
   /** Partial read-repair: decay ONLY the `k` most-probable bins and
@@ -113,14 +119,7 @@ object ForgetStream {
     val dt = math.max(0L, nowSec - s.t)
     val head = s.counts.toSeq.sortBy { case (b, c) => (-c, b) }(
       Ordering.Tuple2(Ordering.Long, Ordering.String.reverse)).take(k)
-    val decayedHead = head.map { case (bin, count) =>
-      val seed = scala.util.hashing.MurmurHash3.stringHash(s"$dist:$bin").toLong ^ (nowSec << 20)
-      val raw = Poisson.decayAmount(count, p.rate, dt, seed)
-      val l =
-        if (raw >= count) { if (p.prune) count else count - 1 }
-        else raw
-      bin -> (count - l)
-    }
+    val decayedHead = head.map { case (bin, count) => bin -> decayBin(dist, bin, count, dt, nowSec, p) }
     val merged = s.counts ++ decayedHead
     val pruned = if (p.prune) merged.filter(_._2 > 0L) else merged
     (DistState(pruned, pruned.values.sum, nowSec), decayedHead)
@@ -139,8 +138,8 @@ object ForgetStream {
     * one-request-at-a-time serialization (goforget/redis_utils.go:
     * 124-137). Returns the next state (None = the distribution emptied /
     * never existed) and the rows each op emitted: incr runs emit the
-    * whole post-decay distribution (as [[updateFn]] does), reads emit
-    * exactly the bins they fetched.
+    * whole post-decay distribution, reads emit exactly the bins they
+    * fetched.
     */
   def transitionRequests(dist: String, reqs: Seq[FtRequest], prev: Option[DistState],
                          nowSec: Long, p: Params): (Option[DistState], Vector[BinSnapshot]) = {
@@ -148,8 +147,7 @@ object ForgetStream {
     var state: Option[DistState] = prev
     var run = Vector.empty[FtRequest]
     def flushIncrs(): Unit = if (run.nonEmpty) {
-      val s = transition(dist, run.map(r => IncrEvent(r.dist, r.bin, r.n, r.tsSec)),
-        state, nowSec, p)
+      val s = transition(dist, run, state, nowSec, p)
       out ++= s.counts.map { case (b, c) => BinSnapshot(dist, b, c, s.z, s.t) }
       state = Some(s)
       run = Vector.empty
@@ -186,29 +184,6 @@ object ForgetStream {
     ((p.sigma + eta) * eta).toLong
   }
 
-  def updateFn(p: Params, clock: () => Long, withExpiry: Boolean = true)(
-      dist: String, events: Iterator[IncrEvent],
-      state: GroupState[DistState]): Iterator[BinSnapshot] = {
-    if (state.hasTimedOut) {
-      // Redis EXPIRE fired: the distribution self-destructs.
-      state.remove()
-      Iterator.empty
-    } else {
-      val now = clock()
-      val next = transition(dist, events.toSeq, state.getOption, now, p)
-      if (next.z == 0L && p.prune) {
-        // empty after decay: DISCARD branch (goforget/redis_utils.go:158-161)
-        state.remove()
-        Iterator.empty
-      } else {
-        state.update(next)
-        if (withExpiry)
-          state.setTimeoutDuration(math.max(1L, expirySec(next, p)) * 1000L)
-        next.counts.iterator.map { case (bin, c) => BinSnapshot(dist, bin, c, next.z, next.t) }
-      }
-    }
-  }
-
   def requestsFn(p: Params, clock: () => Long, withExpiry: Boolean = true)(
       dist: String, reqs: Iterator[FtRequest],
       state: GroupState[DistState]): Iterator[BinSnapshot] = {
@@ -232,21 +207,7 @@ object ForgetStream {
   /** Wire a stream of mixed read/write requests into the stateful
     * forget-table — the full reference HTTP surface as a stream,
     * including the top-K partial write-back drift (see [[topKDecay]]).
-    * [[apply]] remains the increments-only fast path.
-    */
-  def requests(events: Dataset[FtRequest], p: Params,
-               clock: () => Long = () => System.currentTimeMillis() / 1000L,
-               withExpiry: Boolean = true): Dataset[BinSnapshot] = {
-    implicit val stateEnc = Encoders.product[DistState]
-    implicit val outEnc = Encoders.product[BinSnapshot]
-    val timeout =
-      if (withExpiry) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
-    events.groupByKey(_.dist)(Encoders.STRING)
-      .flatMapGroupsWithState(OutputMode.Update, timeout)(requestsFn(p, clock, withExpiry))
-  }
-
-  /** Wire a stream of increments into the stateful forget-table.
+    * An all-`"incr"` stream is the plain increments path.
     *
     * @param withExpiry true (production) arms ProcessingTimeTimeout so
     *        idle distributions self-destruct like Redis EXPIRE. Note the
@@ -258,10 +219,10 @@ object ForgetStream {
     *        from the store, not from zero. Only consulted on the FIRST
     *        run of a checkpoint; afterwards the checkpointed state wins.
     */
-  def apply(events: Dataset[IncrEvent], p: Params,
-            clock: () => Long = () => System.currentTimeMillis() / 1000L,
-            withExpiry: Boolean = true,
-            initial: Option[Dataset[(String, DistState)]] = None): Dataset[BinSnapshot] = {
+  def requests(events: Dataset[FtRequest], p: Params,
+               clock: () => Long = () => System.currentTimeMillis() / 1000L,
+               withExpiry: Boolean = true,
+               initial: Option[Dataset[(String, DistState)]] = None): Dataset[BinSnapshot] = {
     implicit val stateEnc = Encoders.product[DistState]
     implicit val outEnc = Encoders.product[BinSnapshot]
     val timeout =
@@ -273,15 +234,15 @@ object ForgetStream {
         val initKV = init.groupByKey(_._1)(Encoders.STRING)
           .mapValues(_._2)(stateEnc)
         grouped.flatMapGroupsWithState(OutputMode.Update, timeout, initKV)(
-          updateFn(p, clock, withExpiry))
+          requestsFn(p, clock, withExpiry))
       case None =>
         grouped.flatMapGroupsWithState(OutputMode.Update, timeout)(
-          updateFn(p, clock, withExpiry))
+          requestsFn(p, clock, withExpiry))
     }
   }
 
   /** Per-dist [[DistState]] rows from a batch forget-table — feed a
-    * [[graft.sources.StateStore]]-loaded table to [[apply]]'s `initial`
+    * [[graft.sources.StateStore]]-loaded table to [[requests]]' `initial`
     * for a warm restart. The collect happens inside Spark's
     * initial-state machinery (distributed, co-partitioned with the
     * stream's groupBy), not on the driver.

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructType}
 
-/** Adapter from a Kafka-source-shaped stream to forget-table events.
+/** Adapter from a Kafka-source-shaped stream to forget-table requests.
   *
   * `spark.readStream.format("kafka")` always yields the same 7-column
   * wire schema — `key`/`value` (binary), `topic`, `partition`, `offset`,
@@ -17,7 +17,8 @@ import org.apache.spark.sql.types.{LongType, StringType, StructType}
   *
   * Payload contract: `value` is a UTF-8 JSON envelope
   * `{"dist": "...", "bin": "...", "n": 1}` (n optional, default 1 — the
-  * reference's default increment, forget.go:36-44); the Kafka
+  * reference's default increment, forget.go:36-44; see
+  * [[requestSchema]] for the optional read fields); the Kafka
   * `timestamp` supplies event time. Producers key messages by `dist` so
   * a distribution's events ride one partition in order — the bus-level
   * analog of the reference's serialized per-distribution update worker
@@ -26,39 +27,24 @@ import org.apache.spark.sql.types.{LongType, StringType, StructType}
   */
 object KafkaShape {
 
-  /** JSON envelope carried in the Kafka `value`. */
-  val envelopeSchema: StructType = new StructType()
-    .add("dist", StringType).add("bin", StringType).add("n", LongType)
-
-  /** Parse a Kafka-shaped frame into increment events for [[ForgetStream.apply]]. */
-  def incrEvents(kafka: DataFrame): Dataset[IncrEvent] =
-    kafka
-      .select(
-        from_json(col("value").cast("string"), envelopeSchema).as("v"),
-        col("timestamp").cast("long").as("tsSec"))
-      .where(col("v.dist").isNotNull && col("v.bin").isNotNull)
-      .select(
-        col("v.dist").as("dist"), col("v.bin").as("bin"),
-        coalesce(col("v.n"), lit(1L)).as("n"), col("tsSec"))
-      .as[IncrEvent](Encoders.product[IncrEvent])
-
-  /** Parse a Kafka-shaped frame into mixed read/write requests for
-    * [[ForgetStream.requests]] — envelope gains optional `op` ("incr" |
-    * "topk" | "dist", default "incr") and `k` (top-K size, default 10,
-    * the reference's default N; forget.go:194-204).
+  /** JSON envelope carried in the Kafka `value`: `dist`, `bin`, `n`,
+    * plus optional `op` ("incr" | "topk" | "dist", default "incr") and
+    * `k` (top-K size, default 10, the reference's default N;
+    * forget.go:194-204).
     */
   val requestSchema: StructType = new StructType()
     .add("dist", StringType).add("bin", StringType).add("n", LongType)
     .add("op", StringType).add("k", LongType)
 
+  /** Parse a Kafka-shaped frame into requests for [[ForgetStream.requests]]. */
   def requestEvents(kafka: DataFrame): Dataset[FtRequest] =
     kafka
       .select(
         from_json(col("value").cast("string"), requestSchema).as("v"),
         col("timestamp").cast("long").as("tsSec"))
       // An incr envelope with no bin is malformed — the reference 500s it
-      // (forget.go:36-44); dropping it here matches incrEvents, instead
-      // of silently incrementing a spurious "" bin. Reads carry no bin.
+      // (forget.go:36-44); dropping it here beats silently incrementing
+      // a spurious "" bin. Reads carry no bin.
       .where(col("v.dist").isNotNull &&
         (coalesce(col("v.op"), lit("incr")) =!= "incr" || col("v.bin").isNotNull))
       .select(

@@ -5,7 +5,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.streaming.{BinSnapshot, DistState, ForgetStream, FtRequest, IncrEvent}
+import graft.streaming.{BinSnapshot, DistState, ForgetStream, FtRequest}
 
 /** Streaming forget-table: pure transition semantics + an end-to-end
   * micro-batch run through MemoryStream, checked against the same
@@ -20,9 +20,9 @@ class ForgetStreamSpec extends AnyFunSuite {
 
   test("transition merges increments like ZINCRBY/INCRBY (no elapsed time => no decay)") {
     val incrs = Seq(
-      IncrEvent("colors", "red", 3L, T0),
-      IncrEvent("colors", "blue", 1L, T0),
-      IncrEvent("colors", "red", 2L, T0))
+      FtRequest.incr("colors", "red", 3L, T0),
+      FtRequest.incr("colors", "blue", 1L, T0),
+      FtRequest.incr("colors", "red", 2L, T0))
     val s = ForgetStream.transition("colors", incrs, None, T0, params)
     assert(s.counts == Map("red" -> 5L, "blue" -> 1L))
     assert(s.z == 6L)
@@ -110,6 +110,37 @@ class ForgetStreamSpec extends AnyFunSuite {
     assert(next.get.z == 100L)
   }
 
+  test("property: an incr-only batch in any arrival order folds as one event-time-ordered transition") {
+    import org.scalacheck.{Gen, Prop, Test, rng}
+    val p = ForgetStream.Params(rate = 0.01)
+    val now = T0 + 1000L
+    val reqGen = for {
+      bin <- Gen.oneOf("a", "b", "c", "d")
+      n <- Gen.choose(1L, 200L)
+      ts <- Gen.choose(T0, now)
+    } yield FtRequest.incr("colors", bin, n, ts)
+    val caseGen = for {
+      reqs <- Gen.nonEmptyListOf(reqGen)
+      // random sort keys shuffle the arrival order away from event time
+      keys <- Gen.listOfN(reqs.size, Gen.choose(0, Int.MaxValue))
+      prev <- Gen.option(Gen.const(DistState(Map("a" -> 50L, "e" -> 7L), 57L, T0 - 50L)))
+    } yield (reqs.zip(keys).sortBy(_._2).map(_._1), prev)
+    val prop = Prop.forAllNoShrink(caseGen) { case (arrived, prev) =>
+      val expected = ForgetStream.transition("colors", arrived.sortBy(_.tsSec), prev, now, p)
+      val (next, rows) = ForgetStream.transitionRequests("colors", arrived, prev, now, p)
+      // a new distribution's decay window opens at the EARLIEST event,
+      // whichever one arrived first
+      val opened = prev.getOrElse(DistState(Map.empty, 0L, arrived.map(_.tsSec).min))
+      next == Some(expected).filterNot(s => s.z == 0L && p.prune) &&
+        rows.map(r => (r.bin, r.count, r.z, r.t)).sorted ==
+          expected.counts.toSeq.map { case (b, c) => (b, c, expected.z, expected.t) }.sorted &&
+        ForgetStream.transition("colors", arrived, Some(opened), now, p) == expected
+    }
+    val res = Test.check(Test.Parameters.default
+      .withMinSuccessfulTests(300).withInitialSeed(rng.Seed(20261018L)), prop)
+    assert(res.passed, res)
+  }
+
   test("end-to-end mixed-request run (incr -> topk -> dist) equals pure replay") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
@@ -156,15 +187,15 @@ class ForgetStreamSpec extends AnyFunSuite {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val fixedNow = T0 + 10L
-    val mem = MemoryStream[IncrEvent]
-    val out = ForgetStream(mem.toDS(), params, clock = () => fixedNow, withExpiry = false)
+    val mem = MemoryStream[FtRequest]
+    val out = ForgetStream.requests(mem.toDS(), params, clock = () => fixedNow, withExpiry = false)
     val q = out.writeStream.outputMode(OutputMode.Update())
       .format("memory").queryName("ft_stream").start()
     try {
       val batch = Seq(
-        IncrEvent("colors", "red", 30L, T0),
-        IncrEvent("colors", "blue", 10L, T0),
-        IncrEvent("pets", "cat", 7L, T0))
+        FtRequest.incr("colors", "red", 30L, T0),
+        FtRequest.incr("colors", "blue", 10L, T0),
+        FtRequest.incr("pets", "cat", 7L, T0))
       mem.addData(batch: _*)
       q.processAllAvailable()
       val got = spark.table("ft_stream").as[BinSnapshot].collect()
@@ -186,14 +217,14 @@ class ForgetStreamSpec extends AnyFunSuite {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val fixedNow = T0
-    val mem = MemoryStream[IncrEvent]
-    val out = ForgetStream(mem.toDS(), params, clock = () => fixedNow, withExpiry = false)
+    val mem = MemoryStream[FtRequest]
+    val out = ForgetStream.requests(mem.toDS(), params, clock = () => fixedNow, withExpiry = false)
     val q = out.writeStream.outputMode(OutputMode.Update())
       .format("memory").queryName("ft_stream2").start()
     try {
-      mem.addData(IncrEvent("d", "x", 5L, T0))
+      mem.addData(FtRequest.incr("d", "x", 5L, T0))
       q.processAllAvailable()
-      mem.addData(IncrEvent("d", "x", 2L, T0), IncrEvent("d", "y", 1L, T0))
+      mem.addData(FtRequest.incr("d", "x", 2L, T0), FtRequest.incr("d", "y", 1L, T0))
       q.processAllAvailable()
       val rows = spark.sql("select * from ft_stream2").as[BinSnapshot].collect()
       // last update for (d,x) reflects both batches: 5 + 2 (no decay, dt=0)

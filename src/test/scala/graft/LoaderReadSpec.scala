@@ -13,8 +13,8 @@ import graft.queries.PipelineQueries
   * and assert the property the plan pins cannot see: the concatenation
   * of splits IS the total key order (each split internally ordered,
   * split key ranges pairwise disjoint and ascending), for both the
-  * epoch-shuffle and the curriculum orderings. graft.LoaderProbe
-  * carries the 1x/10x throughput receipt for BASELINE.md.
+  * epoch-shuffle and the curriculum orderings. The 1x/10x throughput
+  * receipt is BASELINE.md's "Round-16 loader read receipt".
   */
 class LoaderReadSpec extends AnyFunSuite {
 

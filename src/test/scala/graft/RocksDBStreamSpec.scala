@@ -7,7 +7,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.streaming.{BinSnapshot, ForgetStream, IncrEvent}
+import graft.streaming.{BinSnapshot, ForgetStream, FtRequest}
 
 /** The 100 TB state-store wiring, proven in-sandbox: ForgetStream's
   * `flatMapGroupsWithState` state on `RocksDBStateStoreProvider`
@@ -39,15 +39,15 @@ class RocksDBStreamSpec extends AnyFunSuite {
     graft.sources.GraftSession.enableRocksDBStateStore(spark)
     try {
       val fixedNow = T0 + 10L
-      val mem = MemoryStream[IncrEvent]
-      val out = ForgetStream(mem.toDS(), params, clock = () => fixedNow, withExpiry = false)
+      val mem = MemoryStream[FtRequest]
+      val out = ForgetStream.requests(mem.toDS(), params, clock = () => fixedNow, withExpiry = false)
       val q = out.writeStream.outputMode(OutputMode.Update())
         .format("memory").queryName("ft_rocksdb").start()
       try {
         val batch = Seq(
-          IncrEvent("colors", "red", 30L, T0),
-          IncrEvent("colors", "blue", 10L, T0),
-          IncrEvent("pets", "cat", 7L, T0))
+          FtRequest.incr("colors", "red", 30L, T0),
+          FtRequest.incr("colors", "blue", 10L, T0),
+          FtRequest.incr("pets", "cat", 7L, T0))
         mem.addData(batch: _*)
         q.processAllAvailable()
 
@@ -62,7 +62,7 @@ class RocksDBStreamSpec extends AnyFunSuite {
         assert(got.nonEmpty)
 
         // (2) second micro-batch continues from RocksDB-checkpointed state
-        mem.addData(IncrEvent("pets", "cat", 5L, T0 + 10L))
+        mem.addData(FtRequest.incr("pets", "cat", 5L, T0 + 10L))
         q.processAllAvailable()
         val catRows = spark.table("ft_rocksdb").as[BinSnapshot].collect()
           .filter(r => r.dist == "pets" && r.bin == "cat")

@@ -105,7 +105,7 @@ class StateStoreSpec extends AnyFunSuite {
   test("warm restart: stream resumes from store-loaded initial state") {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import graft.streaming.{BinSnapshot, ForgetStream, IncrEvent}
+    import graft.streaming.{BinSnapshot, ForgetStream, FtRequest}
     implicit val sqlCtx = spark.sqlContext
     val dir = tmpDir
     val T0 = 1706659200L
@@ -115,15 +115,15 @@ class StateStoreSpec extends AnyFunSuite {
     val clickBefore = ft.counts.filter(col("dist") === "click")
       .collect().map(r => r.getString(1) -> r.getLong(2)).toMap
 
-    val mem = MemoryStream[IncrEvent]
-    val out = ForgetStream(mem.toDS(), ForgetStream.Params(rate = 0.0),
+    val mem = MemoryStream[FtRequest]
+    val out = ForgetStream.requests(mem.toDS(), ForgetStream.Params(rate = 0.0),
       clock = () => T0, withExpiry = false,
       initial = Some(ForgetStream.initialStateFrom(restored.counts, restored.meta)))
     val q = out.writeStream.outputMode(
         org.apache.spark.sql.streaming.OutputMode.Update())
       .format("memory").queryName("warm_restart").start()
     try {
-      mem.addData(IncrEvent("click", "1", 5L, T0))
+      mem.addData(FtRequest.incr("click", "1", 5L, T0))
       q.processAllAvailable()
       val got = spark.table("warm_restart").as[BinSnapshot].collect()
         .map(r => r.bin -> r.count).toMap
@@ -137,7 +137,7 @@ class StateStoreSpec extends AnyFunSuite {
   test("streaming write-back: micro-batches replace whole distributions in the store") {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import graft.streaming.{ForgetStream, IncrEvent}
+    import graft.streaming.{ForgetStream, FtRequest}
     implicit val sqlCtx = spark.sqlContext
     val dir = tmpDir
     val T0 = 1706659200L
@@ -145,8 +145,8 @@ class StateStoreSpec extends AnyFunSuite {
     val beforeView = StateStore.load(spark, dir).counts
       .filter(col("dist") === "view").orderBy("bin").collect()
 
-    val mem = MemoryStream[IncrEvent]
-    val out = ForgetStream(mem.toDS(), ForgetStream.Params(rate = 0.0),
+    val mem = MemoryStream[FtRequest]
+    val out = ForgetStream.requests(mem.toDS(), ForgetStream.Params(rate = 0.0),
       clock = () => T0, withExpiry = false)
     val q = StateStore.streamInto(out, dir,
       Files.createTempDirectory("graft_wb_ckpt_").toString, nBuckets = 8)
@@ -154,7 +154,7 @@ class StateStoreSpec extends AnyFunSuite {
       // batch 1: the stream takes ownership of "click" (replacing the
       // batch-written rows — the stream's state IS the dist now) and
       // creates a brand-new distribution
-      mem.addData(IncrEvent("click", "1", 5L, T0), IncrEvent("newdist", "x", 3L, T0))
+      mem.addData(FtRequest.incr("click", "1", 5L, T0), FtRequest.incr("newdist", "x", 3L, T0))
       q.processAllAvailable()
       val after1 = StateStore.load(spark, dir)
       assert(after1.counts.filter(col("dist") === "click")
@@ -172,7 +172,7 @@ class StateStoreSpec extends AnyFunSuite {
 
       // batch 2: stream state carries bin 1 forward; store shows the FULL
       // surviving set after the second micro-batch
-      mem.addData(IncrEvent("click", "2", 1L, T0))
+      mem.addData(FtRequest.incr("click", "2", 1L, T0))
       q.processAllAvailable()
       val after2 = StateStore.load(spark, dir)
       assert(after2.counts.filter(col("dist") === "click")

@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.ForgetTable
 import graft.sources.Tables
-import graft.streaming.{BinSnapshot, ForgetStream, FtRequest, KafkaShape, IncrEvent}
+import graft.streaming.{BinSnapshot, ForgetStream, FtRequest, KafkaShape}
 
 /** End-to-end streaming ingestion from a real file source: the events
   * parquet replayed through `readStream` -> ForgetStream must land on
@@ -50,11 +50,13 @@ class StreamSourceSpec extends AnyFunSuite {
         col("event_type").as("dist"),
         col("user_id").cast("string").as("bin"),
         lit(1L).as("n"),
-        tsSec.as("tsSec"))
-      .as[IncrEvent]
+        tsSec.as("tsSec"),
+        lit("incr").as("op"),
+        lit(0).as("k"))
+      .as[FtRequest]
 
     val fixedNow = 1706659200L
-    val out = ForgetStream(events, ForgetStream.Params(rate = 0.0),
+    val out = ForgetStream.requests(events, ForgetStream.Params(rate = 0.0),
       clock = () => fixedNow, withExpiry = false)
     val q = out.writeStream.outputMode(OutputMode.Update())
       .format("memory").queryName("stream_ingest").start()
@@ -92,8 +94,8 @@ class StreamSourceSpec extends AnyFunSuite {
         col("timestamp"),
         lit(0).cast("int").as("timestampType"))
 
-    val events = KafkaShape.incrEvents(kafkaShaped)
-    val out = ForgetStream(events, ForgetStream.Params(rate = 0.0),
+    val events = KafkaShape.requestEvents(kafkaShaped)
+    val out = ForgetStream.requests(events, ForgetStream.Params(rate = 0.0),
       clock = () => 1706659200L, withExpiry = false)
     // rate-micro-batch never runs dry (each trigger mints the next batch),
     // so bound the run with a fixed trigger count instead of
