@@ -15,6 +15,12 @@ import org.apache.spark.sql.SparkSession
   *   - `spark.sql.shuffle.partitions` sized to the worker count (local
   *     mode; a real cluster tunes this to executors × cores).
   *   - UTC session timezone: every oracle comparison assumes it.
+  *   - `spark.sql.sources.parallelPartitionDiscovery.threshold` above
+  *     [[StateStore.DefaultBuckets]]: at Spark's default of 32 a scan
+  *     over more directories lists them with a Spark job (one task per
+  *     directory), so every full-store read paid a 256-task listing job
+  *     before its own action. In local mode the driver lists those
+  *     local directories in milliseconds.
   */
 object GraftSession {
 
@@ -28,6 +34,7 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
 
   /** The standard local session used by mains and specs. */
   def local(master: String = "local[4]", shufflePartitions: Int = 4): SparkSession =

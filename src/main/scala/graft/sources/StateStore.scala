@@ -1,8 +1,11 @@
 package graft.sources
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Literal, XxHash64}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
+import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
 
 import graft.core.ForgetTable
 import graft.streaming.BinSnapshot
@@ -15,10 +18,16 @@ import graft.streaming.BinSnapshot
   * directly: at "millions of distributions" (reference README.md:5) a
   * partition directory per dist would melt the file listing and produce
   * millions of tiny files, while a fixed bucket count gives bounded file
-  * counts AND still prunes single-dist reads to one bucket (the filter
-  * `dist_bucket = pmod(xxhash64(lit(name)), n)` is a literal after
-  * folding, so Catalyst partition-prunes the scan — verified in
-  * StateStoreSpec). `meta` is tiny (one row per dist) and written flat.
+  * counts AND still confines single-dist reads to one bucket: the
+  * driver computes the dist's bucket ([[bucketOf]], the same
+  * `pmod(xxhash64(name), n)` the writer evaluates) and opens only that
+  * `dist_bucket=<b>` directory. `meta` is tiny (one row per dist) and
+  * written flat.
+  *
+  * Reads never run a Spark job of their own: they carry the stored
+  * schemas instead of inferring them from parquet footers, and list
+  * only the directories they name (a full [[load]] lists its 256
+  * bucket directories on the driver, see [[GraftSession]]).
   *
   * This is the batch analog of the reference's per-dist Redis keys: all
   * rows of one distribution land in one bucket, so dist-local operators
@@ -30,6 +39,14 @@ object StateStore {
 
   def bucketCol(dist: org.apache.spark.sql.Column, nBuckets: Int) =
     pmod(xxhash64(dist), lit(nBuckets.toLong))
+
+  /** [[bucketCol]] evaluated on the driver for one name: the bucket
+    * whose directory holds every row of `name`.
+    */
+  def bucketOf(name: String, nBuckets: Int): Long = {
+    val h = XxHash64(Seq(Literal(name)), 42L).eval().asInstanceOf[Long]
+    Math.floorMod(h, nBuckets.toLong)
+  }
 
   /** Write state tables under `dir` (overwrites). Clustered by the
     * partition key before the write — without the repartition every
@@ -47,53 +64,71 @@ object StateStore {
     ft.meta.write.mode(SaveMode.Overwrite).parquet(s"$dir/meta")
   }
 
-  /** The stored schemas, for reading a store whose last write was
-    * EMPTY: a partitioned parquet write of zero rows leaves no part
-    * directories (and a flat one no files), so schema inference has
-    * nothing to read — which is exactly the state a TTL [[compact]]
-    * that expired every distribution leaves behind. An empty store is
-    * a legal store; reads type it explicitly instead of throwing.
+  /** The stored schemas. Every read carries them, so no read runs a
+    * footer-inference job, and a store whose last write was EMPTY still
+    * types: a partitioned parquet write of zero rows leaves no part
+    * directories (and a flat one no files) — exactly the state a TTL
+    * [[compact]] that expired every distribution leaves behind. An
+    * empty store is a legal store; reads type it instead of throwing.
     */
-  private val countsSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("dist", org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("bin", org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("count", org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("dist_bucket", org.apache.spark.sql.types.LongType)))
-  private val metaSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("dist", org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("z", org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("t", org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("rate", org.apache.spark.sql.types.DoubleType)))
+  private val countsSchema = StructType(Seq(
+    StructField("dist", StringType),
+    StructField("bin", StringType),
+    StructField("count", LongType),
+    StructField("dist_bucket", LongType)))
+  private val metaSchema = StructType(Seq(
+    StructField("dist", StringType),
+    StructField("z", LongType),
+    StructField("t", LongType),
+    StructField("rate", DoubleType)))
 
-  private def readOrEmpty(spark: SparkSession, path: String,
-      schema: org.apache.spark.sql.types.StructType): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hasData = fs.exists(p) && fs.listStatus(p).exists(st =>
-      st.isDirectory || st.getPath.getName.endsWith(".parquet"))
-    if (hasData) spark.read.parquet(path)
+  /** Read the `paths` that hold data, with partition values parsed
+    * relative to `basePath`; typed-empty when none does.
+    */
+  private def readOrEmpty(spark: SparkSession, paths: Seq[String], basePath: String,
+      schema: StructType): DataFrame = {
+    val fs = new Path(basePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val present = paths.filter { path =>
+      val p = new Path(path)
+      fs.exists(p) && fs.listStatus(p).exists(st =>
+        st.isDirectory || st.getPath.getName.endsWith(".parquet"))
+    }
+    if (present.nonEmpty)
+      spark.read.schema(schema).option("basePath", basePath).parquet(present: _*)
     else spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
   }
 
+  private def readMeta(spark: SparkSession, dir: String): DataFrame =
+    readOrEmpty(spark, Seq(s"$dir/meta"), s"$dir/meta", metaSchema)
+
+  /** The stored counts of the given buckets only: each bucket is one
+    * `dist_bucket=<b>` directory, and no other directory is listed.
+    */
+  private def readBuckets(spark: SparkSession, dir: String,
+      buckets: Seq[Long]): DataFrame =
+    readOrEmpty(spark, buckets.map(b => s"$dir/counts/dist_bucket=$b"),
+      s"$dir/counts", countsSchema)
+
   /** Load the full state (typed-empty when the store holds no rows). */
   def load(spark: SparkSession, dir: String): ForgetTable =
     new ForgetTable(
-      readOrEmpty(spark, s"$dir/counts", countsSchema).drop("dist_bucket"),
-      readOrEmpty(spark, s"$dir/meta", metaSchema))
+      readOrEmpty(spark, Seq(s"$dir/counts"), s"$dir/counts", countsSchema)
+        .drop("dist_bucket"),
+      readMeta(spark, dir))
 
-  /** Load a single distribution: the bucket filter is a literal, so the
-    * scan reads exactly one partition directory; the residual
-    * `dist = name` predicate is pushed into that bucket's row groups.
+  /** Load a single distribution: the scan opens only the dist's bucket
+    * directory (absent → typed-empty), keeps the literal bucket filter
+    * as its partition filter, and pushes the residual `dist = name`
+    * predicate into that bucket's row groups.
     */
   def loadDist(spark: SparkSession, dir: String, name: String,
                nBuckets: Int = DefaultBuckets): ForgetTable = {
-    val counts = readOrEmpty(spark, s"$dir/counts", countsSchema)
-      .filter(col("dist_bucket") === bucketCol(lit(name), nBuckets) &&
-        col("dist") === name)
+    val b = bucketOf(name, nBuckets)
+    val counts = readBuckets(spark, dir, Seq(b))
+      .filter(col("dist_bucket") === b && col("dist") === name)
       .drop("dist_bucket")
-    val meta = readOrEmpty(spark, s"$dir/meta", metaSchema)
-      .filter(col("dist") === name)
+    val meta = readMeta(spark, dir).filter(col("dist") === name)
     new ForgetTable(counts, meta)
   }
 
@@ -109,7 +144,8 @@ object StateStore {
     * Scale/correctness shape:
     *   - Only the hash buckets containing touched dists are read and
     *     rewritten (dynamic partition overwrite; untouched buckets'
-    *     files are never opened). Per-batch write amplification =
+    *     directories are never listed, their files never opened or
+    *     rewritten). Per-batch write amplification =
     *     touched buckets' row count, bounded by the bucket fan-out —
     *     the parquet-native upsert; a table format with row-level MERGE
     *     slots in here unchanged.
@@ -126,12 +162,10 @@ object StateStore {
     val touched = snaps.select("dist").distinct()
       .withColumn("dist_bucket", bucketCol(col("dist"), nBuckets))
       .localCheckpoint(true)
-    if (touched.isEmpty) return
     val buckets = touched.select("dist_bucket").distinct()
       .collect().map(_.getLong(0)) // bounded by nBuckets, driver-safe
-    val existing = readOrEmpty(spark, s"$dir/counts", countsSchema)
-      .filter(col("dist_bucket").isin(buckets.map(Long.box): _*))
-    val kept = existing
+    if (buckets.isEmpty) return
+    val kept = readBuckets(spark, dir, buckets.toSeq)
       .join(touched.select("dist"), Seq("dist"), "left_anti")
       .select("dist", "bin", "count", "dist_bucket")
       .localCheckpoint(true)
@@ -147,7 +181,7 @@ object StateStore {
     // stored row (new dists get the reference default, forget.go:22)
     val newMeta = snaps.groupBy("dist")
       .agg(max("z").as("z"), max("t").as("t"))
-    val oldMeta = readOrEmpty(spark, s"$dir/meta", metaSchema)
+    val oldMeta = readMeta(spark, dir)
     val mergedMeta = oldMeta.join(newMeta.select("dist"), Seq("dist"), "left_anti")
       .unionByName(
         newMeta.join(oldMeta.select(col("dist"), col("rate").as("old_rate")),

@@ -1,9 +1,15 @@
 package graft
 
 import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.sql.SparkSession
+import org.apache.hadoop.fs.Path
+import org.apache.spark.graft.Bus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.{ForgetParams, ForgetTable}
@@ -21,6 +27,67 @@ class StateStoreSpec extends AnyFunSuite {
   private def fixture: ForgetTable =
     ForgetTable.fromEvents(Tables.events(spark, "/root/testdata/sf0.001"))
 
+  /** The Spark jobs `body` launches (listener bus drained both sides). */
+  private def jobsIn[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    Bus.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      Bus.drain(sc)
+      (out, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** The root paths of the plan's file scans, as local paths. */
+  private def scanRoots(df: DataFrame): Seq[String] =
+    df.queryExecution.sparkPlan.collect { case s: FileSourceScanExec =>
+      s.relation.location.rootPaths.map(_.toUri.getPath)
+    }.flatten
+
+  private def bucketDirs(dir: String): Map[String, Set[(String, Long)]] = {
+    val root = new Path(s"$dir/counts")
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.listStatus(root).filter(_.isDirectory).map { d =>
+      d.getPath.getName -> fs.listStatus(d.getPath)
+        .map(f => (f.getPath.getName, f.getModificationTime)).toSet
+    }.toMap
+  }
+
+  test("property: the driver-side bucketOf equals the bucket the writer computes") {
+    import org.scalacheck.{Arbitrary, Gen, Prop, Test, rng}
+    import spark.implicits._
+    val nameGen = Gen.frequency(
+      1 -> Gen.const(""),
+      3 -> Gen.alphaNumStr,
+      3 -> Gen.asciiStr,
+      3 -> Arbitrary.arbitrary[String],
+      2 -> Gen.listOf(Gen.oneOf("é", "ß", "Ω", "日本", "🙂", "x")).map(_.mkString))
+    val ns = Seq(1, 8, 256)
+    // one case = a batch of names, evaluated in ONE DataFrame; an RDD
+    // source keeps the projection on the codegen path the writer uses
+    val prop = Prop.forAllNoShrink(Gen.listOfN(2000, nameGen)) { names =>
+      val batch = ("" +: "click" +: names).distinct
+      val written = spark.sparkContext.parallelize(batch, 4).toDF("name")
+        .select(col("name") +: ns.map(n =>
+          pmod(xxhash64(col("name")), lit(n.toLong)).as(s"b$n")): _*)
+        .collect()
+      written.length == batch.size && written.forall { r =>
+        val name = r.getString(0)
+        ns.zipWithIndex.forall { case (n, i) =>
+          StateStore.bucketOf(name, n) == r.getLong(i + 1)
+        }
+      }
+    }
+    val res = Test.check(Test.Parameters.default
+      .withMinSuccessfulTests(1).withInitialSeed(rng.Seed(20261018L)), prop)
+    assert(res.passed, res)
+  }
+
   test("save/load round-trips counts and meta exactly") {
     val dir = tmpDir
     val ft = fixture
@@ -35,7 +102,12 @@ class StateStoreSpec extends AnyFunSuite {
   test("loadDist prunes to one bucket partition") {
     val dir = tmpDir
     StateStore.save(fixture, dir, nBuckets = 8)
-    val one = StateStore.loadDist(spark, dir, "click", nBuckets = 8)
+    val (one, jobs) = jobsIn(StateStore.loadDist(spark, dir, "click", nBuckets = 8))
+    // building the point read runs no Spark job (no listing, no schema
+    // inference), and its scan is rooted at the dist's one bucket
+    assert(jobs == 0, s"loadDist launched $jobs Spark jobs")
+    val b = StateStore.bucketOf("click", 8)
+    assert(scanRoots(one.counts) == Seq(s"$dir/counts/dist_bucket=$b"))
     val formatted = one.counts.queryExecution.explainString(
       org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
     // partition filter present and only matching-bucket files selected
@@ -45,6 +117,39 @@ class StateStoreSpec extends AnyFunSuite {
     val expected = fixture.counts.filter(col("dist") === "click")
       .orderBy("bin").collect()
     assert(one.counts.orderBy("bin").collect().sameElements(expected))
+  }
+
+  test("loadDist of a dist whose bucket directory is absent is typed-empty and runs no job") {
+    val dir = tmpDir
+    StateStore.save(fixture, dir, nBuckets = 8)
+    val present = bucketDirs(dir).keySet
+    assert(present.nonEmpty && present.size < 8, present)
+    val name = Iterator.from(0).map(i => s"absent$i")
+      .find(n => !present.contains(s"dist_bucket=${StateStore.bucketOf(n, 8)}")).get
+    val (ft, jobs) = jobsIn(StateStore.loadDist(spark, dir, name, nBuckets = 8))
+    assert(jobs == 0, s"loadDist launched $jobs Spark jobs")
+    assert(ft.counts.schema.map(f => (f.name, f.dataType)) ==
+      Seq(("dist", StringType), ("bin", StringType), ("count", LongType)))
+    assert(ft.counts.schema == StateStore.load(spark, dir).counts.schema)
+    assert(ft.counts.count() == 0 && ft.meta.count() == 0)
+  }
+
+  test("an upsert rewrites only the touched bucket; untouched bucket files stay as they were") {
+    import spark.implicits._
+    val dir = tmpDir
+    StateStore.save(fixture, dir, nBuckets = 8)
+    val before = bucketDirs(dir)
+    val touched = s"dist_bucket=${StateStore.bucketOf("click", 8)}"
+    assert(before.contains(touched) && before.size > 1, before.keySet)
+    val snaps = Seq(("click", "1", 5L, 5L, 1706659200L))
+      .toDF("dist", "bin", "count", "z", "t")
+    StateStore.upsertDistributions(spark, dir, snaps, nBuckets = 8)
+    val after = bucketDirs(dir)
+    assert(after.keySet == before.keySet)
+    // same file names, same modification times: never rewritten
+    for (d <- before.keySet - touched) assert(after(d) == before(d), d)
+    assert(after(touched).map(_._1).intersect(before(touched).map(_._1)).isEmpty,
+      "the touched bucket must be rewritten")
   }
 
   test("single-dist query over the store matches the unpartitioned path") {
