@@ -389,20 +389,16 @@ object DedupQueries {
     val touched = nw.select("part").distinct()
       .collect().map(_.getLong(0)) // <= CcParts rows
     if (touched.isEmpty) return
-    val cur = s.read.parquet(storePath)
+    val cur = graft.sources.Publish.readParquet(s, storePath)
       .filter(col("part").isin(touched.map(Long.box): _*))
       .select("id", "label", "part")
-    val updated = cur.unionByName(nw)
-      .localCheckpoint(true) // materialize before overwriting source
-    updated.repartition(col("part"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("part").parquet(storePath)
+    graft.sources.Publish.replaceParts(s, storePath, "part", touched,
+      cur.unionByName(nw))
   }
 
   private[graft] def ccIngest(s: SparkSession, storePath: String,
       pairBatch: DataFrame): Unit = {
-    def assign = s.read.parquet(storePath)
+    def assign = graft.sources.Publish.readParquet(s, storePath)
     // LOUD on an unseeded endpoint: an inner join would silently DROP
     // a pair whose doc was never registered ([[ccSeedAppend]] must run
     // before the batch's pairs ingest — the one-maintainer ordering),
@@ -444,21 +440,9 @@ object DedupQueries {
         .select(col("id"),
           coalesce(col("new_label"), col("label")).as("label"))
         .withColumn("part", pmod(col("label"), lit(CcParts)))
-        .localCheckpoint(true) // materialize before overwriting source
-      updated.repartition(col("part"))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("part").parquet(storePath)
-      // dynamic overwrite only rewrites directories present in the
-      // write: a touched dir whose every component moved out gets
-      // nothing written and would keep stale rows — drop it
-      val written = updated.select("part").distinct()
-        .collect().map(_.getLong(0)).toSet
-      val fs = new org.apache.hadoop.fs.Path(storePath)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      touched.filterNot(written).foreach { p =>
-        fs.delete(new org.apache.hadoop.fs.Path(s"$storePath/part=$p"), true)
-      }
+      // a touched dir whose every component moved out is retired
+      graft.sources.Publish.replaceParts(s, storePath, "part", touched,
+        updated)
     }
   }
 
@@ -487,7 +471,7 @@ object DedupQueries {
     */
   private[graft] def ccRetract(s: SparkSession, storePath: String,
       retractIds: DataFrame, pairs: DataFrame): Unit = {
-    def assign = s.read.parquet(storePath)
+    def assign = graft.sources.Publish.readParquet(s, storePath)
     val rid = retractIds.select(col("id")).distinct().localCheckpoint(true)
     if (rid.isEmpty) return
     val affected = assign.join(rid, "id")
@@ -513,18 +497,7 @@ object DedupQueries {
       .select("id", "label")
       .unionByName(relab.select("id", "label"))
       .withColumn("part", pmod(col("label"), lit(CcParts)))
-      .localCheckpoint(true) // materialize before overwriting source
-    updated.repartition(col("part"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("part").parquet(storePath)
-    val written = updated.select("part").distinct()
-      .collect().map(_.getLong(0)).toSet
-    val fs = new org.apache.hadoop.fs.Path(storePath)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    touched.filterNot(written).foreach { p =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$storePath/part=$p"), true)
-    }
+    graft.sources.Publish.replaceParts(s, storePath, "part", touched, updated)
   }
 
 
@@ -638,7 +611,7 @@ object DedupQueries {
         ccIngest(s, storePath,
           pairs.filter(pmod(col("id_a") + col("id_b"), lit(3L)) === b))
       }
-      val a = s.read.parquet(storePath).select("id", "label")
+      val a = graft.sources.Publish.readParquet(s, storePath).select("id", "label")
         .localCheckpoint(true) // sizes + final join read it
       val sizes = a.groupBy("label").agg(count(lit(1)).as("cluster_size"))
       a.join(sizes, "label")
@@ -672,7 +645,7 @@ object DedupQueries {
         corpus(s, dir).filter(col("doc_id") < 10000000L &&
           col("doc_id") % 10 === 3).select(col("doc_id").as("id")),
         pairs)
-      val a = s.read.parquet(storePath).select("id", "label")
+      val a = graft.sources.Publish.readParquet(s, storePath).select("id", "label")
         .localCheckpoint(true) // sizes + final join read it
       val sizes = a.groupBy("label").agg(count(lit(1)).as("cluster_size"))
       a.join(sizes, "label")

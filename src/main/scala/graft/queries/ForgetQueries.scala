@@ -639,11 +639,12 @@ object ForgetQueries {
     // end as one deterministic query: save the pre-cutoff state into a
     // bucketed parquet store (StateStore.save), replace every
     // post-cutoff-touched distribution with its full merged bin set
-    // (upsertDistributions — dynamic partition overwrite of touched
-    // buckets, meta z/t refresh with rate carry-over), GC expired
+    // (upsertDistributions — the touched buckets and meta, z/t refreshed
+    // with rate carry-over, published together), GC expired
     // distributions (compact — the (σ+η)·η TTL keep-filter), then load
-    // the store back and emit counts ⋈ meta. Every step's on-disk
-    // result is what the oracle recomputes in SQL, so the driver gate
+    // the store back and emit counts ⋈ meta. Each write is one
+    // crash-safe Publish transaction over counts and meta. Every step's
+    // on-disk result is what the oracle recomputes in SQL, so the driver gate
     // covers the save → upsert → compact → load cycle, not just the
     // in-memory operators. (Scratch store per invocation — the
     // self-contained driver contract; a deployment saves once.)

@@ -552,6 +552,7 @@ object PipelineQueries {
     val rowCols = Seq("shard", "doc_id", "j") ++ valueCols
     val root = new org.apache.hadoop.fs.Path(exportDir)
     val fs0 = root.getFileSystem(s.sparkContext.hadoopConfiguration)
+    graft.sources.Publish.recover(s, exportDir) // before the listing
     // "exists" must mean HOLDS DATA: a retract-only first batch (or a
     // takedown that vacated every shard) leaves the dir with only
     // _SUCCESS, and read.parquet on it dies inferring a schema
@@ -559,7 +560,7 @@ object PipelineQueries {
       fs0.listStatus(root).exists(_.getPath.getName.startsWith("shard="))
     val stored =
       if (hasData)
-        s.read.parquet(exportDir)
+        graft.sources.Publish.readParquet(s, exportDir)
           .filter(col("shard").isin(touched.map(Long.box): _*))
           .select(Seq(col("shard").cast("long").as("shard"), col("doc_id"),
             (col("seq_id") * L + col("pos")).as("g")) ++
@@ -577,9 +578,8 @@ object PipelineQueries {
         .select(rowCols.map(col): _*)
         .unionByName(b.select(rowCols.map(col): _*)))
       .getOrElse(survTok)
-    // no checkpoint here: the rows checkpoint below materializes the
-    // whole plan (tok included) before the dynamic overwrite touches its
-    // own source, and tok's two consumers (the recount agg and the
+    // no checkpoint here: the publish reads the stored shards before it
+    // moves anything, and tok's two consumers (the recount agg and the
     // re-slot join) hash-partition on the same (shard, doc_id) key, so
     // the stored-read subtree is computed once behind a ReusedExchange
     val tok = without
@@ -598,18 +598,7 @@ object PipelineQueries {
           / lit(PackSeqLen.toDouble)).cast("long").as("seq_id"),
         pmod(col("tok_off") + col("j"), L).as("pos"),
         col("doc_id")) ++ valueCols.map(col): _*)
-      .localCheckpoint(true)
-    rows.repartition(col("shard"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("shard").parquet(exportDir)
-    val written = rows.select("shard").distinct()
-      .collect().map(_.getLong(0)).toSet // <= PackShards rows
-    val fs = new org.apache.hadoop.fs.Path(exportDir)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    touched.filterNot(written).foreach { sh =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$exportDir/shard=$sh"), true)
-    }
+    graft.sources.Publish.replaceParts(s, exportDir, "shard", touched, rows)
   }
 
   /** A fresh doc batch rendered into the MULTIMODAL repack's input
@@ -659,7 +648,7 @@ object PipelineQueries {
   private def slotManifest(s: SparkSession, exportDir: String,
       valueCols: Seq[String], countName: String,
       withPatches: Boolean): DataFrame = {
-    val back = s.read.parquet(exportDir)
+    val back = graft.sources.Publish.readParquet(s, exportDir)
       .select(Seq(col("shard").cast("long").as("shard"), col("seq_id"),
         col("pos"), col("doc_id")) ++ valueCols.map(col): _*)
     val fp = graft.functions.Md5Long60Expr(
@@ -1004,30 +993,16 @@ object PipelineQueries {
       without: Option[DataFrame], checkCovers: Boolean): Unit = {
     if (touched.isEmpty) return
     if (checkCovers) requireRepackCovers(touched, extra, without)
-    val stored = s.read.parquet(exportDir)
+    val stored = graft.sources.Publish.readParquet(s, exportDir)
       .filter(col("shard").isin(touched.map(Long.box): _*))
       .groupBy(col("doc_id"), col("shard").cast("long").as("shard"))
       .agg(max("tok_end").as("n_toks"))
     val survivors = without
       .map(del => stored.join(del, Seq("doc_id"), "left_anti"))
       .getOrElse(stored)
-    // counts has ONE consumer (the span arithmetic), so the spans
-    // checkpoint below already materializes everything before the
-    // dynamic overwrite touches its own source — a counts checkpoint
-    // would be a redundant extra materialization action
     val counts = extra.map(survivors.unionByName(_)).getOrElse(survivors)
-    val spans = seqSpansOfCounts(counts).localCheckpoint(true)
-    spans.repartition(col("shard"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("shard").parquet(exportDir)
-    val written = spans.select("shard").distinct()
-      .collect().map(_.getLong(0)).toSet // <= PackShards rows
-    val fs = new org.apache.hadoop.fs.Path(exportDir)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    touched.filterNot(written).foreach { sh =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$exportDir/shard=$sh"), true)
-    }
+    graft.sources.Publish.replaceParts(s, exportDir, "shard", touched,
+      seqSpansOfCounts(counts))
   }
 
   /** Per-shard manifest of a shipped span artifact, computed FROM DISK
@@ -1039,7 +1014,7 @@ object PipelineQueries {
     // no checkpoint: the span agg and the fill agg each scan the
     // column-pruned parquet once inside ONE job — cheaper than an
     // extra materialization action holding every shipped row
-    val back = s.read.parquet(exportDir)
+    val back = graft.sources.Publish.readParquet(s, exportDir)
       .select(col("shard").cast("long").as("shard"), col("seq_id"),
         col("doc_id"), col("tok_begin"), col("tok_end"), col("seq_off"))
     val fp = graft.functions.Md5Long60Expr(
@@ -1070,7 +1045,7 @@ object PipelineQueries {
 
   /** Land an append batch of raw documents (doc_id, text, ...) on a
     * shipped artifact by re-packing ONLY the shard directories the
-    * batch's doc hashes touch (dynamic partition overwrite) — shared
+    * batch's doc hashes touch (one [[graft.sources.Publish]]) — shared
     * by the driver query and the spec that pins untouched dirs are
     * never rewritten.
     */
@@ -1086,7 +1061,7 @@ object PipelineQueries {
     if (touched.nonEmpty) {
       val w = Window.partitionBy("shard").orderBy("doc_id")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val repacked = s.read.parquet(exportDir)
+      val repacked = graft.sources.Publish.readParquet(s, exportDir)
         .select(col("doc_id"), col("shard").cast("long").as("shard"),
           col("n_tokens"))
         .filter(col("shard").isin(touched.map(Long.box): _*))
@@ -1096,11 +1071,8 @@ object PipelineQueries {
           floor(col("offset").cast("double") / lit(PackSeqLen.toDouble))
             .cast("long"))
         .select("doc_id", "shard", "n_tokens", "offset", "seq_id")
-        .localCheckpoint(true) // materialize before overwriting source
-      repacked.repartition(col("shard"))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("shard").parquet(exportDir)
+      graft.sources.Publish.replaceParts(s, exportDir, "shard", touched,
+        repacked)
     }
   }
 
@@ -1112,7 +1084,7 @@ object PipelineQueries {
     */
   private def exportManifest(s: SparkSession, exportDir: String): DataFrame = {
     // partition-column type inference reads shard back as int
-    val back = s.read.parquet(exportDir)
+    val back = graft.sources.Publish.readParquet(s, exportDir)
       .select(col("shard").cast("long").as("shard"), col("doc_id"),
         col("n_tokens"), col("offset"), col("seq_id"))
     val fp = graft.functions.Md5Long60Expr(
@@ -1996,7 +1968,7 @@ object PipelineQueries {
       if (touched.nonEmpty) {
         val w = Window.partitionBy("shard").orderBy("doc_id")
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        val repacked = s.read.parquet(exportDir)
+        val repacked = graft.sources.Publish.readParquet(s, exportDir)
           .select(col("doc_id"), col("shard").cast("long").as("shard"),
             col("n_tokens"))
           .filter(col("shard").isin(touched.map(Long.box): _*))
@@ -2006,18 +1978,8 @@ object PipelineQueries {
             floor(col("offset").cast("double") / lit(PackSeqLen.toDouble))
               .cast("long"))
           .select("doc_id", "shard", "n_tokens", "offset", "seq_id")
-          .localCheckpoint(true) // materialize before overwriting source
-        repacked.repartition(col("shard"))
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("shard").parquet(exportDir)
-        val written = repacked.select("shard").distinct()
-          .collect().map(_.getLong(0)).toSet
-        val fs = new org.apache.hadoop.fs.Path(exportDir)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        touched.filterNot(written).foreach { p =>
-          fs.delete(new org.apache.hadoop.fs.Path(s"$exportDir/shard=$p"), true)
-        }
+        graft.sources.Publish.replaceParts(s, exportDir, "shard", touched,
+          repacked)
       }
       exportManifest(s, exportDir)
     }),
@@ -2730,7 +2692,7 @@ object PipelineQueries {
     val card = kept.agg(coalesce(sum(
         TextAnalysis.tokenCount(col("text")).cast("long")), lit(0L))
       .cast("long").as("kept_ws_tokens"))
-    val shipDocs = s.read.parquet(exportDir)
+    val shipDocs = graft.sources.Publish.readParquet(s, exportDir)
       .agg(countDistinct(col("doc_id")).cast("long").as("shipped_docs"))
     val wAll = Window.rowsBetween(
       Window.unboundedPreceding, Window.unboundedFollowing)

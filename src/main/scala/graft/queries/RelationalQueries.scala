@@ -161,8 +161,11 @@ object RelationalQueries {
   /** An empty partitioned write leaves no part= dirs — treat as absent.
     * Shared with StreamOpsSpec so the spec's "both store branches are
     * live" probe can never drift from what the query actually reads.
+    * A committed [[graft.sources.Publish]] of the store that crashed is
+    * finished before the listing.
     */
   private[graft] def hasPartData(s: SparkSession, path: String): Boolean = {
+    graft.sources.Publish.recover(s, path)
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
     fs.exists(p) && fs.listStatus(p).exists(_.getPath.getName.startsWith("part="))
@@ -259,7 +262,7 @@ object RelationalQueries {
         pass.unionByName(checked)
       }
     val all = (if (!hasData(pendPath)) newEv
-      else s.read.parquet(pendPath)
+      else graft.sources.Publish.readParquet(s, pendPath)
         .select(col("user_id"), col("event_type"), col("ts"))
         .unionByName(newEv))
       .localCheckpoint(true)
@@ -377,10 +380,11 @@ object RelationalQueries {
       // semantics-free for the chain (min-ts per stage)
       .distinct()
       .withColumn("part", pmod(col("user_id"), lit(parts.toLong)))
-      .localCheckpoint(true) // materialize before overwriting source
-    keep.repartition(col("part"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .partitionBy("part").parquet(pendPath)
+    graft.sources.Publish.commit(s, pendPath) { txn =>
+      keep.repartition(col("part"))
+        .write.partitionBy("part").parquet(s"$txn/pending")
+      Seq(graft.sources.Publish.replace(s"$txn/pending", pendPath))
+    }
   }
 
   private[graft] def funnelIncremental(s: SparkSession, ev: DataFrame,
@@ -543,7 +547,7 @@ object RelationalQueries {
         .select("user_id", "t_view", "reached", "t_click", "t_purchase"))
     val late =
       if (!hasPartData(s, pendPath)) None
-      else Some(chain(s.read.parquet(pendPath)
+      else Some(chain(graft.sources.Publish.readParquet(s, pendPath)
         .select(col("user_id"), col("event_type"), col("ts"))))
     (res, late) match {
       case (Some(r), Some(l)) => r.unionByName(l).orderBy("user_id")
@@ -560,7 +564,7 @@ object RelationalQueries {
 
   /** Append `batch` rows whose key combo is NEW to the store; rows for
     * existing keys are dropped (first-batch-wins / set-union). Same
-    * stage/anti-join/dynamic-overwrite choreography as the
+    * stage/anti-join/publish choreography as the
     * AnnIndex.upsert* family with the precedence flipped (stored rows
     * win here; upserts there replace).
     */
@@ -568,25 +572,21 @@ object RelationalQueries {
       batch: DataFrame, keys: Seq[String]): Unit = {
     val staged = batch
       .withColumn("part", pmod(col("user_id"), lit(RetentionParts)))
-      .localCheckpoint(true) // materialize before overwriting source
+      .localCheckpoint(true) // the part probe and the merge read it
     val merged =
       if (!hasPartData(s, path)) staged
       else {
         val partIds = staged.select("part").distinct()
           .collect().map(_.getLong(0)) // bounded by parts, driver-safe
         val dataCols = staged.columns.dropRight(1)
-        val kept = s.read.parquet(path)
+        val kept = graft.sources.Publish.readParquet(s, path)
           .filter(col("part").isin(partIds.map(Long.box): _*))
           .select(dataCols.map(col) :+ col("part").cast("long").as("part"): _*)
         kept.unionByName(staged.join(
             kept.select(keys.map(col): _*), keys, "left_anti"))
-          .localCheckpoint(true)
       }
-    merged.repartition(col("part"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("part")
-      .parquet(path)
+    // every touched directory receives the batch's own rows
+    graft.sources.Publish.replaceParts(s, path, "part", Nil, merged)
   }
 
   /** rel_retention_incremental's staged ingest (bulk history + two
@@ -616,9 +616,10 @@ object RelationalQueries {
     * identical path.
     */
   private[graft] def retentionStoreRead(s: SparkSession, storeDir: String): DataFrame = {
-    val cohort = s.read.parquet(s"$storeDir/cohort")
+    val cohort = graft.sources.Publish.readParquet(s, s"$storeDir/cohort")
       .select("user_id", "cohort_day")
-    val pairs = s.read.parquet(s"$storeDir/pairs").select("user_id", "day")
+    val pairs = graft.sources.Publish.readParquet(s, s"$storeDir/pairs")
+      .select("user_id", "day")
     cohort.join(pairs, "user_id")
       .withColumn("day_offset",
         datediff(col("day"), col("cohort_day")).cast("long"))

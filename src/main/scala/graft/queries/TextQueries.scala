@@ -489,8 +489,8 @@ object TextQueries {
     * maintenance batch pays one linear pass, never a corpus scan.
     * The policy dial is this permille over the artifact's TRAINING
     * fertility ([[graft.sources.BpeStore.Meta.trainPermille]]); at
-    * [[BpeDriftPermille]] the response is a staged retrain
-    * ([[graft.sources.BpeStore.retrainSwap]]).
+    * [[BpeDriftPermille]] the response is a retrain published by
+    * [[graft.sources.BpeStore.retrainSwap]].
     */
   private[graft] def bpeFertilityPermille(merges: Seq[(String, String)],
       batch: DataFrame): Long = bpeFertilityStats(merges, batch)._1
@@ -539,26 +539,18 @@ object TextQueries {
 
   /** Train a versioned tokenizer artifact from `corpus` into `aDir`
     * (merges + alphabet + version/fertility meta — the full shipped
-    * shape). `swap = false` writes in place (the initial train);
-    * `swap = true` routes through [[graft.sources.BpeStore
-    * .retrainSwap]]'s staged two-rename promotion (the retrain
-    * response, crash-recoverable).
+    * shape), published by [[graft.sources.BpeStore.retrainSwap]]: the
+    * initial train and every retrain take the same crash-safe path.
     */
   private[graft] def bpeTrainArtifact(s: SparkSession, corpus: DataFrame,
-      aDir: String, version: Long, swap: Boolean): Unit = {
+      aDir: String, version: Long): Unit = {
     val rounds = bpeTrainRounds(s, corpus)
     require(rounds.nonEmpty, "bpe train: degenerate corpus (no pairs)")
     val nWords = corpus
       .select(explode(TextAnalysis.tokens(col("text"))).as("t")).count()
     val meta = graft.sources.BpeStore.Meta(version, nWords, rounds.last._5)
-    val alphabet = bpeDeriveAlphabetOf(corpus)
-    if (swap)
-      graft.sources.BpeStore.retrainSwap(s, aDir, rounds, alphabet, meta)
-    else {
-      graft.sources.BpeStore.saveAlphabet(s, aDir, alphabet)
-      graft.sources.BpeStore.saveMeta(s, aDir, meta)
-      graft.sources.BpeStore.save(s, aDir, rounds)
-    }
+    graft.sources.BpeStore.retrainSwap(s, aDir, rounds,
+      bpeDeriveAlphabetOf(corpus), meta)
   }
 
   // train-once under CONCURRENT callers: Verify dumps queries from a
@@ -1057,8 +1049,8 @@ object TextQueries {
     // (reversed-token docs — the frozen merges stop applying, the
     // fertility signal every production tokenizer monitors) fires the
     // [[BpeDriftPermille]] dial; the response trains v2 on the full
-    // current corpus and promotes it via the staged two-rename swap
-    // ([[graft.sources.BpeStore.retrainSwap]], crash-recoverable).
+    // current corpus and publishes it crash-safely
+    // ([[graft.sources.BpeStore.retrainSwap]]).
     // After a takedown the same arm retrains from survivors — the
     // GDPR-complete answer for trained tokenizer state. Output = the
     // LIVE artifact's training report; the oracle replays the merge
@@ -1073,7 +1065,7 @@ object TextQueries {
         "/tokenizer"
       val base = Tables.documents(s, dir).select("doc_id", "text")
         .localCheckpoint(true) // train + gauge + wave + union read it
-      bpeTrainArtifact(s, base, aDir, version = 1L, swap = false)
+      bpeTrainArtifact(s, base, aDir, version = 1L)
       val merges = graft.sources.BpeStore.load(s, aDir).map(r => (r._2, r._3))
       val meta = graft.sources.BpeStore.loadMeta(s, aDir).get
       // policy cadence, calm arm: a base-distribution batch must not fire
@@ -1086,7 +1078,7 @@ object TextQueries {
       require(driftDial >= BpeDriftPermille,
         s"BPE drift gauge did not fire: dial $driftDial")
       bpeTrainArtifact(s, base.unionByName(wave), aDir,
-        version = meta.version + 1L, swap = true)
+        version = meta.version + 1L)
       val after = graft.sources.BpeStore.loadMeta(s, aDir).get
       require(after.version == meta.version + 1L,
         s"retrain swap did not bump the version: ${after.version}")

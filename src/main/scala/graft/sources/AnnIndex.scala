@@ -31,9 +31,9 @@ import graft.operators.{Dedup, Multimodal, Similarity}
   *     the win is not recomputing shingles + k hash passes per run.
   *
   * Index writes are `Overwrite` — rebuild-in-place; an incremental
-  * upsert follows the [[StateStore.upsertDistributions]] dynamic
-  * partition-overwrite pattern unchanged (bucket/cell is the partition
-  * key).
+  * upsert replaces only its touched partition directories (bucket/cell
+  * is the partition key) and a retrain replaces the whole index, both
+  * as one [[Publish]] transaction.
   */
 object AnnIndex {
 
@@ -58,9 +58,8 @@ object AnnIndex {
   /** Shared takedown engine for every key-addressed layout: rewrite
     * ONLY the `partCol` directories in `partIds` without the retracted
     * `keyCol` rows (schema-agnostic — data columns come from the
-    * stored table), then drop any directory the delete fully vacated
-    * (dynamic overwrite writes nothing there, which would leave stale
-    * files). Callers locate `partIds` either directly from the ids
+    * stored table); a directory the delete fully vacates is retired by
+    * the publish. Callers locate `partIds` either directly from the ids
     * (partition = pure id function: minhash/PQ) or by one
     * column-pruned scan (content-derived partition: LSH bucket, IVF
     * cell, phash key).
@@ -69,23 +68,12 @@ object AnnIndex {
       keyCol: String, partCol: String, del: DataFrame,
       partIds: Seq[Long]): Unit = {
     if (partIds.isEmpty) return
-    val cur = spark.read.parquet(tablePath)
+    val cur = readTable(spark, tablePath)
     val dataCols = cur.columns.filterNot(_ == partCol)
     val kept = cur.filter(col(partCol).isin(partIds.map(Long.box): _*))
       .join(del.select(keyCol), Seq(keyCol), "left_anti")
       .select(dataCols.map(col) :+ col(partCol).cast("long").as(partCol): _*)
-      .localCheckpoint(true) // materialize before overwriting the source
-    kept.repartition(col(partCol))
-      .write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(partCol)
-      .parquet(tablePath)
-    val written = kept.select(partCol).distinct().collect().map(_.getLong(0)).toSet
-    val fs = new org.apache.hadoop.fs.Path(tablePath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    partIds.filterNot(written).foreach { p =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$tablePath/$partCol=$p"), true)
-    }
+    Publish.replaceParts(spark, tablePath, partCol, partIds, kept)
   }
 
   /** Touched-partition ids for a CONTENT-derived layout: one
@@ -94,7 +82,7 @@ object AnnIndex {
     */
   private def locateParts(spark: SparkSession, tablePath: String,
       keyCol: String, partCol: String, del: DataFrame): Seq[Long] =
-    spark.read.parquet(tablePath)
+    readTable(spark, tablePath)
       .join(del.select(keyCol), Seq(keyCol))
       .select(col(partCol).cast("long")).distinct()
       .collect().map(_.getLong(0)).toSeq // bounded by the dir fan-out
@@ -139,8 +127,8 @@ object AnnIndex {
     * (p, d)), so widening strictly REFINES every existing bucket —
     * probes at the new width stay consistent with any signature the
     * old width produced. Liveness comes from the index's own corpus
-    * rows ([[ivfLiveCorpus]] discipline); offline rebuild into the
-    * staging sibling, [[promoteStaged]] swap. One honest caveat the
+    * rows ([[ivfLiveCorpus]] discipline); offline rebuild published as
+    * one [[Publish]] transaction. One honest caveat the
     * IVF/PQ retrains don't share: data-independent planes split
     * UNIFORM mass, not a degenerate tight cluster (near-identical
     * vectors share every signature at any width) — that pathology is
@@ -151,16 +139,12 @@ object AnnIndex {
     val meta = readIndex(spark, dir, "meta").head()
     val dim = meta.getAs[Int]("dim")
     val parts = meta.getAs[Int]("parts")
-    val stage = s"$dir.retrain"
-    // one write action over the still-immutable live dirs — no
-    // checkpoint needed (the retrainIvf argument)
-    saveLsh(lshCorpus(spark, dir).select("vec_id", "v"), newNBits, dim,
-      stage, parts)
-    promoteStaged(spark, dir, stage)
+    val live = lshCorpus(spark, dir).select("vec_id", "v")
+    replaceIndex(spark, dir)(saveLsh(live, newNBits, dim, _, parts))
   }
 
   /** Incremental index maintenance — [[StateStore.upsertDistributions]]'
-    * dynamic-partition-overwrite pattern applied to the LSH layout: the
+    * touched-partition publish applied to the LSH layout: the
     * batch's vectors are bucketed with the STORED hyperplanes (read from
     * meta, so a new batch can never fork the hash family), only the
     * partition directories their buckets fold into are rewritten, and
@@ -179,7 +163,7 @@ object AnnIndex {
     val staged = vecs.select(col("vec_id"), col("v"),
         Similarity.lshBucket(col("v"), signs).as("bucket"))
       .withColumn("part", pmod(col("bucket"), lit(parts.toLong)))
-      .localCheckpoint(true) // materialize before overwriting the source
+      .localCheckpoint(true) // the probes and the merge below read it
     if (staged.isEmpty) return
     requireUniqueKeys(staged, "vec_id")
     // Touched directories are BOTH sides of the move: where the new rows
@@ -198,27 +182,9 @@ object AnnIndex {
       .join(staged.select("vec_id"), Seq("vec_id"), "left_anti")
       .select(col("vec_id"), col("v"), col("bucket"),
         col("part").cast("long").as("part"))
-    // one checkpoint guards the overwrite-of-source: merged materializes
-    // kept (its only consumer) in the same pass — a kept checkpoint
-    // would be a second full materialization action for nothing
-    val merged = kept.unionByName(staged.select("vec_id", "v", "bucket", "part"))
-      .localCheckpoint(true)
-    merged.repartition(col("part"))
-      .write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("part")
-      .parquet(s"$dir/corpus")
-    // Dynamic overwrite only rewrites directories present in the write:
-    // a directory whose every row was removed (vectors moved out, none
-    // in) gets nothing written and would keep its stale files — drop it.
-    val written = merged.select("part").distinct().collect().map(_.getLong(0)).toSet
-    // resolve the filesystem OWNING dir, not the default FS — an s3a://
-    // index with an HDFS default would otherwise delete the wrong paths
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    partIds.filterNot(written).foreach { p =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$dir/corpus/part=$p"), true)
-    }
+    // a directory whose every row moved out (none in) is retired
+    Publish.replaceParts(spark, s"$dir/corpus", "part", partIds,
+      kept.unionByName(staged.select("vec_id", "v", "bucket", "part")))
   }
 
   /** The bucket-target width rule, integer-exact: the
@@ -273,7 +239,7 @@ object AnnIndex {
     * without the retracted vectors. Unknown ids are no-ops.
     */
   def deleteLsh(spark: SparkSession, dir: String, ids: DataFrame): Unit = {
-    recoverPromotion(spark, dir)
+    Publish.recover(spark, dir)
     val del = ids.select(col("vec_id")).distinct().localCheckpoint(true)
     if (del.isEmpty) return
     deleteRowsInParts(spark, s"$dir/corpus", "vec_id", "part", del,
@@ -287,7 +253,7 @@ object AnnIndex {
     * assignment of the corpus-without against the same centroids.
     */
   def deleteIvf(spark: SparkSession, dir: String, ids: DataFrame): Unit = {
-    recoverPromotion(spark, dir)
+    Publish.recover(spark, dir)
     val del = ids.select(col("vec_id")).distinct().localCheckpoint(true)
     if (del.isEmpty) return
     deleteRowsInParts(spark, s"$dir/assign", "vec_id", "cell", del,
@@ -316,7 +282,7 @@ object AnnIndex {
     * content-derived — locate scan, frozen quantizers).
     */
   def deleteIvfPq(spark: SparkSession, dir: String, ids: DataFrame): Unit = {
-    recoverPromotion(spark, dir)
+    Publish.recover(spark, dir)
     val del = ids.select(col("vec_id")).distinct().localCheckpoint(true)
     if (del.isEmpty || !pathExists(spark, s"$dir/codes")) return
     deleteRowsInParts(spark, s"$dir/codes", "vec_id", "cell", del,
@@ -417,78 +383,32 @@ object AnnIndex {
     * rebuilt index in — the response path to `ivf_cell_stats` /
     * [[ivfDriftStats]] firing (a quantizer trained on January's
     * embedding distribution serving July's crawl). The rebuild runs
-    * OFFLINE into a staging sibling while the old index keeps serving
-    * probes — downtime is two directory renames, not the O(N·k)
+    * OFFLINE into a [[Publish]] transaction while the old index keeps
+    * serving probes (a probe leaves an uncommitted transaction alone) —
+    * downtime is two directory renames, not the O(N·k)
     * re-assignment. The input is [[ivfLiveCorpus]] (the index's own
     * assignment rows), so the result is bit-identical to a fresh
     * [[saveIvf]] over whatever upserts/deletes left live — parquet
     * round-trips doubles exactly, and the Lloyd's hash-ordered sample
-    * depends only on (vec_id, v). Renames are atomic on HDFS-like
-    * stores; an object store without atomic rename should stage under
-    * a versioned prefix and flip a pointer instead (same shape as
-    * [[SegmentStore]]'s fold marker).
+    * depends only on (vec_id, v).
     */
   def retrainIvf(spark: SparkSession, dir: String, k: Int, sampleSize: Int,
                  iters: Int, dim: Int, salt: Int): Unit = {
-    val stage = s"$dir.retrain"
-    // the build re-scans the live assign dirs per Lloyd action; they are
-    // immutable until the swap below, so no checkpoint is needed
-    saveIvf(ivfLiveCorpus(spark, dir), k, sampleSize, iters, dim, salt, stage)
-    promoteStaged(spark, dir, stage)
+    // the build re-scans the live assign dirs per Lloyd action; they
+    // stay in place until the publish's moves
+    val live = ivfLiveCorpus(spark, dir)
+    replaceIndex(spark, dir)(saveIvf(live, k, sampleSize, iters, dim, salt, _))
   }
 
-  /** Swap a fully-built staging index over the live one: retire the
-    * live dir, promote the staging dir, drop the retired copy. The old
-    * index serves probes until the first rename; total downtime is two
-    * renames (atomic on HDFS-like stores — an object store without
-    * atomic rename should version the prefix and flip a pointer
-    * instead). A crash between the renames parks a COMPLETE copy with
-    * the live dir briefly absent — [[recoverPromotion]] rolls that
-    * state forward from every index entry point.
+  /** Publish a complete new index over `dir`: `build` writes it into
+    * the staging path it is given.
     */
-  private def promoteStaged(spark: SparkSession, dir: String,
-                            stage: String): Unit = {
-    recoverPromotion(spark, dir) // resume a prior crashed swap first
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val cur = new org.apache.hadoop.fs.Path(dir)
-    val old = new org.apache.hadoop.fs.Path(s"$dir.pre-retrain")
-    fs.delete(old, true)
-    require(fs.rename(cur, old), s"retrain: could not retire $dir")
-    require(fs.rename(new org.apache.hadoop.fs.Path(stage), cur),
-      s"retrain: could not promote $stage")
-    fs.delete(old, true)
-  }
-
-  /** Roll a crashed [[promoteStaged]] forward — the [[SegmentStore]]
-    * recover discipline applied to the index swap. The swap's only
-    * dir-absent states are (a) between its two renames: the retrain
-    * build COMPLETED (`$dir.retrain` only exists fully built — the
-    * retire rename runs after the staging build's last write action)
-    * and the live dir was retired — finish the promotion with one
-    * rename; (b) no staging build exists (shouldn't arise from the
-    * swap's ordering, but a stray manual delete could) — restore the
-    * retired copy. Both-present (crash after publish, before cleanup)
-    * needs nothing: the live dir wins and the stale retired copy is
-    * dropped by the next swap. Called from every public entry point —
-    * one driver-side `exists` probe when the index is healthy.
-    */
-  private[graft] def recoverPromotion(spark: SparkSession, dir: String): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val cur = new org.apache.hadoop.fs.Path(dir)
-    if (fs.exists(cur)) return
-    val stage = new org.apache.hadoop.fs.Path(s"$dir.retrain")
-    val old = new org.apache.hadoop.fs.Path(s"$dir.pre-retrain")
-    if (fs.exists(stage)) {
-      require(fs.rename(stage, cur),
-        s"retrain recovery: could not promote $stage")
-      fs.delete(old, true)
-    } else if (fs.exists(old)) {
-      require(fs.rename(old, cur),
-        s"retrain recovery: could not restore $old")
+  private def replaceIndex(spark: SparkSession, dir: String)(
+      build: String => Unit): Unit =
+    Publish.commit(spark, dir) { txn =>
+      build(s"$txn/index")
+      Seq(Publish.replace(s"$txn/index", dir))
     }
-  }
 
   /** The retrain trigger WIRED into the ingest loop — the
     * [[SegmentStore.appendWithPolicy]] discipline applied to the
@@ -554,8 +474,8 @@ object AnnIndex {
     else false
   }
 
-  /** Incremental IVF maintenance — same dynamic-partition-overwrite
-    * shape as [[upsertLsh]]: the batch is assigned against the STORED
+  /** Incremental IVF maintenance — same touched-partition publish as
+    * [[upsertLsh]]: the batch is assigned against the STORED
     * centroids (the quantizer never moves on upsert, so cell membership
     * of untouched vectors cannot drift), only the touched cell
     * directories rewrite — both where new rows land and where any
@@ -615,22 +535,8 @@ object AnnIndex {
       .filter(col("cell").isin(cellIds.map(Long.box): _*))
       .join(staged.select("vec_id"), Seq("vec_id"), "left_anti")
       .select(col("vec_id"), col("cell").cast("long").as("cell"), col("v"))
-    // one checkpoint guards the overwrite-of-source: merged materializes
-    // kept (its only consumer) in the same pass — a kept checkpoint
-    // would be a second full materialization action for nothing
-    val merged = kept.unionByName(staged.select("vec_id", "cell", "v"))
-      .localCheckpoint(true)
-    merged.repartition(col("cell"))
-      .write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("cell")
-      .parquet(s"$dir/assign")
-    val written = merged.select("cell").distinct().collect().map(_.getLong(0)).toSet
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    cellIds.filterNot(written).foreach { c =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$dir/assign/cell=$c"), true)
-    }
+    Publish.replaceParts(spark, s"$dir/assign", "cell", cellIds,
+      kept.unionByName(staged.select("vec_id", "cell", "v")))
   }
 
   /** Top-`k` cosine neighbors of each query from the stored IVF index,
@@ -952,15 +858,18 @@ object AnnIndex {
   }
 
   /** Entry-gated read of an index component: every public read/maintain
-    * path enters the store through this, so a crashed [[promoteStaged]]
-    * (live dir parked at `.retrain`/`.pre-retrain`) rolls forward
-    * before any plan is built instead of throwing path-not-found until
-    * an operator renames by hand. One driver-side `exists` when healthy.
+    * path enters the store through this, so a committed retrain or
+    * partition publish that crashed is finished ([[Publish.recover]])
+    * before any plan is built. Two driver-side `exists` when healthy.
     */
   private def readIndex(spark: SparkSession, dir: String, sub: String): DataFrame = {
-    recoverPromotion(spark, dir)
-    spark.read.parquet(s"$dir/$sub")
+    Publish.recover(spark, dir)
+    readTable(spark, s"$dir/$sub")
   }
+
+  /** A partitioned index table, after recovering its own publishes. */
+  private def readTable(spark: SparkSession, path: String): DataFrame =
+    Publish.readParquet(spark, path)
 
   private def pathExists(spark: SparkSession, path: String): Boolean = {
     val p = new org.apache.hadoop.fs.Path(path)
@@ -998,7 +907,7 @@ object AnnIndex {
     val staged = encodeWithCodebooks(applyPerm(vecs, storedPerm(spark, dir), "v"),
         m, sub, storedCodebooks(spark, dir, m))
       .withColumn("part", pmod(col("vec_id"), lit(parts.toLong)))
-      .localCheckpoint(true) // materialize before overwriting the source
+      .localCheckpoint(true) // the key check and the merge read it
     // the kernel encode is row-1:1 (no rank window to collapse a
     // duplicate key), so the uniqueness gate reads the materialized
     // stage instead of re-deriving the raw batch — and still throws
@@ -1019,18 +928,14 @@ object AnnIndex {
       else {
         val partIds = staged.select("part").distinct()
           .collect().map(_.getLong(0)) // bounded by parts, driver-safe
-        spark.read.parquet(codesPath)
+        readTable(spark, codesPath)
           .filter(col("part").isin(partIds.map(Long.box): _*))
           .join(staged.select("vec_id"), Seq("vec_id"), "left_anti")
           .select(staged.columns.dropRight(1).map(col) :+ col("part").cast("long").as("part"): _*)
-          .localCheckpoint(true)
           .unionByName(staged)
       }
-    merged.repartition(col("part"))
-      .write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("part")
-      .parquet(codesPath)
+    // every touched directory receives the batch's own rows
+    Publish.replaceParts(spark, codesPath, "part", Nil, merged)
   }
 
   /** Quantization-quality gauge for the PQ retrain decision. The codes
@@ -1138,9 +1043,9 @@ object AnnIndex {
     * permutation itself is a full [[trainPq]] rebuild — it changes the
     * code-space geometry, not just the centroids). Bit-identical to a
     * fresh [[savePq]]/[[trainPq]]+bulk over the live set: the Lloyd
-    * sample and the encode depend only on (vec_id, v). Offline build +
-    * [[promoteStaged]] swap; `sampleSize`/`iters`/`salt` are the
-    * training knobs `meta` doesn't freeze.
+    * sample and the encode depend only on (vec_id, v). Offline build
+    * published as one [[Publish]] transaction; `sampleSize`/`iters`/
+    * `salt` are the training knobs `meta` doesn't freeze.
     *
     * `refitPerm = true` additionally RE-LEARNS the OPQ permutation from
     * the live corpus ([[Similarity.opqPermutation]] — Ge et al.'s
@@ -1169,19 +1074,19 @@ object AnnIndex {
       if (refitPerm) Similarity.opqPermutation(liveRaw, m * sub, m)
       else storedPerm(spark, dir)
     val live = applyPerm(liveRaw, perm, "v")
-    val stage = s"$dir.retrain"
-    savePerm(spark, stage, perm)
-    // `live` re-reads the current codes dir per action; immutable until
-    // the swap, so no checkpoint is needed
-    val cbs = trainPqCodebooks(live, m, sub, k, sampleSize, iters, salt,
-      stage, parts)
-    encodeWithCodebooks(live, m, sub, cbs)
-      .withColumn("part", pmod(col("vec_id"), lit(parts.toLong)))
-      .repartition(col("part"))
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("part")
-      .parquet(s"$stage/codes")
-    promoteStaged(spark, dir, stage)
+    // `live` re-reads the current codes dir per action; it stays in
+    // place until the publish's moves, so no checkpoint is needed
+    replaceIndex(spark, dir) { stage =>
+      savePerm(spark, stage, perm)
+      val cbs = trainPqCodebooks(live, m, sub, k, sampleSize, iters, salt,
+        stage, parts)
+      encodeWithCodebooks(live, m, sub, cbs)
+        .withColumn("part", pmod(col("vec_id"), lit(parts.toLong)))
+        .repartition(col("part"))
+        .write.mode(SaveMode.Overwrite)
+        .partitionBy("part")
+        .parquet(s"$stage/codes")
+    }
   }
 
   /** OPQ-permutation drift gauge — the per-subspace VARIANCE BALANCE
@@ -1361,7 +1266,8 @@ object AnnIndex {
     * floats from `store`, coarse centroids AND all m codebooks re-fit
     * in one pass over the live set, every live vector re-routed and
     * re-encoded (the O(corpus) line item), frozen OPQ permutation
-    * preserved, offline build + [[promoteStaged]] swap. Bit-identical
+    * preserved, offline build published as one [[Publish]]
+    * transaction. Bit-identical
     * to a fresh [[saveIvfPq]]/[[trainIvfPq]]+bulk over the live set.
     */
   def retrainIvfPq(spark: SparkSession, dir: String, store: DataFrame,
@@ -1376,16 +1282,16 @@ object AnnIndex {
       store.join(readIndex(spark, dir, "codes").select("vec_id"),
         Seq("vec_id"), "left_semi"),
       perm, "v")
-    val stage = s"$dir.retrain"
-    savePerm(spark, stage, perm)
-    val (cents, cbs) = trainIvfPqQuantizers(live, ivfK, sampleSize, iters,
-      dim, ivfSalt, m, sub, pqK, pqSalt, stage)
-    encodeIvfPq(live, m, sub, cents, cbs).drop("ccos")
-      .repartition(col("cell"))
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("cell")
-      .parquet(s"$stage/codes")
-    promoteStaged(spark, dir, stage)
+    replaceIndex(spark, dir) { stage =>
+      savePerm(spark, stage, perm)
+      val (cents, cbs) = trainIvfPqQuantizers(live, ivfK, sampleSize, iters,
+        dim, ivfSalt, m, sub, pqK, pqSalt, stage)
+      encodeIvfPq(live, m, sub, cents, cbs).drop("ccos")
+        .repartition(col("cell"))
+        .write.mode(SaveMode.Overwrite)
+        .partitionBy("cell")
+        .parquet(s"$stage/codes")
+    }
   }
 
   /** Incremental IVF+PQ maintenance — the composition of [[upsertIvf]]
@@ -1406,7 +1312,7 @@ object AnnIndex {
     val staged = encodeIvfPq(applyPerm(vecs, storedPerm(spark, dir), "v"),
         m, sub, cents, storedCodebooks(spark, dir, m))
       .drop("ccos")
-      .localCheckpoint(true) // materialize before overwriting the source
+      .localCheckpoint(true) // the key check and the merge read it
     // row-1:1 kernel assignment+encode: the uniqueness gate reads the
     // stage (see upsertPq)
     requireUniqueKeys(staged.select("vec_id"), "vec_id")
@@ -1421,16 +1327,12 @@ object AnnIndex {
     if (staged.isEmpty) return
     val codesPath = s"$dir/codes"
     if (!pathExists(spark, codesPath)) {
-      staged.repartition(col("cell"))
-        .write.mode(SaveMode.Overwrite)
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("cell")
-        .parquet(codesPath)
+      Publish.replaceParts(spark, codesPath, "cell", Nil, staged)
       return
     }
     val newCells = staged.select("cell").distinct()
       .collect().map(_.getLong(0)) // bounded by ivfK, driver-safe
-    val oldCells = spark.read.parquet(codesPath)
+    val oldCells = readTable(spark, codesPath)
       .join(staged.select("vec_id"), Seq("vec_id"))
       .select(col("cell").cast("long")).distinct()
       .collect().map(_.getLong(0))
@@ -1440,20 +1342,8 @@ object AnnIndex {
       .filter(col("cell").isin(cellIds.map(Long.box): _*))
       .join(staged.select("vec_id"), Seq("vec_id"), "left_anti")
       .select(dataCols.map(col) :+ col("cell").cast("long").as("cell"): _*)
-    // merged's checkpoint materializes kept (its only consumer) in the
-    // same pass — one overwrite guard, not two materializations
-    val merged = kept.unionByName(staged).localCheckpoint(true)
-    merged.repartition(col("cell"))
-      .write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("cell")
-      .parquet(codesPath)
-    val written = merged.select("cell").distinct().collect().map(_.getLong(0)).toSet
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    cellIds.filterNot(written).foreach { c =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$codesPath/cell=$c"), true)
-    }
+    Publish.replaceParts(spark, codesPath, "cell", cellIds,
+      kept.unionByName(staged))
   }
 
   /** The composed index's arm of the wired retrain policy — the
@@ -1626,7 +1516,7 @@ object AnnIndex {
       .withColumn("keys", Dedup.bandKeys(col("sig"), bands, rowsPerBand))
       .select(col("doc_id"), col("sh"), col("sig"), col("keys"),
         pmod(col("doc_id"), lit(parts.toLong)).as("part"))
-      .localCheckpoint(true) // materialize before overwriting the source
+      .localCheckpoint(true) // the probes and the merge read it
     if (staged.isEmpty) return
     requireUniqueKeys(staged, "doc_id")
     val partIds = staged.select("part").distinct()
@@ -1636,13 +1526,8 @@ object AnnIndex {
       .join(staged.select("doc_id"), Seq("doc_id"), "left_anti")
       .select(col("doc_id"), col("sh"), col("sig"), col("keys"),
         col("part").cast("long").as("part"))
-      .localCheckpoint(true)
-    kept.unionByName(staged)
-      .repartition(col("part"))
-      .write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("part")
-      .parquet(s"$dir/sigs")
+    Publish.replaceParts(spark, s"$dir/sigs", "part", partIds,
+      kept.unionByName(staged))
   }
 
   /** TAKEDOWN for the maintained signature table — [[upsertMinhash]]
@@ -1654,9 +1539,8 @@ object AnnIndex {
     * retracted docs — the property that lets one oracle gate the whole
     * build → delete → probe cycle. Unlike the upsert (where `part` is
     * a pure function of doc_id and a dir can never empty), deleting
-    * every row of a touched dir leaves the dynamic overwrite nothing
-    * to write there — the vacated dir is dropped explicitly (the
-    * ccIngest cleanup rule). Ids absent from the index are no-ops.
+    * every row of a touched dir vacates it — the publish retires it
+    * (the ccIngest cleanup rule). Ids absent from the index are no-ops.
     */
   def deleteMinhash(spark: SparkSession, dir: String, ids: DataFrame): Unit = {
     val meta = readIndex(spark, dir, "meta").head()
@@ -1800,7 +1684,7 @@ object AnnIndex {
     * takedown (DMCA/CSAM) semantics.
     */
   def deletePhash(spark: SparkSession, dir: String, ids: DataFrame): Unit = {
-    recoverPromotion(spark, dir)
+    Publish.recover(spark, dir)
     val del = ids.select(col("doc_id")).distinct().localCheckpoint(true)
     if (del.isEmpty || !pathExists(spark, s"$dir/postings")) return
     deleteRowsInParts(spark, s"$dir/postings", "doc_id", "part", del,
@@ -1816,7 +1700,7 @@ object AnnIndex {
     * never re-enter — the [[ivfLiveCorpus]] discipline); payload bytes
     * come from `store` (the media relation — postings hold band keys
     * only, the codes-only split). Offline rebuild into the staging
-    * sibling, [[promoteStaged]] two-rename swap. Bit-identical to a
+    * transaction ([[Publish]]). Bit-identical to a
     * fresh [[trainPhash]]+bulk over the live media at `nPatch`: hashing
     * is row-local and depends only on (doc_id, payload).
     */
@@ -1825,15 +1709,12 @@ object AnnIndex {
     val parts = readIndex(spark, dir, "meta").head().getAs[Int]("parts")
     val live = readIndex(spark, dir, "postings").select("doc_id").distinct()
     val liveMedia = store.join(live, Seq("doc_id"), "left_semi")
-    val stage = s"$dir.retrain"
-    // the bulk load below APPENDS (additive postings, unlike the
-    // Overwrite-mode vector builds) — a crashed prior attempt's partial
-    // staging must not pollute it
-    val p = new org.apache.hadoop.fs.Path(stage)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-    trainPhash(spark, stage, nPatch, parts)
-    upsertPhash(spark, stage, liveMedia) // bulk load at the new width
-    promoteStaged(spark, dir, stage)
+    // the bulk load APPENDS (additive postings); the staging path is
+    // fresh, since a crashed prior attempt's transaction was dropped
+    replaceIndex(spark, dir) { stage =>
+      trainPhash(spark, stage, nPatch, parts)
+      upsertPhash(spark, stage, liveMedia) // bulk load at the new width
+    }
   }
 
   /** The perceptual-media arm of the wired maintenance policy — the

@@ -13,6 +13,8 @@ import org.apache.spark.sql.{SaveMode, SparkSession}
   * The merge list is K rows (K = the configured merge budget — a
   * constant, thousands at production scale), so the driver-side
   * load/save is bounded by construction, like the OPQ permutation.
+  * Every reader first finishes a committed [[retrainSwap]] that
+  * crashed ([[Publish.recover]]).
   */
 object BpeStore {
 
@@ -33,7 +35,7 @@ object BpeStore {
   // the merges/alphabet dir): the artifact is written once per corpus
   // and read by every tokenize/vocab call of every query in a session —
   // without the cache each call pays a parquet read+collect job for a
-  // K-row constant. A retrainSwap promotes a NEW directory (fresh
+  // K-row constant. A retrainSwap publishes a NEW directory (fresh
   // mtime), so a stale entry can never serve a retrained artifact; the
   // cache never persists across JVMs, so every run still derives the
   // artifact from the parquet inputs.
@@ -50,6 +52,7 @@ object BpeStore {
   }
 
   def load(spark: SparkSession, dir: String): Seq[Round] = {
+    Publish.recover(spark, dir)
     def read(): Seq[Round] =
       spark.read.parquet(s"$dir/merges")
         .orderBy("merge_rank")
@@ -65,6 +68,7 @@ object BpeStore {
   }
 
   def exists(spark: SparkSession, dir: String): Boolean = {
+    Publish.recover(spark, dir)
     val p = new org.apache.hadoop.fs.Path(s"$dir/merges")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.exists(p) && fs.listStatus(p).exists(_.getPath.getName.startsWith("part-"))
@@ -90,6 +94,7 @@ object BpeStore {
     * the train query directly) — callers derive once and backfill.
     */
   def loadAlphabet(spark: SparkSession, dir: String): Option[Seq[String]] = {
+    Publish.recover(spark, dir)
     def read(): Option[Seq[String]] = {
       val p = new org.apache.hadoop.fs.Path(s"$dir/alphabet")
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -134,6 +139,7 @@ object BpeStore {
     * unknown" and a caller wanting the dial retrains once to stamp it.
     */
   def loadMeta(spark: SparkSession, dir: String): Option[Meta] = {
+    Publish.recover(spark, dir)
     val p = new org.apache.hadoop.fs.Path(s"$dir/meta")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p) ||
@@ -145,19 +151,18 @@ object BpeStore {
     }
   }
 
-  /** Staged tokenizer retrain — the [[AnnIndex]] promoteStaged
-    * discipline applied to the merge artifact: the NEW tokenizer
-    * (merges + alphabet + bumped version/fertility meta) is built
-    * COMPLETELY under `$dir.retrain`, then swapped in with two renames
-    * (live -> `$dir.pre-retrain`, staging -> live) so no reader ever
-    * sees a half-written artifact; a crash between the renames is
-    * rolled forward by [[recoverRetrain]]. The caller supplies the
-    * fully-trained rounds/alphabet (training itself is the caller's
-    * corpus scan); dependent artifacts (token/mm/curated exports
-    * shipping `_tokenizer`) re-encode against the new version — the
-    * priced 100 TB line item, same as a PQ codebook retrain's
-    * re-encode (BASELINE.md's "Round-17 artifact maintenance at 100x"
-    * receipt).
+  /** Staged tokenizer (re)train — the NEW tokenizer (merges + alphabet
+    * + bumped version/fertility meta) is built COMPLETELY in a
+    * [[Publish]] transaction, then moved over the live directory, so no
+    * reader ever sees a half-written artifact and a crash at any step
+    * leaves the old artifact or the new one. Onto an absent live
+    * directory this is a plain promote: the initial train publishes the
+    * same way. The caller supplies the fully-trained rounds/alphabet
+    * (training itself is the caller's corpus scan); dependent artifacts
+    * (token/mm/curated exports shipping `_tokenizer`) re-encode against
+    * the new version — the priced 100 TB line item, same as a PQ
+    * codebook retrain's re-encode (BASELINE.md's "Round-17 artifact
+    * maintenance at 100x" receipt).
     *
     * GDPR note: this is also the takedown-complete answer for the
     * tokenizer — merges are TRAINED state, so after a retraction the
@@ -167,50 +172,12 @@ object BpeStore {
     * train that never saw the retracted docs.
     */
   def retrainSwap(spark: SparkSession, dir: String, rounds: Seq[Round],
-      alphabet: Seq[String], meta: Meta): Unit = {
-    // resume a prior crashed swap FIRST: if the live dir is absent the
-    // staging dir may be the only complete artifact — deleting it
-    // before recovery would destroy the tokenizer
-    recoverRetrain(spark, dir)
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val stagePath = s"$dir.retrain"
-    fs.delete(new org.apache.hadoop.fs.Path(stagePath), true)
-    // alphabet + meta FIRST, merges last: exists() keys on the merges,
-    // so merges-present must imply the whole staged artifact
-    saveAlphabet(spark, stagePath, alphabet)
-    saveMeta(spark, stagePath, meta)
-    save(spark, stagePath, rounds)
-    val cur = new org.apache.hadoop.fs.Path(dir)
-    val old = new org.apache.hadoop.fs.Path(s"$dir.pre-retrain")
-    fs.delete(old, true)
-    require(fs.rename(cur, old), s"bpe retrain: could not retire $dir")
-    require(fs.rename(new org.apache.hadoop.fs.Path(stagePath), cur),
-      s"bpe retrain: could not promote $stagePath")
-    fs.delete(old, true)
-  }
-
-  /** Roll a crashed [[retrainSwap]] forward (the AnnIndex
-    * recoverPromotion shape): live-dir absent + staging present means
-    * the staged build COMPLETED and the retire rename ran — finish
-    * with one rename; live absent + only the retired copy present
-    * restores it. Both-present needs nothing (live wins; the stale
-    * retired copy dies on the next swap).
-    */
-  def recoverRetrain(spark: SparkSession, dir: String): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val cur = new org.apache.hadoop.fs.Path(dir)
-    if (fs.exists(cur)) return
-    val stage = new org.apache.hadoop.fs.Path(s"$dir.retrain")
-    val old = new org.apache.hadoop.fs.Path(s"$dir.pre-retrain")
-    if (fs.exists(stage)) {
-      require(fs.rename(stage, cur),
-        s"bpe retrain recovery: could not promote $stage")
-      fs.delete(old, true)
-    } else if (fs.exists(old)) {
-      require(fs.rename(old, cur),
-        s"bpe retrain recovery: could not restore $old")
+      alphabet: Seq[String], meta: Meta): Unit =
+    Publish.commit(spark, dir) { txn =>
+      val stage = s"$txn/artifact"
+      saveAlphabet(spark, stage, alphabet)
+      saveMeta(spark, stage, meta)
+      save(spark, stage, rounds)
+      Seq(Publish.replace(stage, dir))
     }
-  }
 }

@@ -561,8 +561,8 @@ object SegmentStore {
     * the frozen vector REPLAYABLE by name, so an audit months later
     * reads the same snapshot without the caller having persisted the
     * vector itself. The manifest is driver-written (writers × 1 lines,
-    * KBs) and published by ONE rename (write to a dotted temp sibling,
-    * rename into place) — atomic on HDFS-like stores, so a crash
+    * KBs) and published by ONE create-if-absent rename
+    * ([[Publish.createIfAbsent]]) — atomic on HDFS-like stores, so a crash
     * mid-commit leaves either no epoch or the whole epoch, never a
     * torn vector. Exactly-once under re-delivery, the
     * [[appendExactlyOnce]] discipline: an epoch id already committed
@@ -581,85 +581,11 @@ object SegmentStore {
     val dst = epochFile(p, epoch)
     if (f.exists(dst)) return false
     f.mkdirs(epochDir(p))
-    // per-ATTEMPT temp name: two concurrent commits of the same epoch
-    // (an at-least-once coordination job racing its own re-fire) must
-    // not share a staging file, or the loser's truncating re-create
-    // could be what the winner's rename publishes — a torn manifest
-    // through the exact path the rename exists to prevent. A crashed
-    // attempt's temp is inert debris (dot-prefixed, never listed).
-    val tmp = new HPath(epochDir(p),
-      s".epoch-$epoch.${java.util.UUID.randomUUID()}.tmp")
-    val out = f.create(tmp, true)
-    try out.write(vec.toSeq.sorted
+    // a re-fired commit racing past the exists() check above loses
+    // inside the publish, so a committed epoch manifest is never
+    // replaced by a later watermark vector
+    Publish.createIfAbsent(f, dst, vec.toSeq.sorted
       .map { case (w, s) => s"$w\t$s\n" }.mkString.getBytes("UTF-8"))
-    finally out.close()
-    // Publish with FileContext.rename(..., Options.Rename.NONE), not
-    // FileSystem.rename: the old API's rename OVERWRITES an existing
-    // destination on RawLocalFileSystem (and other FS), so a re-fired
-    // commit racing past the exists() check above could silently
-    // REPLACE an already-committed epoch manifest with a later
-    // watermark vector — breaking replayability of a previously-read
-    // epoch. Rename.NONE refuses an existing destination on every
-    // Hadoop FS (atomically on HDFS; inside the rename call
-    // elsewhere), so the duplicate commit loses loudly instead.
-    try {
-      val fc = org.apache.hadoop.fs.FileContext
-        .getFileContext(dst.toUri, f.getConf)
-      fc.rename(tmp, dst, org.apache.hadoop.fs.Options.Rename.NONE)
-      true
-    } catch {
-      case _: org.apache.hadoop.fs.FileAlreadyExistsException |
-           _: java.nio.file.FileAlreadyExistsException |
-           _: org.apache.hadoop.fs.ParentNotDirectoryException =>
-        // lost a concurrent commit of this epoch — the winner's
-        // manifest stands untouched
-        f.delete(tmp, true)
-        false
-      case _: org.apache.hadoop.fs.UnsupportedFileSystemException =>
-        // No AbstractFileSystem for this scheme: the old API offers no
-        // atomic no-overwrite rename, so re-check the destination
-        // immediately before renaming and verify the published
-        // manifest is OURS after — a lost race reports false either
-        // way (the caller treats false as "already committed"). The
-        // residual window (two commits passing the re-check in the
-        // same instant on an overwriting-rename FS) cannot be closed
-        // from this API; on such schemes the coordination job must not
-        // race its own re-fires (single-committer per store — the
-        // assumption its at-least-once retry semantics already imply).
-        if (f.exists(dst)) { f.delete(tmp, true); false }
-        else if (!f.rename(tmp, dst)) { f.delete(tmp, true); false }
-        else {
-          val ours = vec.toSeq.sorted
-            .map { case (w, s2) => s"$w\t$s2\n" }.mkString
-          // Read-back failure modes are DISTINCT: a readable manifest
-          // with different bytes is a detected overwrite race — report
-          // false, the other committer's vector stands. A manifest we
-          // cannot READ is not evidence of a race: our rename already
-          // returned true, and on these no-AbstractFileSystem schemes
-          // the single-committer contract (above) is what rules the
-          // race out — so a transient read-back IO failure must not
-          // demote a successful commit to "already committed by
-          // someone else" (the caller would then skip recording OUR
-          // epoch as its own). Report true on unreadable, false only
-          // on a genuine content mismatch.
-          scala.util.Try {
-            val in = f.open(dst)
-            try {
-              val buf = new java.io.ByteArrayOutputStream()
-              org.apache.hadoop.io.IOUtils.copyBytes(in, buf, 65536, false)
-              new String(buf.toByteArray, "UTF-8")
-            } finally in.close()
-          }.map(_ == ours).getOrElse(true)
-        }
-      case e: Throwable =>
-        // An FS signalling dest-exists through a type outside the
-        // caught set (a generic IOException is common) must not leave
-        // the per-attempt staging file behind as permanent debris:
-        // rename either moved tmp (delete is a no-op) or left it (we
-        // remove it) — then propagate, the caller decides.
-        scala.util.Try(f.delete(tmp, true))
-        throw e
-    }
   }
 
   /** Committed epoch ids, ascending — from the manifest listing

@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Literal, XxHash64}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
@@ -32,6 +32,16 @@ import graft.streaming.BinSnapshot
   * This is the batch analog of the reference's per-dist Redis keys: all
   * rows of one distribution land in one bucket, so dist-local operators
   * (decay, normalize, top-K) shuffle at most within a bucket's readers.
+  *
+  * Every write ([[save]], [[upsertDistributions]], [[compact]]) is one
+  * [[Publish]] transaction over `counts` and `meta` together, so a
+  * crash at any step leaves the old store or the new one, never new
+  * counts beside stale meta; every entry point first finishes a
+  * committed write that crashed, and the next write drops an
+  * uncommitted one. A write may read the store it replaces (a lazy
+  * `snaps` built from [[load]], say): nothing live changes until its
+  * new paths are complete. The precondition is a single writer per
+  * store; a read while a write stages sees the old store.
   */
 object StateStore {
 
@@ -48,21 +58,27 @@ object StateStore {
     Math.floorMod(h, nBuckets.toLong)
   }
 
-  /** Write state tables under `dir` (overwrites). Clustered by the
-    * partition key before the write — without the repartition every
-    * write task can open a file in every bucket directory (tasks x
-    * nBuckets files at cluster width, the small-files failure); with
-    * it each directory gets one file.
+  /** Write state tables under `dir` (replacing any store there).
+    * Clustered by the partition key before the write — without the
+    * repartition every write task can open a file in every bucket
+    * directory (tasks x nBuckets files at cluster width, the small-files
+    * failure); with it each directory gets one file.
     */
-  def save(ft: ForgetTable, dir: String, nBuckets: Int = DefaultBuckets): Unit = {
-    ft.counts
-      .withColumn("dist_bucket", bucketCol(col("dist"), nBuckets))
-      .repartition(col("dist_bucket"))
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("dist_bucket")
-      .parquet(s"$dir/counts")
-    ft.meta.write.mode(SaveMode.Overwrite).parquet(s"$dir/meta")
-  }
+  def save(ft: ForgetTable, dir: String, nBuckets: Int = DefaultBuckets): Unit =
+    replaceAll(ft.counts.sparkSession, dir, ft.counts, ft.meta, nBuckets)
+
+  /** Publish `counts` and `meta` as the whole store under `dir`. */
+  private def replaceAll(spark: SparkSession, dir: String, counts: DataFrame,
+      meta: DataFrame, nBuckets: Int): Unit =
+    Publish.commit(spark, dir) { txn =>
+      counts
+        .withColumn("dist_bucket", bucketCol(col("dist"), nBuckets))
+        .repartition(col("dist_bucket"))
+        .write.partitionBy("dist_bucket").parquet(s"$txn/counts")
+      meta.write.parquet(s"$txn/meta")
+      Seq(Publish.replace(s"$txn/counts", s"$dir/counts"),
+        Publish.replace(s"$txn/meta", s"$dir/meta"))
+    }
 
   /** The stored schemas. Every read carries them, so no read runs a
     * footer-inference job, and a store whose last write was EMPTY still
@@ -111,11 +127,13 @@ object StateStore {
       s"$dir/counts", countsSchema)
 
   /** Load the full state (typed-empty when the store holds no rows). */
-  def load(spark: SparkSession, dir: String): ForgetTable =
+  def load(spark: SparkSession, dir: String): ForgetTable = {
+    Publish.recover(spark, dir)
     new ForgetTable(
       readOrEmpty(spark, Seq(s"$dir/counts"), s"$dir/counts", countsSchema)
         .drop("dist_bucket"),
       readMeta(spark, dir))
+  }
 
   /** Load a single distribution: the scan opens only the dist's bucket
     * directory (absent → typed-empty), keeps the literal bucket filter
@@ -124,6 +142,7 @@ object StateStore {
     */
   def loadDist(spark: SparkSession, dir: String, name: String,
                nBuckets: Int = DefaultBuckets): ForgetTable = {
+    Publish.recover(spark, dir)
     val b = bucketOf(name, nBuckets)
     val counts = readBuckets(spark, dir, Seq(b))
       .filter(col("dist_bucket") === b && col("dist") === name)
@@ -143,40 +162,30 @@ object StateStore {
     *
     * Scale/correctness shape:
     *   - Only the hash buckets containing touched dists are read and
-    *     rewritten (dynamic partition overwrite; untouched buckets'
-    *     directories are never listed, their files never opened or
-    *     rewritten). Per-batch write amplification =
-    *     touched buckets' row count, bounded by the bucket fan-out —
-    *     the parquet-native upsert; a table format with row-level MERGE
-    *     slots in here unchanged.
+    *     rewritten: the publish moves the touched `dist_bucket=<b>`
+    *     directories and `meta`, and untouched buckets' directories
+    *     are never listed, their files never opened or rewritten.
+    *     Per-batch write amplification = touched buckets' row count,
+    *     bounded by the bucket fan-out — the parquet-native upsert; a
+    *     table format with row-level MERGE slots in here unchanged.
     *   - The rewrite is DETERMINISTIC given (previous store, batch), so
     *     a foreachBatch retry converges — at-least-once delivery plus
     *     idempotent replacement = effectively-once store contents.
-    *   - Kept rows are localCheckpoint'ed before the write: Spark
-    *     (correctly) refuses to overwrite a path that an in-flight plan
-    *     still reads from; truncating lineage to materialized blocks
-    *     breaks the self-read.
+    *   - `snaps` may read this store: every read of it runs before the
+    *     publish moves anything.
     */
   def upsertDistributions(spark: SparkSession, dir: String, snaps: DataFrame,
                           nBuckets: Int = DefaultBuckets): Unit = {
+    Publish.recover(spark, dir)
     val touched = snaps.select("dist").distinct()
-      .withColumn("dist_bucket", bucketCol(col("dist"), nBuckets))
-      .localCheckpoint(true)
-    val buckets = touched.select("dist_bucket").distinct()
-      .collect().map(_.getLong(0)) // bounded by nBuckets, driver-safe
+    val buckets = touched.select(bucketCol(col("dist"), nBuckets)).distinct()
+      .collect().map(_.getLong(0)).toSeq // bounded by nBuckets, driver-safe
     if (buckets.isEmpty) return
-    val kept = readBuckets(spark, dir, buckets.toSeq)
-      .join(touched.select("dist"), Seq("dist"), "left_anti")
+    val kept = readBuckets(spark, dir, buckets)
+      .join(touched, Seq("dist"), "left_anti")
       .select("dist", "bin", "count", "dist_bucket")
-      .localCheckpoint(true)
     val newRows = snaps.select(col("dist"), col("bin"), col("count"))
       .withColumn("dist_bucket", bucketCol(col("dist"), nBuckets))
-    kept.unionByName(newRows)
-      .repartition(col("dist_bucket"))
-      .write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("dist_bucket")
-      .parquet(s"$dir/counts")
     // meta: new z/t from the snapshots; rate carried over from the
     // stored row (new dists get the reference default, forget.go:22)
     val newMeta = snaps.groupBy("dist")
@@ -188,8 +197,14 @@ object StateStore {
             Seq("dist"), "left")
           .select(col("dist"), col("z"), col("t"),
             coalesce(col("old_rate"), lit(0.5)).as("rate")))
-      .localCheckpoint(true)
-    mergedMeta.write.mode(SaveMode.Overwrite).parquet(s"$dir/meta")
+    Publish.commit(spark, dir) { txn =>
+      kept.unionByName(newRows)
+        .repartition(col("dist_bucket"))
+        .write.partitionBy("dist_bucket").parquet(s"$txn/counts")
+      mergedMeta.write.parquet(s"$txn/meta")
+      Publish.partMoves(spark, s"$txn/counts", s"$dir/counts", "dist_bucket",
+        buckets) :+ Publish.replace(s"$txn/meta", s"$dir/meta")
+    }
   }
 
   /** Drop expired distributions from the store — the persistent analog
@@ -207,14 +222,8 @@ object StateStore {
     val ft = load(spark, dir)
     val alive = ft.alive(params).localCheckpoint(true)
     val nAlive = alive.count()
-    val counts = ft.counts.join(alive, Seq("dist"))
-      .withColumn("dist_bucket", bucketCol(col("dist"), nBuckets))
-      .localCheckpoint(true)
-    val meta = ft.meta.join(alive, Seq("dist")).localCheckpoint(true)
-    counts.repartition(col("dist_bucket"))
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("dist_bucket").parquet(s"$dir/counts")
-    meta.write.mode(SaveMode.Overwrite).parquet(s"$dir/meta")
+    replaceAll(spark, dir, ft.counts.join(alive, Seq("dist")),
+      ft.meta.join(alive, Seq("dist")), nBuckets)
     nAlive
   }
 

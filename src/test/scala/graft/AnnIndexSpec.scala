@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{Dedup, Similarity}
-import graft.sources.AnnIndex
+import graft.sources.{AnnIndex, Publish}
 
 /** The persisted ANN index: a probe served FROM the stored layout must
   * return exactly what the session-computed path returns, while reading
@@ -1202,44 +1202,53 @@ class AnnIndexSpec extends AnyFunSuite {
     assert(probe(dir) == probe(freshDir))
   }
 
-  test("promoteStaged crash recovery: a swap parked between its two renames rolls forward from any entry point") {
-    import java.nio.file.{Files => JF, Paths, StandardCopyOption}
+  test("retrain crash recovery: a read rolls only a committed retrain forward") {
+    CrashFs.register(spark)
     val base = synthVecs(300)
-    val union = base.unionByName(
-      spark.range(1000, 1100).select(col("id").as("vec_id"),
-        vExpr(col("id")).as("v"))).localCheckpoint(true)
-    // state (b): live dir retired, no staging build — restore the old copy
+    val extra = spark.range(1000, 1100).select(col("id").as("vec_id"),
+      vExpr(col("id")).as("v")).localCheckpoint(true)
+    val union = base.unionByName(extra).localCheckpoint(true)
+    def probe(dir: String, vecs: DataFrame) =
+      AnnIndex.probeIvf(spark, dir, queriesOf(vecs), K, 2)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    def build(vecs: DataFrame)(dir: String): Unit =
+      AnnIndex.saveIvf(vecs, k = 8, sampleSize = 128, iters = 2, dim = Dim,
+        salt = 7, dir = dir)
+    def retrain(dir: String): Unit =
+      AnnIndex.retrainIvf(spark, dir, k = 8, sampleSize = 128, iters = 2,
+        dim = Dim, salt = 7)
+    def txnLeft(dir: String): Boolean = {
+      val txn = Publish.txnDir(dir)
+      txn.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(txn)
+    }
+    // crashed at its commit marker: the retrain's build is staged whole,
+    // the marker never written. A probe serves the old index and leaves
+    // the staging alone (it may be a retrain still running); the next
+    // retrain drops it
     val dirB = Files.createTempDirectory("graft_rcvb_").toString
-    AnnIndex.saveIvf(base, k = 8, sampleSize = 128, iters = 2, dim = Dim,
-      salt = 7, dir = dirB)
-    val wantB = AnnIndex.probeIvf(spark, dirB, queriesOf(base), K, 2)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    JF.move(Paths.get(dirB), Paths.get(s"$dirB.pre-retrain"),
-      StandardCopyOption.ATOMIC_MOVE)
-    val gotB = AnnIndex.probeIvf(spark, dirB, queriesOf(base), K, 2)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(gotB == wantB, "restore-path recovery changed the probe")
-    assert(!JF.exists(Paths.get(s"$dirB.pre-retrain")) ||
-      JF.exists(Paths.get(dirB)))
-    // state (a): completed staging build + retired live dir (the crash
-    // window between promoteStaged's two renames) — FINISH the promotion
+    build(base)(dirB)
+    val wantB = probe(dirB, base)
+    CrashFs.crashWhere(CrashFs.renameOnto(s"${Publish.txnDir(dirB)}/${Publish.Marker}"))(
+      retrain(s"crash://$dirB"))
+    assert(probe(dirB, base) == wantB, "a probe before the marker changed the index")
+    assert(txnLeft(dirB), "a probe dropped an uncommitted retrain")
+    retrain(dirB)
+    assert(probe(dirB, base) == wantB, "the next retrain changed the probe")
+    assert(!txnLeft(dirB), "the next retrain left the crashed transaction")
+    // committed, crashed between the move's two renames: the live index
+    // is retired into the transaction, the build not yet in place — the
+    // next probe FINISHES the move
     val dirA = Files.createTempDirectory("graft_rcva_").toString
-    AnnIndex.saveIvf(base, k = 8, sampleSize = 128, iters = 2, dim = Dim,
-      salt = 7, dir = dirA)
-    AnnIndex.saveIvf(union, k = 8, sampleSize = 128, iters = 2, dim = Dim,
-      salt = 7, dir = s"$dirA.retrain")
-    JF.move(Paths.get(dirA), Paths.get(s"$dirA.pre-retrain"),
-      StandardCopyOption.ATOMIC_MOVE)
-    val gotA = AnnIndex.probeIvf(spark, dirA, queriesOf(union), K, 2)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    build(base)(dirA)
+    AnnIndex.upsertIvf(spark, dirA, extra)
+    CrashFs.crashWhere(CrashFs.renameOnto(dirA))(retrain(s"crash://$dirA"))
+    assert(!Files.exists(java.nio.file.Paths.get(dirA)), "the live index was not retired")
+    val gotA = probe(dirA, union)
     val freshDir = Files.createTempDirectory("graft_rcva_fresh_").toString
-    AnnIndex.saveIvf(union, k = 8, sampleSize = 128, iters = 2, dim = Dim,
-      salt = 7, dir = freshDir)
-    val want = AnnIndex.probeIvf(spark, freshDir, queriesOf(union), K, 2)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(gotA == want, "promotion recovery did not serve the staged build")
-    assert(!JF.exists(Paths.get(s"$dirA.retrain")))
-    assert(!JF.exists(Paths.get(s"$dirA.pre-retrain")))
+    build(union)(freshDir)
+    assert(gotA == probe(freshDir, union),
+      "roll-forward recovery did not serve the staged build")
+    assert(!txnLeft(dirA), "roll-forward left the transaction")
   }
 
   test("OPQ perm refit: drift that unbalances per-subspace variance fires the gauge; retrainPq(refitPerm) re-balances and equals the fresh permuted build") {

@@ -165,7 +165,7 @@ class BpeArtifactSpec extends AnyFunSuite {
     val base = graft.sources.Tables.documents(spark, dir)
       .select("doc_id", "text").localCheckpoint(true)
     val aDir = graft.sources.TempDirs.scratch("graft_bpert_spec_") + "/tok"
-    TextQueries.bpeTrainArtifact(spark, base, aDir, version = 1L, swap = false)
+    TextQueries.bpeTrainArtifact(spark, base, aDir, version = 1L)
     val meta1 = BpeStore.loadMeta(spark, aDir).get
     assert(meta1.version == 1L && meta1.trainNWords > 0L)
     val v1 = BpeStore.load(spark, aDir)
@@ -185,28 +185,40 @@ class BpeArtifactSpec extends AnyFunSuite {
     assert(driftDial >= TextQueries.BpeDriftPermille, s"drift dial $driftDial")
     // response: staged retrain on the union, version bump, convergence
     val union = base.unionByName(wave)
-    TextQueries.bpeTrainArtifact(spark, union, aDir, version = 2L, swap = true)
+    TextQueries.bpeTrainArtifact(spark, union, aDir, version = 2L)
     assert(BpeStore.loadMeta(spark, aDir).get.version == 2L)
     assert(BpeStore.load(spark, aDir) ==
       TextQueries.bpeTrainRounds(spark, union),
       "swapped artifact diverged from a fresh train on the final corpus")
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new org.apache.hadoop.fs.Path(aDir).getFileSystem(conf)
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$aDir.retrain")) &&
-      !fs.exists(new org.apache.hadoop.fs.Path(s"$aDir.pre-retrain")),
-      "swap left staging debris")
-    // crash recovery: simulate dying between the two renames (live dir
-    // retired, staged build complete) — recovery promotes the staging
+    def txnLeft(dir: String): Boolean = {
+      val txn = graft.sources.Publish.txnDir(dir)
+      txn.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(txn)
+    }
+    assert(!txnLeft(aDir), "swap left staging debris")
+    // crash recovery. Crashed at its commit marker: the new artifact is
+    // staged whole, the marker never written — a read keeps the live
+    // artifact and leaves the staging to the next retrain
+    CrashFs.register(spark)
     val snapshot = BpeStore.load(spark, aDir)
-    require(fs.rename(new org.apache.hadoop.fs.Path(aDir),
-      new org.apache.hadoop.fs.Path(s"$aDir.retrain")))
-    BpeStore.recoverRetrain(spark, aDir)
+    val other = Seq[BpeStore.Round]((1L, "x", "y", 3L, 9L, 2L))
+    def retrainOther(dir: String): Unit = BpeStore.retrainSwap(spark, dir,
+      other, Seq("x", "y"), BpeStore.Meta(9L, 3L, 9L))
+    CrashFs.crashWhere(CrashFs.renameOnto(
+      s"${graft.sources.Publish.txnDir(aDir)}/${graft.sources.Publish.Marker}"))(
+      retrainOther(s"crash://$aDir"))
+    assert(BpeStore.load(spark, aDir) == snapshot, "a read before the marker changed the artifact")
+    assert(txnLeft(aDir), "a read dropped an uncommitted retrain")
+    // committed, crashed between the move's two renames (live dir
+    // retired, staged artifact not yet in place; the retrain first
+    // dropped the crashed staging above): the next read finishes the move
+    CrashFs.crashWhere(CrashFs.renameOnto(aDir))(retrainOther(s"crash://$aDir"))
     assert(BpeStore.exists(spark, aDir) &&
-      BpeStore.load(spark, aDir) == snapshot, "recovery lost the artifact")
+      BpeStore.load(spark, aDir) == other, "roll-forward lost the staged artifact")
+    assert(!txnLeft(aDir), "roll-forward left the transaction")
     // GDPR arm: retrain-from-survivors converges to a fresh train that
     // never saw the retracted docs
     val survivors = union.filter(col("doc_id") % 50 =!= 7)
-    TextQueries.bpeTrainArtifact(spark, survivors, aDir, version = 3L, swap = true)
+    TextQueries.bpeTrainArtifact(spark, survivors, aDir, version = 3L)
     assert(BpeStore.load(spark, aDir) ==
       TextQueries.bpeTrainRounds(spark, survivors),
       "survivor retrain diverged from the fresh survivor train")

@@ -152,6 +152,37 @@ class StateStoreSpec extends AnyFunSuite {
       "the touched bucket must be rewritten")
   }
 
+  test("an upsert given a lazy snaps that reads the same store leaves the same store as a materialized snaps") {
+    val (lazyDir, eagerDir) = (tmpDir, tmpDir)
+    Seq(lazyDir, eagerDir).foreach(StateStore.save(fixture, _, nBuckets = 8))
+    val names = fixture.meta.select("dist").orderBy("dist").collect()
+      .map(_.getString(0)).take(2).toSeq
+    // the write-back of an increment: the touched dists' stored bins,
+    // each bumped, with refreshed z/t — read from the store it replaces
+    def snaps(dir: String): DataFrame = {
+      val ft = StateStore.load(spark, dir)
+      ft.counts.filter(col("dist").isin(names: _*))
+        .join(ft.meta.select("dist", "z", "t"), "dist")
+        .select(col("dist"), col("bin"), (col("count") + 1).as("count"),
+          (col("z") + 1).as("z"), (col("t") + 60).as("t"))
+    }
+    StateStore.upsertDistributions(spark, lazyDir, snaps(lazyDir), nBuckets = 8)
+    StateStore.upsertDistributions(spark, eagerDir,
+      snaps(eagerDir).localCheckpoint(true), nBuckets = 8)
+    def state(dir: String) = {
+      val ft = StateStore.load(spark, dir)
+      (ft.counts.collect().toSet, ft.meta.collect().toSet)
+    }
+    val (counts, meta) = state(lazyDir)
+    assert((counts, meta) == state(eagerDir))
+    val before = fixture.counts.collect()
+      .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
+    assert(counts.size == before.size && counts.forall { r =>
+      val old = before((r.getString(0), r.getString(1)))
+      r.getLong(2) == (if (names.contains(r.getString(0))) old + 1 else old)
+    })
+  }
+
   test("single-dist query over the store matches the unpartitioned path") {
     val dir = tmpDir
     val ft = fixture
