@@ -34,12 +34,21 @@ final case class ForgetParams(
   *   - `counts` is built with `groupBy(dist, bin)` — hash-partial
   *     aggregation map-side, one shuffle on the composite key; no skew
   *     concentration on `dist` alone.
-  *   - Per-dist scalars (Z, max, decay-sum) are computed with
+  *   - Per-dist scalars over the FULL store (Z in `dist(None)`,
+  *     `compacted`, `expiry`, `alive`) are computed with
   *     `groupBy(dist).agg(...)` + an equi-join back, NOT
   *     `Window.partitionBy(dist)`: windows shuffle every row to a single
   *     partition per dist with no partial aggregation (a straggler when
   *     one dist is hot), whereas agg+join combines map-side and lets AQE
   *     broadcast the tiny per-dist side.
+  *   - Per-dist sums over a BOUNDED selection (`get`'s requested bins,
+  *     `topK`'s at most k rows per dist, `dist(Some(name))`'s one dist)
+  *     are a `sum(...).over(Window.partitionBy(dist))` in the same pass:
+  *     a dist's partition holds no more rows than the read returns for
+  *     it, while agg+join would scan the selection twice — for a point
+  *     read, its counts and meta each twice, with an extra broadcast and
+  *     exchange per read. Over a single-partition input
+  *     (`StateStore.loadDist`) the window needs no exchange at all.
   *   - Top-K uses `row_number` over (dist, count desc) + `<= k` filter,
   *     which Spark's WindowGroupLimit rewrites into a per-partition
   *     group-limit before the shuffle — distributed partial top-K.
@@ -64,9 +73,11 @@ final class ForgetTable(val counts: DataFrame, val meta: DataFrame) {
   def dist(params: ForgetParams, name: Option[String] = None): DataFrame = {
     val base = name.fold(counts)(n => counts.filter(col("dist") === n))
     val decayed = withDecayedCount(joinMeta(base), params)
-    val z2 = decayed.groupBy("dist")
-      .agg(sum("new_count").as("z2"))
-    decayed.join(z2, "dist")
+    val z2 = sum("new_count")
+    val withZ2 =
+      if (name.isDefined) decayed.withColumn("z2", z2.over(Window.partitionBy("dist")))
+      else decayed.join(decayed.groupBy("dist").agg(z2.as("z2")), "dist")
+    withZ2
       .select(col("dist"), col("bin"), col("new_count").as("count"),
         probability(col("new_count"), col("z2")).as("p"))
       .orderBy("dist", "bin")
@@ -82,7 +93,10 @@ final class ForgetTable(val counts: DataFrame, val meta: DataFrame) {
   def get(name: String, bins: Seq[String], params: ForgetParams): DataFrame = {
     val spark = counts.sparkSession
     import spark.implicits._
-    val requested = bins.toDF("bin").withColumn("dist", lit(name))
+    // a request's bins are a driver-side list, so one partition: over a
+    // single-partition `counts` (StateStore.loadDist) neither the join
+    // nor the per-dist window plans an exchange
+    val requested = bins.toDF("bin").withColumn("dist", lit(name)).coalesce(1)
     val sel = requested
       .join(counts.filter(col("dist") === name), Seq("dist", "bin"), "left")
       .na.fill(0L, Seq("count"))
@@ -250,15 +264,14 @@ final class ForgetTable(val counts: DataFrame, val meta: DataFrame) {
     * /nmostprobable path, where Decay() runs without Normalize() and Z is
     * decremented by only the selected bins' decay
     * (goforget/distribution.go:153-175 called from forget.go:156,211).
+    * The selection is bounded, so `l_sel` is a window sum (Scale notes).
     */
-  private def decayAgainstStoredZ(sel: DataFrame, params: ForgetParams): DataFrame = {
-    val decayed = withDecayedCount(sel, params)
-    val zAdj = decayed.groupBy("dist").agg(sum("l").as("l_sel"))
-    decayed.join(zAdj, "dist")
+  private def decayAgainstStoredZ(sel: DataFrame, params: ForgetParams): DataFrame =
+    withDecayedCount(sel, params)
+      .withColumn("l_sel", sum("l").over(Window.partitionBy("dist")))
       .withColumn("z_adj", col("z") - col("l_sel"))
       .withColumn("count", col("new_count"))
       .withColumn("p", probability(col("count"), col("z_adj")))
-  }
 }
 
 object ForgetTable {

@@ -664,8 +664,13 @@ object ForgetQueries {
         .join(full.meta.select("dist", "z", "t"), "dist")
         .select("dist", "bin", "count", "z", "t")
       graft.sources.StateStore.upsertDistributions(s, storeDir, snaps)
+      // rate and sigma chosen so that the compact both keeps and drops
+      // at every scale the gate runs: at sf0.001 it keeps `purchase`
+      // (1 of 5 dists, 15 rows), at sf0.01 it drops `error` (4 of 5
+      // kept, 600 rows). Each side of the TTL test has a margin of
+      // over a minute.
       graft.sources.StateStore.compact(s, storeDir,
-        ForgetParams(rate = 0.006, nowEpoch = Now))
+        ForgetParams(rate = 0.0079, nowEpoch = Now, sigma = 48.5))
       val ft2 = graft.sources.StateStore.load(s, storeDir)
       ft2.counts.join(ft2.meta, "dist")
         .select("dist", "bin", "count", "z", "t", "rate")
@@ -1259,14 +1264,14 @@ object ForgetQueries {
          |), sel AS (
          |  SELECT c.dist, c.bin, c."count" AS cnt, m.z, m.t
          |  FROM store_counts c JOIN store_meta m USING (dist)
-         |), ${decayCte(0.006, prune = true)},
+         |), ${decayCte(0.0079, prune = true)},
          |mx AS (
          |  SELECT dist, t, CAST(MAX(newc) AS BIGINT) AS max_count
          |  FROM d2 WHERE newc > 0 GROUP BY 1, 2
          |), alive AS (
          |  SELECT dist FROM mx
-         |  WHERE $Now < t + CAST(FLOOR((CAST(2.0 AS DOUBLE) + SQRT(CAST(max_count AS DOUBLE) / CAST(0.006 AS DOUBLE)))
-         |                              * SQRT(CAST(max_count AS DOUBLE) / CAST(0.006 AS DOUBLE))) AS BIGINT)
+         |  WHERE $Now < t + CAST(FLOOR((CAST(48.5 AS DOUBLE) + SQRT(CAST(max_count AS DOUBLE) / CAST(0.0079 AS DOUBLE)))
+         |                              * SQRT(CAST(max_count AS DOUBLE) / CAST(0.0079 AS DOUBLE))) AS BIGINT)
          |)
          |SELECT c.dist, c.bin, c."count", m.z, m.t, m.rate
          |FROM store_counts c

@@ -100,31 +100,40 @@ object StateStore {
 
   /** Read the `paths` that hold data, with partition values parsed
     * relative to `basePath`; typed-empty when none does.
+    *
+    * With `singleIfSmall`, a read of plain files (no subdirectories) totalling
+    * at most `spark.sql.files.maxPartitionBytes` is coalesced to one
+    * partition: one task's worth of input either way, but declared
+    * `SinglePartition`, so the joins, windows and sorts above it plan
+    * no exchange. A larger read keeps its parallel scan — `coalesce`
+    * is narrow and would collapse the whole scan into one task.
     */
   private def readOrEmpty(spark: SparkSession, paths: Seq[String], basePath: String,
-      schema: StructType): DataFrame = {
+      schema: StructType, singleIfSmall: Boolean = false): DataFrame = {
     val fs = new Path(basePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val present = paths.filter { path =>
-      val p = new Path(path)
-      fs.exists(p) && fs.listStatus(p).exists(st =>
-        st.isDirectory || st.getPath.getName.endsWith(".parquet"))
-    }
-    if (present.nonEmpty)
-      spark.read.schema(schema).option("basePath", basePath).parquet(present: _*)
-    else spark.createDataFrame(
+    val listed = paths.map(new Path(_)).filter(fs.exists).map(p => p -> fs.listStatus(p))
+      .filter(_._2.exists(st => st.isDirectory || st.getPath.getName.endsWith(".parquet")))
+    if (listed.isEmpty) return spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+    val df = spark.read.schema(schema).option("basePath", basePath)
+      .parquet(listed.map(_._1.toString): _*)
+    val entries = listed.flatMap(_._2)
+    val bytes = entries.filter(_.getPath.getName.endsWith(".parquet")).map(_.getLen).sum
+    if (singleIfSmall && !entries.exists(_.isDirectory) &&
+        bytes <= spark.sessionState.conf.filesMaxPartitionBytes) df.coalesce(1)
+    else df
   }
 
-  private def readMeta(spark: SparkSession, dir: String): DataFrame =
-    readOrEmpty(spark, Seq(s"$dir/meta"), s"$dir/meta", metaSchema)
+  private def readMeta(spark: SparkSession, dir: String, singleIfSmall: Boolean = false): DataFrame =
+    readOrEmpty(spark, Seq(s"$dir/meta"), s"$dir/meta", metaSchema, singleIfSmall)
 
   /** The stored counts of the given buckets only: each bucket is one
     * `dist_bucket=<b>` directory, and no other directory is listed.
     */
   private def readBuckets(spark: SparkSession, dir: String,
-      buckets: Seq[Long]): DataFrame =
+      buckets: Seq[Long], singleIfSmall: Boolean = false): DataFrame =
     readOrEmpty(spark, buckets.map(b => s"$dir/counts/dist_bucket=$b"),
-      s"$dir/counts", countsSchema)
+      s"$dir/counts", countsSchema, singleIfSmall)
 
   /** Load the full state (typed-empty when the store holds no rows). */
   def load(spark: SparkSession, dir: String): ForgetTable = {
@@ -139,15 +148,22 @@ object StateStore {
     * directory (absent → typed-empty), keeps the literal bucket filter
     * as its partition filter, and pushes the residual `dist = name`
     * predicate into that bucket's row groups.
+    *
+    * Each of the two frames is single-partition when its files total at
+    * most `spark.sql.files.maxPartitionBytes` (see [[readOrEmpty]]), so
+    * a point read over them — `get`, `topK(Some)`, `dist(Some)` — plans
+    * no exchange: its only jobs are the broadcasts of its join inputs
+    * and the collect. A bucket bigger than one split keeps the parallel
+    * scan.
     */
   def loadDist(spark: SparkSession, dir: String, name: String,
                nBuckets: Int = DefaultBuckets): ForgetTable = {
     Publish.recover(spark, dir)
     val b = bucketOf(name, nBuckets)
-    val counts = readBuckets(spark, dir, Seq(b))
+    val counts = readBuckets(spark, dir, Seq(b), singleIfSmall = true)
       .filter(col("dist_bucket") === b && col("dist") === name)
       .drop("dist_bucket")
-    val meta = readMeta(spark, dir).filter(col("dist") === name)
+    val meta = readMeta(spark, dir, singleIfSmall = true).filter(col("dist") === name)
     new ForgetTable(counts, meta)
   }
 

@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Sum}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join, LogicalPlan, Project}
 import org.apache.spark.sql.execution.QueryExecution
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -35,6 +37,38 @@ class PlanShapeSpec extends AnyFunSuite {
   test("ft_windowed_topk: per-window rank runs as a partial WindowGroupLimit") {
     val plan = qe("ft_windowed_topk").executedPlan.toString
     assert(plan.contains("WindowGroupLimit"), plan)
+  }
+
+  /** Joins with a side that is a `groupBy(dist)` sum (under projections):
+    * a per-dist aggregate joined back onto the rows it summed.
+    */
+  private def perDistSumJoins(plan: LogicalPlan): Seq[Join] = {
+    def distSum(p: LogicalPlan): Boolean = p match {
+      case Project(_, child) => distSum(child)
+      case a: Aggregate =>
+        a.groupingExpressions.flatMap(_.references.map(_.name)) == Seq("dist") &&
+          a.aggregateExpressions.exists(_.exists {
+            case ae: AggregateExpression => ae.aggregateFunction.isInstanceOf[Sum]
+            case _ => false
+          })
+      case _ => false
+    }
+    plan.collect { case j: Join if distSum(j.left) || distSum(j.right) => j }
+  }
+
+  test("ft_get/ft_topk_one/ft_dist_one: one pass — no sort-merge join, no per-dist aggregate joined back") {
+    // a single-dist read sums its selection per dist with a window in
+    // the same pass; the old groupBy(dist)+join scanned counts and meta
+    // twice each, with a sort-merge or extra broadcast join
+    Seq("ft_get", "ft_topk_one", "ft_dist_one").foreach { n =>
+      val q = qe(n)
+      val plan = q.executedPlan.toString
+      assert(!plan.contains("SortMergeJoin"), s"$n: $plan")
+      val back = perDistSumJoins(q.optimizedPlan)
+      assert(back.isEmpty, s"$n joins a per-dist sum back:\n${back.mkString("\n")}")
+      // counts and meta each derive from ONE events scan
+      assert("Scan parquet".r.findAllIn(plan).size == 2, s"$n: $plan")
+    }
   }
 
   test("ft_topk_one: single-dist top-K takes the TakeOrderedAndProject path") {
@@ -84,10 +118,13 @@ class PlanShapeSpec extends AnyFunSuite {
   }
 
   test("ft_json: no unbounded per-dist window — rank is bucket-bounded, z is agg+join") {
-    // The repo rule (ForgetTable scaladoc): per-dist scalars come from
-    // groupBy(dist)+join, never Window.partitionBy(dist) — a hot dist
-    // would otherwise become one straggler task. ft_json's only window
-    // must be the page-rank inside bounded (dist, bkt) buckets.
+    // The repo rule (ForgetTable scaladoc "Scale notes"): per-dist
+    // scalars over the full store come from groupBy(dist)+join, never
+    // Window.partitionBy(dist) — a hot dist would otherwise become one
+    // straggler task; only a bounded selection (a point read's bins,
+    // k rows per dist) takes a per-dist window. ft_json pages the full
+    // store, so its only window must be the page-rank inside bounded
+    // (dist, bkt) buckets.
     val plan = qe("ft_json").executedPlan.toString
     val windowLines = plan.linesIterator
       .filter(l => l.contains("Window [") && !l.contains("WindowGroupLimit"))

@@ -7,7 +7,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.graft.Bus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.{CoalesceExec, FileSourceScanExec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType}
 import org.scalatest.funsuite.AnyFunSuite
@@ -48,6 +48,25 @@ class StateStoreSpec extends AnyFunSuite {
     df.queryExecution.sparkPlan.collect { case s: FileSourceScanExec =>
       s.relation.location.rootPaths.map(_.toUri.getPath)
     }.flatten
+
+  /** `dist`, `get` and `topK` on `one`, a [[StateStore.loadDist]] of
+    * `name`, equal the same reads on the full in-memory table `ft`, row
+    * for row.
+    */
+  private def assertSameReads(one: ForgetTable, ft: ForgetTable, name: String,
+      params: ForgetParams): Unit = {
+    def same(what: String, fromStore: DataFrame, direct: DataFrame): Unit = {
+      val (got, exp) = (fromStore.collect(), direct.collect())
+      assert(exp.nonEmpty && got.sameElements(exp),
+        s"$name $what: ${got.take(3).mkString(" ")} vs ${exp.take(3).mkString(" ")}")
+    }
+    same("dist(None)", one.dist(params), ft.dist(params, Some(name)))
+    same("dist(Some)", one.dist(params, Some(name)), ft.dist(params, Some(name)))
+    val bins = ft.counts.filter(col("dist") === name).orderBy("bin").collect()
+      .map(_.getString(1)).take(3).toSeq :+ "absent"
+    same("get", one.get(name, bins, params), ft.get(name, bins, params))
+    same("topK", one.topK(4, params, Some(name)), ft.topK(4, params, Some(name)))
+  }
 
   private def bucketDirs(dir: String): Map[String, Set[(String, Long)]] = {
     val root = new Path(s"$dir/counts")
@@ -188,9 +207,47 @@ class StateStoreSpec extends AnyFunSuite {
     val ft = fixture
     StateStore.save(ft, dir, nBuckets = 8)
     val params = ForgetParams(rate = 0.002, nowEpoch = 1706659200L)
-    val fromStore = StateStore.loadDist(spark, dir, "click", 8).dist(params).collect()
-    val direct = ft.dist(params, Some("click")).collect()
-    assert(fromStore.sameElements(direct))
+    val names = ft.meta.select("dist").orderBy("dist").collect().map(_.getString(0))
+    assert(names.length == 5, names.toSeq)
+    for (name <- names)
+      assertSameReads(StateStore.loadDist(spark, dir, name, 8), ft, name, params)
+  }
+
+  test("point reads on a saved store: get runs at most 3 jobs, topK and dist at most 2") {
+    val dir = tmpDir
+    StateStore.save(fixture, dir, nBuckets = 8)
+    val params = ForgetParams(rate = 0.002, nowEpoch = 1706659200L)
+    def read(body: ForgetTable => DataFrame): Int =
+      jobsIn(body(StateStore.loadDist(spark, dir, "click", 8)).collect())._2
+    // the jobs are the broadcasts of the join inputs and the collect:
+    // no exchange, no self-join of a per-dist aggregate
+    val get = read(_.get("click", Seq("1", "3", "absent"), params))
+    val topK = read(_.topK(10, params, Some("click")))
+    val dist = read(_.dist(params, Some("click")))
+    assert(get <= 3 && topK <= 2 && dist <= 2, s"get $get, topK $topK, dist $dist jobs")
+  }
+
+  test("a bucket bigger than one split keeps its parallel scan and reads the same rows") {
+    val dir = tmpDir
+    val ft = fixture
+    StateStore.save(ft, dir, nBuckets = 8)
+    val params = ForgetParams(rate = 0.002, nowEpoch = 1706659200L)
+    def coalesced(df: DataFrame): Boolean =
+      df.queryExecution.sparkPlan.exists(_.isInstanceOf[CoalesceExec])
+    // at the default split size the bucket is one split: single-partition
+    assert(coalesced(StateStore.loadDist(spark, dir, "click", 8).counts))
+    val bucket = new Path(s"$dir/counts/dist_bucket=${StateStore.bucketOf("click", 8)}")
+    val fs = bucket.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val bytes = fs.listStatus(bucket).map(_.getLen).sum
+    val key = "spark.sql.files.maxPartitionBytes"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, (bytes / 4).toString)
+    try {
+      val one = StateStore.loadDist(spark, dir, "click", 8)
+      assert(!coalesced(one.counts), one.counts.queryExecution.sparkPlan)
+      assert(one.counts.rdd.getNumPartitions > 1)
+      assertSameReads(one, ft, "click", params)
+    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
   test("compact drops expired distributions (persistent Redis-EXPIRE analog)") {
