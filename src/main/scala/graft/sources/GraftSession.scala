@@ -32,6 +32,13 @@ import org.apache.spark.sql.SparkSession
   *     whose literals differ per run). Static, so it is set here, before
   *     the first session exists. Cost of holding them: about 30 MB more
   *     metaspace and 70–230 MB more live heap after a Verify pass.
+  *
+  * and one optimizer rule, [[graft.plans.StoreBucketPruning]]: a filter
+  * naming distributions over a [[StateStore]] `counts` scan (the
+  * `load(dir).counts.filter(col("dist").isin(...))` of a write-back
+  * client) opens only their buckets' files, not all 256. Injected as a
+  * session extension, so it holds in every session built here and in
+  * its `newSession()`s.
   */
 object GraftSession {
 
@@ -47,6 +54,7 @@ object GraftSession {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
       .config("spark.sql.codegen.cache.maxEntries", "5000")
+      .withExtensions(_.injectOptimizerRule(_ => graft.plans.StoreBucketPruning))
 
   /** The standard local session used by mains and specs. */
   def local(master: String = "local[4]", shufflePartitions: Int = 4): SparkSession =

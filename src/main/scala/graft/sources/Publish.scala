@@ -1,6 +1,9 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
+import java.nio.file.Files
+
+import org.apache.hadoop.fs.{ChecksumFileSystem, FileContext, FileSystem, LocalFileSystem,
+  Options, Path, RawLocalFileSystem}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
@@ -36,6 +39,15 @@ import org.apache.spark.sql.functions.col
   *
   * One writer per store at a time: two concurrent publishes of one
   * root share its transaction directory.
+  *
+  * On Hadoop's local filesystem (`file:`) every move and the marker's
+  * rename are a `java.nio.file.Files.move` that refuses an existing
+  * destination: the same check then `rename(2)` that `FileContext`'s
+  * `Rename.NONE` makes there, without its link-status lookup, which
+  * runs a `readlink` subprocess per call. A standalone probe on a
+  * 4-core Linux host timed a `FileContext` rename at 15–16 ms and
+  * `Files.move` at 0.07 ms; a store upsert makes 7–9 moves. Every
+  * other scheme renames through `FileContext`.
   */
 object Publish {
 
@@ -146,24 +158,59 @@ object Publish {
     * existing destination, as [[createIfAbsent]]'s does: the old API's
     * rename would move a directory INTO an existing one.
     */
-  private def moveOnce(f: FileSystem, from: Path, to: Path): Unit = {
+  private[graft] def moveOnce(f: FileSystem, from: Path, to: Path): Unit = {
     val (src, dst) = (f.makeQualified(from), f.makeQualified(to))
-    val moved =
-      try {
-        FileContext.getFileContext(dst.toUri, f.getConf)
-          .rename(src, dst, Options.Rename.NONE)
-        true
-      } catch {
-        case _: org.apache.hadoop.fs.FileAlreadyExistsException |
-             _: java.nio.file.FileAlreadyExistsException |
-             _: java.io.FileNotFoundException => false
-        case _: org.apache.hadoop.fs.UnsupportedFileSystemException =>
-          f.exists(src) && !f.exists(dst) && f.exists(dst.getParent) &&
-            f.rename(src, dst)
-      }
+    val moved = localPath(f, src) match {
+      case Some(s) =>
+        // a file's checksum sidecar goes first, so a crash between the
+        // two leaves an unchecked file, never a stale checksum
+        f match {
+          case c: ChecksumFileSystem =>
+            localPath(f, c.getChecksumFile(src)).filter(Files.exists(_))
+              .foreach(cs => localMove(cs, localPath(f, c.getChecksumFile(dst)).get))
+          case _ =>
+        }
+        localMove(s, localPath(f, dst).get)
+      case None =>
+        try {
+          FileContext.getFileContext(dst.toUri, f.getConf)
+            .rename(src, dst, Options.Rename.NONE)
+          true
+        } catch {
+          case _: org.apache.hadoop.fs.FileAlreadyExistsException |
+               _: java.nio.file.FileAlreadyExistsException |
+               _: java.io.FileNotFoundException => false
+          case _: org.apache.hadoop.fs.UnsupportedFileSystemException =>
+            f.exists(src) && !f.exists(dst) && f.exists(dst.getParent) &&
+              f.rename(src, dst)
+        }
+    }
     if (!moved && f.exists(src) && !f.exists(dst) && f.exists(dst.getParent))
       throw new java.io.IOException(s"publish: cannot rename $src to $dst")
   }
+
+  /** `p` on the local disk when `f` is Hadoop's local filesystem under
+    * the `file` scheme (whichever subclass serves it; not another
+    * scheme's, such as the tests' fault-injecting `crash`).
+    */
+  private def localPath(f: FileSystem, p: Path): Option[java.nio.file.Path] = f match {
+    case _: LocalFileSystem | _: RawLocalFileSystem if f.getUri.getScheme == "file" =>
+      Some(java.nio.file.Paths.get(f.makeQualified(p).toUri))
+    case _ => None
+  }
+
+  /** `Files.move` without `REPLACE_EXISTING`: check the destination,
+    * then `rename(2)`, as `FileContext`'s `Rename.NONE` does on this
+    * filesystem, without its `readlink` subprocess. False when the
+    * destination exists or the source or the destination's parent is
+    * missing.
+    */
+  private def localMove(src: java.nio.file.Path, dst: java.nio.file.Path): Boolean =
+    try { Files.move(src, dst); true }
+    catch {
+      case _: java.nio.file.FileAlreadyExistsException |
+           _: java.nio.file.NoSuchFileException => false
+    }
 
   /** The moves that replace `live`'s `partCol=<v>` directories with those
     * staged under `staged`: every directory the staged write produced,
@@ -204,15 +251,30 @@ object Publish {
     * destination on RawLocalFileSystem (and other FS), so a racing
     * attempt could silently replace a published file. Rename.NONE
     * refuses an existing destination on every Hadoop FS (atomically on
-    * HDFS; inside the rename call elsewhere). The temp name is per
+    * HDFS; inside the rename call elsewhere). On Hadoop's local
+    * filesystem the temp is written with `java.nio` (no checksum
+    * sidecar) and moved by [[localMove]], the same check then
+    * `rename(2)`. The temp name is per
     * attempt: two racing attempts must not share it, or the loser's
     * truncating re-create could be what the winner's rename publishes.
     * A crashed attempt's temp is inert (dot-prefixed, never listed).
     */
-  private[sources] def createIfAbsent(f: FileSystem, dst: Path,
+  private[graft] def createIfAbsent(f: FileSystem, dst: Path,
       bytes: Array[Byte]): Boolean = {
     val tmp = new Path(dst.getParent,
       s".${dst.getName}.${java.util.UUID.randomUUID()}.tmp")
+    localPath(f, tmp) match {
+      case Some(t) =>
+        Files.createDirectories(t.getParent)
+        Files.write(t, bytes)
+        localMove(t, localPath(f, dst).get) || { Files.deleteIfExists(t); false }
+      case None => createIfAbsentHadoop(f, tmp, dst, bytes)
+    }
+  }
+
+  /** [[createIfAbsent]] through Hadoop's API, from the temp `tmp`. */
+  private def createIfAbsentHadoop(f: FileSystem, tmp: Path, dst: Path,
+      bytes: Array[Byte]): Boolean = {
     val out = f.create(tmp, true)
     try out.write(bytes) finally out.close()
     try {

@@ -102,7 +102,7 @@ import org.apache.spark.sql.functions._
   *
   * EPOCH-COMMITTER rule: ONE coordination job commits epochs per
   * store. [[commitEpoch]]'s staging is per-attempt and its publish
-  * refuses an existing destination (`FileContext.rename(Rename.NONE)`),
+  * refuses an existing destination ([[Publish.createIfAbsent]]),
   * so even racing duplicate commits lose loudly, never tear a
   * manifest — but on a filesystem with NO AbstractFileSystem binding
   * the fallback path's re-check-then-rename leaves a same-instant

@@ -29,7 +29,7 @@ class PointReadCodegenSpec extends AnyFunSuite {
     assert(StateStore.bucketOf(a, 8) != StateStore.bucketOf(b, 8))
     val params = ForgetParams(rate = 0.002, nowEpoch = 1706659200L)
     def reads(name: String, bins: Seq[String], p: ForgetParams): Seq[DataFrame] = {
-      val ft = StateStore.loadDist(spark, dir, name, 8)
+      val ft = StateStore.loadDist(spark, dir, name)
       Seq(ft.get(name, bins, p), ft.topK(10, p, Some(name)), ft.dist(p, Some(name)))
     }
     reads(a, Seq("1", "3", "absent"), params).foreach(_.collect())

@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.{ForgetParams, ForgetTable}
-import graft.sources.{AnnIndex, BpeStore, Publish, StateStore, Tables}
+import graft.sources.{AnnIndex, BpeStore, Publish, SegmentStore, StateStore, Tables}
 
 /** Fault injection for [[Publish]]: every store's publish is crashed at
   * each of its filesystem steps in turn ([[CrashFs]]), and the store's
@@ -150,14 +150,14 @@ class PublishSpec extends AnyFunSuite {
         .join(ft.meta.select("dist", "z", "t"), "dist")
         .select(col("dist"), col("bin"), (col("count") + 1).as("count"),
           (col("z") + 1).as("z"), (col("t") + 60).as("t"))
-      StateStore.upsertDistributions(spark, dir, snaps, Buckets)
+      StateStore.upsertDistributions(spark, dir, snaps)
     }(stateOf)
   }
 
   test("StateStore compact: a crash at any step leaves the old store or the new one") {
     val params = ForgetParams(rate = 0.001, nowEpoch = 1706659200L)
     crashEverywhere("compact")(StateStore.save(fixture, _, Buckets))(
-      StateStore.compact(spark, _, params, Buckets))(stateOf)
+      StateStore.compact(spark, _, params))(stateOf)
   }
 
   test("AnnIndex IVF retrain: a crash at any step leaves the old index or the new one") {
@@ -224,5 +224,74 @@ class PublishSpec extends AnyFunSuite {
     val fs = Publish.txnDir(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
     assert(rows(s"$root/a") == (0L until 3L).toSet && !fs.exists(new Path(s"$root/b")))
     assert(!fs.exists(new Path(Publish.txnDir(root), Publish.Marker)))
+  }
+
+  /** A directory `name` under `parent` holding one file `f` with `text`. */
+  private def dirWith(parent: java.nio.file.Path, name: String, text: String): Path = {
+    val d = Files.createDirectories(parent.resolve(name))
+    Files.write(d.resolve("f"), text.getBytes("UTF-8"))
+    new Path(d.toUri)
+  }
+
+  private def text(p: Path, name: String = "f"): String =
+    new String(Files.readAllBytes(Paths.get(p.toUri).resolve(name)), "UTF-8")
+
+  test("a local move refuses an existing destination and takes a missing source as moved") {
+    val base = Files.createTempDirectory("graft_pub_move_")
+    val fs = new Path(base.toUri).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(fs.getUri.getScheme == "file")
+    val src = dirWith(base, "src", "new")
+    val dirDst = dirWith(base, "dirDst", "old")
+    val fileDst = new Path(base.resolve("fileDst").toUri)
+    Files.write(Paths.get(fileDst.toUri), "old".getBytes("UTF-8"))
+    // a taken destination means another finisher made the move: the
+    // move leaves both paths as they are
+    for (dst <- Seq(dirDst, fileDst)) {
+      Publish.moveOnce(fs, src, dst)
+      assert(text(src) == "new", s"$dst: the source moved")
+    }
+    assert(text(dirDst) == "old" && !Files.exists(Paths.get(dirDst.toUri).resolve("src")))
+    assert(new String(Files.readAllBytes(Paths.get(fileDst.toUri)), "UTF-8") == "old")
+    val dst = new Path(base.resolve("dst").toUri)
+    Publish.moveOnce(fs, src, dst)
+    assert(text(dst) == "new" && !fs.exists(src))
+    // the source is gone: another finisher made this move
+    Publish.moveOnce(fs, src, dst)
+    assert(text(dst) == "new")
+  }
+
+  test("a second finish of a committed local transaction is a no-op") {
+    val root = Files.createTempDirectory("graft_pub_refinish_").toString + "/store"
+    spark.range(3).write.parquet(s"$root/a")
+    Publish.commit(spark, root) { txn =>
+      spark.range(5).write.parquet(s"$txn/a")
+      Seq(Publish.replace(s"$txn/a", s"$root/a"))
+    }
+    // what a finisher that dies before its final delete leaves: the
+    // marker, with every move made
+    val txn = Publish.txnDir(root)
+    val fs = txn.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(Publish.createIfAbsent(fs, new Path(txn, Publish.Marker),
+      s"$txn/a\t$root/a\n".getBytes("UTF-8")))
+    val (_, warned) = publishWarnings(Publish.recover(spark, root))
+    assert(warned.size == 1, warned)
+    assert(rows(s"$root/a") == (0L until 5L).toSet && !fs.exists(txn))
+  }
+
+  test("no checksum file is left beside a local Publish or SegmentStore marker") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_pub_crc_")
+    val fs = new Path(dir.toUri).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(fs.getUri.getScheme == "file")
+    val marker = new Path(new Path(dir.toUri), Publish.Marker)
+    assert(Publish.createIfAbsent(fs, marker, "plan\n".getBytes("UTF-8")))
+    assert(!Publish.createIfAbsent(fs, marker, "other\n".getBytes("UTF-8")))
+    def names(d: java.nio.file.Path) = Files.list(d).iterator().asScala.map(_.getFileName.toString).toSet
+    assert(names(dir) == Set(Publish.Marker))
+    assert(new String(Files.readAllBytes(dir.resolve(Publish.Marker)), "UTF-8") == "plan\n")
+    val seg = dir.resolve("segments").toString
+    assert(SegmentStore.appendExactlyOnce(Seq(("u1", 3L)).toDF("k", "c"), seg, "wa", 0L))
+    assert(SegmentStore.commitEpoch(spark, seg, 0L))
+    assert(names(Paths.get(seg, ".epochs")) == Set("epoch-0"))
   }
 }

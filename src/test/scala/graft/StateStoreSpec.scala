@@ -24,6 +24,11 @@ class StateStoreSpec extends AnyFunSuite {
 
   private def tmpDir = Files.createTempDirectory("graft_state_").toString
 
+  /** Spark jobs of an upsert: the bucket collect, then the counts and
+    * the meta write, each a shuffle and its write.
+    */
+  private val UpsertJobs = 6
+
   private def fixture: ForgetTable =
     ForgetTable.fromEvents(Tables.events(spark, "/root/testdata/sf0.001"))
 
@@ -77,6 +82,18 @@ class StateStoreSpec extends AnyFunSuite {
     }.toMap
   }
 
+  /** The `dist_bucket` values of the partitions the plan's file scans
+    * select.
+    */
+  private def scannedBuckets(df: DataFrame): Set[Long] =
+    df.queryExecution.sparkPlan.collect { case s: FileSourceScanExec =>
+      s.selectedPartitions.filePartitionIterator.map(_.values.getLong(0)).toSet
+    }.flatten.toSet
+
+  /** The buckets with a directory in the store's `counts`. */
+  private def presentBuckets(dir: String): Set[Long] =
+    bucketDirs(dir).keySet.map(_.stripPrefix("dist_bucket=").toLong)
+
   test("property: the driver-side bucketOf equals the bucket the writer computes") {
     import org.scalacheck.{Arbitrary, Gen, Prop, Test, rng}
     import spark.implicits._
@@ -121,7 +138,7 @@ class StateStoreSpec extends AnyFunSuite {
   test("loadDist prunes to one bucket partition") {
     val dir = tmpDir
     StateStore.save(fixture, dir, nBuckets = 8)
-    val (one, jobs) = jobsIn(StateStore.loadDist(spark, dir, "click", nBuckets = 8))
+    val (one, jobs) = jobsIn(StateStore.loadDist(spark, dir, "click"))
     // building the point read runs no Spark job (no listing, no schema
     // inference), and its scan is rooted at the dist's one bucket
     assert(jobs == 0, s"loadDist launched $jobs Spark jobs")
@@ -145,7 +162,7 @@ class StateStoreSpec extends AnyFunSuite {
     assert(present.nonEmpty && present.size < 8, present)
     val name = Iterator.from(0).map(i => s"absent$i")
       .find(n => !present.contains(s"dist_bucket=${StateStore.bucketOf(n, 8)}")).get
-    val (ft, jobs) = jobsIn(StateStore.loadDist(spark, dir, name, nBuckets = 8))
+    val (ft, jobs) = jobsIn(StateStore.loadDist(spark, dir, name))
     assert(jobs == 0, s"loadDist launched $jobs Spark jobs")
     assert(ft.counts.schema.map(f => (f.name, f.dataType)) ==
       Seq(("dist", StringType), ("bin", StringType), ("count", LongType)))
@@ -162,7 +179,7 @@ class StateStoreSpec extends AnyFunSuite {
     assert(before.contains(touched) && before.size > 1, before.keySet)
     val snaps = Seq(("click", "1", 5L, 5L, 1706659200L))
       .toDF("dist", "bin", "count", "z", "t")
-    StateStore.upsertDistributions(spark, dir, snaps, nBuckets = 8)
+    StateStore.upsertDistributions(spark, dir, snaps)
     val after = bucketDirs(dir)
     assert(after.keySet == before.keySet)
     // same file names, same modification times: never rewritten
@@ -185,9 +202,9 @@ class StateStoreSpec extends AnyFunSuite {
         .select(col("dist"), col("bin"), (col("count") + 1).as("count"),
           (col("z") + 1).as("z"), (col("t") + 60).as("t"))
     }
-    StateStore.upsertDistributions(spark, lazyDir, snaps(lazyDir), nBuckets = 8)
+    StateStore.upsertDistributions(spark, lazyDir, snaps(lazyDir))
     StateStore.upsertDistributions(spark, eagerDir,
-      snaps(eagerDir).localCheckpoint(true), nBuckets = 8)
+      snaps(eagerDir).localCheckpoint(true))
     def state(dir: String) = {
       val ft = StateStore.load(spark, dir)
       (ft.counts.collect().toSet, ft.meta.collect().toSet)
@@ -202,6 +219,118 @@ class StateStoreSpec extends AnyFunSuite {
     })
   }
 
+  test("a filter naming distributions over a loaded store scans only their buckets") {
+    val dir = tmpDir
+    val ft = fixture
+    StateStore.save(ft, dir, nBuckets = 8)
+    val present = presentBuckets(dir)
+    val names = ft.meta.select("dist").orderBy("dist").collect().map(_.getString(0)).toSeq
+    def check(what: String, cond: org.apache.spark.sql.Column, buckets: Set[Long]): Unit = {
+      val df = StateStore.load(spark, dir).counts.filter(cond)
+      assert(scannedBuckets(df) == buckets, s"$what: ${df.queryExecution.sparkPlan}")
+      assert(df.collect().toSet == ft.counts.filter(cond).collect().toSet, what)
+    }
+    def bucketsOf(ns: Seq[String]) = ns.map(StateStore.bucketOf(_, 8)).toSet
+    check("===", col("dist") === names.head, bucketsOf(names.take(1)))
+    check("isin", col("dist").isin(names.take(2): _*), bucketsOf(names.take(2)))
+    // more than 10 values: the optimizer turns the IN into an InSet
+    val many = names ++ (0 until 8).map(i => s"absent$i")
+    check("isin > 10", col("dist").isin(many: _*), bucketsOf(many) intersect present)
+    check("isin and a bin test", col("dist").isin(names.take(2): _*) && col("bin") === "1",
+      bucketsOf(names.take(2)))
+    // nothing to prune by
+    check("non-literal", col("dist") === col("bin"), present)
+    check("or another column", col("dist") === names.head || col("bin") === "1", present)
+    val all = StateStore.load(spark, dir).counts
+    assert(scannedBuckets(all) == present)
+    assert(all.collect().toSet == ft.counts.collect().toSet)
+  }
+
+  test("the bucket-pruning rule adds its predicate once and leaves loadDist's own filter alone") {
+    import org.apache.spark.sql.catalyst.expressions.{Expression, In, InSet}
+    val dir = tmpDir
+    StateStore.save(fixture, dir, nBuckets = 8)
+    def bucketTests(df: DataFrame): Seq[Expression] =
+      df.queryExecution.optimizedPlan.flatMap(_.expressions.flatMap(_.collect {
+        case e @ In(a, _) if a.references.exists(_.name == "dist_bucket") => e
+        case e @ InSet(a, _) if a.references.exists(_.name == "dist_bucket") => e
+      }))
+    val pruned = StateStore.load(spark, dir).counts.filter(col("dist").isin("click", "view"))
+    assert(bucketTests(pruned).size == 1, pruned.queryExecution.optimizedPlan)
+    val plan = pruned.queryExecution.optimizedPlan
+    assert(graft.plans.StoreBucketPruning(plan).fastEquals(plan))
+    val one = StateStore.loadDist(spark, dir, "click")
+    assert(bucketTests(one.counts).isEmpty, one.counts.queryExecution.optimizedPlan)
+    val onePlan = one.counts.queryExecution.optimizedPlan
+    assert(graft.plans.StoreBucketPruning(onePlan).fastEquals(onePlan))
+  }
+
+  test("a store records its bucket count: an upsert after a save at 8 buckets replaces the dist in its bucket") {
+    import spark.implicits._
+    val dir = tmpDir
+    // a name whose bucket at 8 differs from its bucket at the default
+    val name = Iterator.from(0).map(i => s"d$i").find(n =>
+      StateStore.bucketOf(n, 8) != StateStore.bucketOf(n, StateStore.DefaultBuckets)).get
+    StateStore.save(new ForgetTable(
+      Seq((name, "x", 5L), (name, "y", 3L)).toDF("dist", "bin", "count"),
+      Seq((name, 8L, 1706659200L, 0.25)).toDF("dist", "z", "t", "rate")), dir, nBuckets = 8)
+    StateStore.upsertDistributions(spark, dir,
+      Seq((name, "x", 6L, 9L, 1706659260L), (name, "y", 3L, 9L, 1706659260L))
+        .toDF("dist", "bin", "count", "z", "t"))
+    val stored = StateStore.load(spark, dir).counts.collect()
+      .map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSeq
+    assert(stored.sorted == Seq((name, "x", 6L), (name, "y", 3L)), stored)
+    assert(presentBuckets(dir) == Set(StateStore.bucketOf(name, 8)))
+    val one = StateStore.loadDist(spark, dir, name)
+    assert(one.counts.collect().map(r => (r.getString(1), r.getLong(2))).toSeq.sorted ==
+      Seq(("x", 6L), ("y", 3L)))
+    assert(one.meta.collect().map(r => (r.getLong(1), r.getLong(2), r.getDouble(3))).toSeq ==
+      Seq((9L, 1706659260L, 0.25)))
+  }
+
+  test("a store with data but no bucket-count record fails every entry point, naming the record") {
+    import spark.implicits._
+    val dir = tmpDir
+    StateStore.save(fixture, dir, nBuckets = 8)
+    val rec = new Path(s"$dir/_buckets")
+    val fs = rec.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(fs.delete(rec, false))
+    val snaps = Seq(("click", "1", 5L, 5L, 1706659200L)).toDF("dist", "bin", "count", "z", "t")
+    val params = ForgetParams(rate = 0.001, nowEpoch = 1706659200L)
+    Seq[(String, () => Any)](
+      "load" -> (() => StateStore.load(spark, dir)),
+      "loadDist" -> (() => StateStore.loadDist(spark, dir, "click")),
+      "upsert" -> (() => StateStore.upsertDistributions(spark, dir, snaps)),
+      "compact" -> (() => StateStore.compact(spark, dir, params))).foreach { case (what, call) =>
+      val e = intercept[IllegalStateException](call())
+      assert(e.getMessage.contains(rec.toUri.getPath), s"$what: ${e.getMessage}")
+    }
+  }
+
+  test("an upsert into an empty directory creates a store with the default bucket count") {
+    import spark.implicits._
+    val dir = tmpDir
+    StateStore.upsertDistributions(spark, dir,
+      Seq(("d1", "b1", 5L, 5L, 1706659200L)).toDF("dist", "bin", "count", "z", "t"))
+    val rec = new Path(s"$dir/_buckets")
+    val in = rec.getFileSystem(spark.sparkContext.hadoopConfiguration).open(rec)
+    val n = try scala.io.Source.fromInputStream(in).mkString.trim finally in.close()
+    assert(n == StateStore.DefaultBuckets.toString)
+    assert(presentBuckets(dir) == Set(StateStore.bucketOf("d1", StateStore.DefaultBuckets)))
+    assert(StateStore.loadDist(spark, dir, "d1").counts.collect()
+      .map(r => (r.getString(1), r.getLong(2))).toSeq == Seq(("b1", 5L)))
+  }
+
+  test("an upsert plans one shuffle per table") {
+    import spark.implicits._
+    val dir = tmpDir
+    StateStore.save(fixture, dir, nBuckets = 8)
+    val snaps = Seq(("click", "1", 5L, 5L, 1706659200L), ("newdist", "x", 3L, 3L, 1706659200L))
+      .toDF("dist", "bin", "count", "z", "t").localCheckpoint(true)
+    val (_, jobs) = jobsIn(StateStore.upsertDistributions(spark, dir, snaps))
+    assert(jobs == UpsertJobs, s"the upsert ran $jobs jobs")
+  }
+
   test("single-dist query over the store matches the unpartitioned path") {
     val dir = tmpDir
     val ft = fixture
@@ -210,7 +339,7 @@ class StateStoreSpec extends AnyFunSuite {
     val names = ft.meta.select("dist").orderBy("dist").collect().map(_.getString(0))
     assert(names.length == 5, names.toSeq)
     for (name <- names)
-      assertSameReads(StateStore.loadDist(spark, dir, name, 8), ft, name, params)
+      assertSameReads(StateStore.loadDist(spark, dir, name), ft, name, params)
   }
 
   test("point reads on a saved store: get runs at most 3 jobs, topK and dist at most 2") {
@@ -218,7 +347,7 @@ class StateStoreSpec extends AnyFunSuite {
     StateStore.save(fixture, dir, nBuckets = 8)
     val params = ForgetParams(rate = 0.002, nowEpoch = 1706659200L)
     def read(body: ForgetTable => DataFrame): Int =
-      jobsIn(body(StateStore.loadDist(spark, dir, "click", 8)).collect())._2
+      jobsIn(body(StateStore.loadDist(spark, dir, "click")).collect())._2
     // the jobs are the broadcasts of the join inputs and the collect:
     // no exchange, no self-join of a per-dist aggregate
     val get = read(_.get("click", Seq("1", "3", "absent"), params))
@@ -235,7 +364,7 @@ class StateStoreSpec extends AnyFunSuite {
     def coalesced(df: DataFrame): Boolean =
       df.queryExecution.sparkPlan.exists(_.isInstanceOf[CoalesceExec])
     // at the default split size the bucket is one split: single-partition
-    assert(coalesced(StateStore.loadDist(spark, dir, "click", 8).counts))
+    assert(coalesced(StateStore.loadDist(spark, dir, "click").counts))
     val bucket = new Path(s"$dir/counts/dist_bucket=${StateStore.bucketOf("click", 8)}")
     val fs = bucket.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val bytes = fs.listStatus(bucket).map(_.getLen).sum
@@ -243,7 +372,7 @@ class StateStoreSpec extends AnyFunSuite {
     val prev = spark.conf.getOption(key)
     spark.conf.set(key, (bytes / 4).toString)
     try {
-      val one = StateStore.loadDist(spark, dir, "click", 8)
+      val one = StateStore.loadDist(spark, dir, "click")
       assert(!coalesced(one.counts), one.counts.queryExecution.sparkPlan)
       assert(one.counts.rdd.getNumPartitions > 1)
       assertSameReads(one, ft, "click", params)
@@ -260,7 +389,7 @@ class StateStoreSpec extends AnyFunSuite {
     val allDists = ft.meta.select("dist").collect().map(_.getString(0)).toSet
     assert(expectedAlive.nonEmpty && expectedAlive != allDists,
       s"fixture must have both alive and expired dists: $expectedAlive of $allDists")
-    val nAlive = StateStore.compact(spark, dir, params, nBuckets = 8)
+    val nAlive = StateStore.compact(spark, dir, params)
     assert(nAlive == expectedAlive.size)
     val back = StateStore.load(spark, dir)
     assert(back.meta.select("dist").collect().map(_.getString(0)).toSet == expectedAlive)
@@ -280,16 +409,16 @@ class StateStoreSpec extends AnyFunSuite {
     val dir = tmpDir
     StateStore.save(fixture, dir, nBuckets = 8)
     val nAlive = StateStore.compact(spark, dir,
-      ForgetParams(rate = 100.0, nowEpoch = 1706659200L), nBuckets = 8)
+      ForgetParams(rate = 100.0, nowEpoch = 1706659200L))
     assert(nAlive == 0, s"$nAlive dists survived a TTL meant to expire all")
     val back = StateStore.load(spark, dir)
     assert(back.counts.count() == 0 && back.meta.count() == 0)
-    assert(StateStore.loadDist(spark, dir, "click", 8).counts.count() == 0)
+    assert(StateStore.loadDist(spark, dir, "click").counts.count() == 0)
     // the empty store is a working store: an upsert repopulates it
     import spark.implicits._
     val snaps = Seq(("d1", "b1", 5L, 5L, 1706659200L))
       .toDF("dist", "bin", "count", "z", "t")
-    StateStore.upsertDistributions(spark, dir, snaps, nBuckets = 8)
+    StateStore.upsertDistributions(spark, dir, snaps)
     val re = StateStore.load(spark, dir)
     assert(re.counts.count() == 1 && re.meta.count() == 1)
     assert(re.meta.head().getAs[Double]("rate") == 0.5) // reference default
@@ -342,7 +471,7 @@ class StateStoreSpec extends AnyFunSuite {
     val out = ForgetStream.requests(mem.toDS(), ForgetStream.Params(rate = 0.0),
       clock = () => T0, withExpiry = false)
     val q = StateStore.streamInto(out, dir,
-      Files.createTempDirectory("graft_wb_ckpt_").toString, nBuckets = 8)
+      Files.createTempDirectory("graft_wb_ckpt_").toString)
     try {
       // batch 1: the stream takes ownership of "click" (replacing the
       // batch-written rows — the stream's state IS the dist now) and
