@@ -8,10 +8,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
 /** The one crash-safe way a store replaces paths: [[StateStore]],
-  * [[AnnIndex]], [[BpeStore]] and the query-layer partition stores all
-  * publish through it. It is the directory form of the reference's
-  * MULTI/EXEC write-back, which commits a distribution's bins together
-  * with its `_Z`/`_T` (goforget/redis_utils.go:124-196).
+  * [[AnnIndex]], [[BpeStore]], [[SegmentStore]]'s compaction and the
+  * query-layer partition stores all publish through it. It is the
+  * directory form of the reference's MULTI/EXEC write-back, which
+  * commits a distribution's bins together with its `_Z`/`_T`
+  * (goforget/redis_utils.go:124-196).
   *
   * A publish of the store rooted at `root` runs in a hidden transaction
   * directory, the sibling `.<name>.publish` of the root:
@@ -31,11 +32,11 @@ import org.apache.spark.sql.functions.col
   * runs [[recover]], which finishes a committed transaction: after a
   * crash at any step the next read sees exactly the old store or exactly
   * the new one. An uncommitted transaction is left to the store's next
-  * [[commit]], which drops it: a read cannot tell a crashed writer's
-  * staging from a live writer's, so reads may run while a publish
-  * stages. A read racing the moves themselves finishes them alongside
-  * the writer: every move refuses to overwrite and skips a move already
-  * made.
+  * write ([[recoverForWrite]]), which drops it: a read cannot tell a
+  * crashed writer's staging from a live writer's, so reads may run
+  * while a publish stages. A read racing the moves themselves finishes
+  * them alongside the writer: every move refuses to overwrite and skips
+  * a move already made.
   *
   * One writer per store at a time: two concurrent publishes of one
   * root share its transaction directory.
@@ -82,14 +83,9 @@ object Publish {
     */
   def commit(spark: SparkSession, root: String)(
       stage: String => Seq[Move]): Unit = {
-    recover(spark, root)
+    recoverForWrite(spark, root)
     val txn = txnDir(root)
     val f = fsOf(spark, txn)
-    if (f.exists(txn)) {
-      // the single writer's own crashed staging
-      log.warn(s"publish recovery: store $root, transaction $txn: dropping the uncommitted publish")
-      f.delete(txn, true)
-    }
     val moves = stage(txn.toString)
     moves.flatMap(_.staged).foreach { s =>
       if (!f.exists(new Path(s)))
@@ -112,6 +108,21 @@ object Publish {
     if (f.exists(new Path(txn, Marker))) {
       log.warn(s"publish recovery: store $root, transaction $txn: rolling the committed publish forward")
       finish(f, txn)
+    }
+  }
+
+  /** What a write of the store rooted at `root` runs first: [[recover]],
+    * then drop an uncommitted publish, the single writer's own crashed
+    * staging. [[commit]] runs it, and so does a store write that
+    * publishes nothing ([[SegmentStore]]'s appends).
+    */
+  def recoverForWrite(spark: SparkSession, root: String): Unit = {
+    recover(spark, root)
+    val txn = txnDir(root)
+    val f = fsOf(spark, txn)
+    if (f.exists(txn)) {
+      log.warn(s"publish recovery: store $root, transaction $txn: dropping the uncommitted publish")
+      f.delete(txn, true)
     }
   }
 

@@ -30,16 +30,14 @@ import org.apache.spark.sql.functions._
   * amplification is BOUNDED by construction, not by operator
   * discipline.
   *
-  * [[compact]] is crash-safe: the fold is written to a sibling temp
-  * directory first, then swapped in with two directory renames (each
-  * atomic on a real filesystem), so a complete on-disk copy of the
-  * counts exists at every instant. A crash BETWEEN the renames parks
-  * that copy at `path + ".old"` with the live path briefly absent —
-  * every store entry point rolls the swap forward (one rename) before
-  * touching the data, so readers never see a truncated store and no
-  * cleanup step can destroy the only copy. (The earlier form overwrote
-  * the directory in place under an executor-local checkpoint of its
-  * own input — fine in one JVM, a data-loss window on a cluster.)
+  * [[compact]] is crash-safe: the fold is one [[Publish]] transaction.
+  * It is written, with its markers, under the transaction directory;
+  * only then does the commit marker name the one move that replaces the
+  * store (or writer subtree) with it. A crash before the marker leaves
+  * the live segments as they were; after it, every store entry point
+  * finishes the move before touching the data, so a reader sees the old
+  * segments or the fold, never a truncated store, and no step can
+  * destroy the only copy.
   *
   * Shared by `text_lm_incremental` (bigram counts) and
   * `ft_counts_incremental` (the reference's O1 `/incr` counter — its Z
@@ -78,24 +76,25 @@ import org.apache.spark.sql.functions._
   *
   * Readers are unrestricted — [[merged]] sees whatever complete
   * segments exist, and the [[compact]] crash-safety above is about a
-  * writer crashing mid-swap, not about concurrent writers. Per-writer
-  * folds stage at HIDDEN siblings inside the root (`.writer=<id>.old`,
+  * writer crashing mid-fold, not about concurrent writers. A per-writer
+  * fold's transaction is HIDDEN inside the root (`.writer=<id>.publish`,
   * leading dot ⇒ invisible to partition discovery, so a concurrent
-  * root reader can never see a retired copy as data); every entry
-  * point rolls parked subtrees forward.
+  * root reader never sees the staged fold or the retired copy as data);
+  * every entry point finishes a committed one.
   *
   * COMPACTOR rule (the writer rule's other half): at most ONE
   * compactor per store (per writer subtree in the multi-writer
   * layout) — in practice the subtree's own writer, folding between
   * its appends, which the flat modes' one-writer rule already gives
-  * for free. Concurrent folds of one subtree would race the two-rename
-  * swap itself. Epoch readers get a weaker, still-loud guarantee
+  * for free. Concurrent folds of one subtree would share its
+  * transaction directory, and the owner's next append drops a fold it
+  * did not commit. Epoch readers get a weaker, still-loud guarantee
   * against the one racer the rule does NOT exclude (a fold landing
   * while a [[mergedAsOfEpoch]] read is in flight): the read guards
   * watermark coverage twice — before planning and again after the
   * scan's file listing is pinned — so a fold landing between them is
   * caught as a thrown coverage error, and one landing after the
-  * second guard swaps the listed files away, failing the read's
+  * second guard retires the listed files, failing the read's
   * execution loudly (FileNotFound on a pinned file). Neither race can
   * yield a silent-partial snapshot; eliminating even the loud window
   * needs the one-compactor rule above.
@@ -122,8 +121,8 @@ object SegmentStore {
   private val XoMarker = "_GRAFT_XO"
 
   /** Marker file inside a [[compact]] fold segment, written BEFORE the
-    * swap publishes it. [[appendExactlyOnce]]'s crashed-partial branch
-    * keys on it: a fold whose Spark `_SUCCESS` is absent (committer
+    * commit marker publishes it. [[appendExactlyOnce]]'s crashed-partial
+    * branch keys on it: a fold whose Spark `_SUCCESS` is absent (committer
     * configured with marksuccessfuljobs=false, marker stripped by
     * tooling) must still never be mistaken for a crashed partial write
     * of a re-delivered batch at the watermark id — deleting it would
@@ -136,76 +135,22 @@ object SegmentStore {
     (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
   }
 
-  /** Staging siblings for the [[compact]] swap of `dst`. A writer
-    * subtree (`writer=<id>`) stages at HIDDEN names inside the store
-    * root — the leading dot keeps partition discovery from ever
-    * reading a retired copy as a `writer=<id>.old` partition value;
-    * a store root stages at plain siblings outside itself.
+  /** A writer subtree's fold transaction: `.writer=<id>.publish` inside
+    * the root ([[Publish.txnDir]] of `writer=<id>`).
     */
-  private def stagePaths(dst: HPath): (HPath, HPath) = {
-    val name = dst.getName
-    if (name.startsWith("writer="))
-      (new HPath(dst.getParent, s".$name.compacting"),
-        new HPath(dst.getParent, s".$name.old"))
-    else
-      (new HPath(dst.toString + ".compacting"),
-        new HPath(dst.toString + ".old"))
-  }
+  private val WriterTxn = """\.(writer=.+)\.publish""".r
 
-  /** SHARED roll-forward recovery for the [[compact]] swap — the form
-    * readers and OTHER writers run: a crash between compact's two
-    * renames leaves the store (or one writer's subtree) parked at its
-    * `.old` staging sibling with the live path absent — the data is
-    * intact but unaddressed; one rename restores it.
-    *
-    * The `.compacting` sibling is the IN-FLIGHT/RESUMABLE guard: while
-    * it exists, the parked state is either a fold racing its two
-    * renames RIGHT NOW (resurrecting the retired copy would make the
-    * owner's publish rename fail spuriously — the zero-coordination
-    * multi-writer race) or a crashed fold the path's OWNER resumes via
-    * [[recoverOwned]] at its next call — either way not this caller's
-    * to touch. A lost rename race (another recoverer got there first)
-    * is success, not failure: re-check the target before throwing.
-    * (Both-present means a crash after publish but before cleanup —
-    * the live path wins and the stale copy is dropped by the next
-    * compact of that path.)
+  /** What every entry point runs first: finish each committed
+    * [[compact]] of the store at `path`, the store's own and each writer
+    * subtree's. An uncommitted fold is left alone: it may still be
+    * staging, and its owner's next write drops it.
     */
-  private def recover(f: FileSystem, dst: HPath): Unit = {
-    val (tmp, old) = stagePaths(dst)
-    if (!f.exists(dst) && f.exists(old) && !f.exists(tmp)
-      && !f.rename(old, dst) && !f.exists(dst))
-      throw new java.io.IOException(s"compact recovery: cannot restore $old")
-    if (f.exists(dst)) f.listStatus(dst).foreach { st =>
-      val n = st.getPath.getName
-      if (n.startsWith(".writer=") && n.endsWith(".old")) {
-        val writerName = n.stripPrefix(".").stripSuffix(".old")
-        val target = new HPath(dst, writerName)
-        val compacting = new HPath(dst, s".$writerName.compacting")
-        if (!f.exists(target) && !f.exists(compacting)
-          && !f.rename(st.getPath, target) && !f.exists(target))
-          throw new java.io.IOException(
-            s"compact recovery: cannot restore ${st.getPath}")
-      }
-    }
-  }
-
-  /** OWNER roll-forward recovery — the form a path's OWN single writer
-    * runs from its append/compact entry points. Unlike [[recover]], a
-    * parked `.old` copy rolls forward even when a `.compacting`
-    * sibling survives: the owner is the only process that folds this
-    * path, so from inside the owner an in-flight fold is impossible —
-    * the surviving staging is a crashed fold's leftovers, dropped here
-    * and re-derived by the next compact. (This split is what keeps a
-    * crashed per-writer fold from parking that writer's subtree
-    * forever: root-level [[recover]] deliberately leaves it alone, the
-    * owner's next append or compact restores it.)
-    */
-  private def recoverOwned(f: FileSystem, dst: HPath): Unit = {
-    val (tmp, old) = stagePaths(dst)
-    if (!f.exists(dst) && f.exists(old)) {
-      f.delete(tmp, true) // crashed fold staging: stale, re-derived later
-      if (!f.rename(old, dst) && !f.exists(dst))
-        throw new java.io.IOException(s"compact recovery: cannot restore $old")
+  private def rollForward(spark: SparkSession, path: String): Unit = {
+    Publish.recover(spark, path)
+    val (f, p) = fs(spark, path)
+    if (f.exists(p)) f.listStatus(p).map(_.getPath.getName).foreach {
+      case WriterTxn(w) => Publish.recover(spark, s"$path/$w")
+      case _ =>
     }
   }
 
@@ -249,8 +194,8 @@ object SegmentStore {
     * RPC — bounded by the segment count the compaction policy caps).
     */
   def segmentIds(spark: SparkSession, path: String): Seq[Long] = {
+    rollForward(spark, path)
     val (f, p) = fs(spark, path)
-    recover(f, p)
     if (!f.exists(p)) Seq.empty
     else f.listStatus(p).toSeq
       .map(_.getPath.getName)
@@ -268,7 +213,7 @@ object SegmentStore {
   def append(partials: DataFrame, path: String): Unit = {
     val spark = partials.sparkSession
     val (f, p) = fs(spark, path)
-    recoverOwned(f, p) // the appender IS this path's owner
+    Publish.recoverForWrite(spark, path) // the appender IS this path's owner
     requireLayout(f, p, wantWriter = false, "append")
     val ids = segmentIds(spark, path)
     require(!isXo(f, path, ids),
@@ -304,7 +249,7 @@ object SegmentStore {
       batchId: Long): Boolean = {
     val spark = partials.sparkSession
     val (f, p) = fs(spark, path)
-    recoverOwned(f, p) // the appender IS this path's owner
+    Publish.recoverForWrite(spark, path) // the appender IS this path's owner
     requireLayout(f, p, wantWriter = false, "appendExactlyOnce")
     val ids = segmentIds(spark, path)
     val dst = new HPath(s"$path/seg=$batchId")
@@ -356,8 +301,8 @@ object SegmentStore {
     */
   def appendExactlyOnce(partials: DataFrame, path: String, writer: String,
       batchId: Long): Boolean = {
+    rollForward(partials.sparkSession, path)
     val (f, p) = fs(partials.sparkSession, path)
-    recover(f, p)
     requireLayout(f, p, wantWriter = true, "appendExactlyOnce(writer)")
     appendExactlyOnce(partials, writerPath(path, writer), batchId)
   }
@@ -423,8 +368,7 @@ object SegmentStore {
     */
   def merged(spark: SparkSession, path: String, keys: Seq[String],
       sumCol: String): DataFrame = {
-    val (f, p) = fs(spark, path)
-    recover(f, p)
+    rollForward(spark, path)
     spark.read.parquet(path)
       .groupBy(keys.map(col): _*)
       .agg(sum(sumCol).cast("long").as(sumCol))
@@ -458,8 +402,8 @@ object SegmentStore {
     */
   def mergedAsOf(spark: SparkSession, path: String, keys: Seq[String],
       sumCol: String, maxSeg: Long): DataFrame = {
+    rollForward(spark, path)
     val (f, p) = fs(spark, path)
-    recover(f, p)
     // a multi-writer store has one watermark PER WRITER — a global
     // `seg <= k` would mix unrelated id sequences (class doc)
     requireLayout(f, p, wantWriter = false, "mergedAsOf")
@@ -501,8 +445,8 @@ object SegmentStore {
     */
   def mergedAsOf(spark: SparkSession, path: String, keys: Seq[String],
       sumCol: String, watermarks: Map[String, Long]): DataFrame = {
+    rollForward(spark, path)
     val (f, p) = fs(spark, path)
-    recover(f, p)
     requireLayout(f, p, wantWriter = true, "mergedAsOf(watermarks)")
     require(watermarks.nonEmpty, "mergedAsOf: empty watermark vector")
     watermarks.keys.foreach(w => writerPath(path, w)) // validate ids
@@ -525,8 +469,8 @@ object SegmentStore {
     * to the frozen snapshot by construction.
     */
   def currentWatermarks(spark: SparkSession, path: String): Map[String, Long] = {
+    rollForward(spark, path)
     val (f, p) = fs(spark, path)
-    recover(f, p)
     requireLayout(f, p, wantWriter = true, "currentWatermarks")
     if (!f.exists(p)) return Map.empty
     f.listStatus(p).toSeq.map(_.getPath.getName)
@@ -549,7 +493,7 @@ object SegmentStore {
   /** Hidden manifest directory for COMMITTED epochs of a multi-writer
     * store. The leading dot keeps partition discovery from reading
     * manifests as a `epochs=...` partition value — the same hiding
-    * rule the `.writer=<id>.old` staging siblings use.
+    * rule the `.writer=<id>.publish` fold transactions use.
     */
   private def epochDir(p: HPath) = new HPath(p, ".epochs")
   private def epochFile(p: HPath, epoch: Long) =
@@ -680,12 +624,12 @@ object SegmentStore {
     // construction — the listing-pass TOCTOU — is caught here instead
     // of yielding the silent-partial snapshot the guard exists to
     // prevent. Remaining window (documented contract, not a check): a
-    // fold that lands AFTER this returns swaps the writer subtree away
-    // (parked at its dotted `.old` sibling), so the caller's later
-    // action fails loudly — FileNotFound on a pinned file — never as a
-    // silent-partial snapshot. Eliminating even that loud window needs
-    // the single-compactor-per-writer-path discipline the store's fold
-    // swap already assumes.
+    // fold that lands AFTER this returns retires the writer subtree
+    // (into its hidden transaction directory, then deleted), so the
+    // caller's later action fails loudly — FileNotFound on a pinned
+    // file — never as a silent-partial snapshot. Eliminating even that
+    // loud window needs the single-compactor-per-writer-path discipline
+    // the store's fold already assumes.
     snap.queryExecution.executedPlan // force listing + plan resolution
     guard()
     snap
@@ -708,8 +652,7 @@ object SegmentStore {
     * segment: bounded by the policy itself.
     */
   def segmentStats(spark: SparkSession, path: String): DataFrame = {
-    val (f, p) = fs(spark, path)
-    recover(f, p)
+    rollForward(spark, path)
     val df = spark.read.parquet(path)
     // multi-writer layout: report per (writer, segment) — collapsing
     // across writers would hide exactly the per-producer amplification
@@ -736,9 +679,7 @@ object SegmentStore {
     */
   def tombstoneStats(spark: SparkSession, path: String, keys: Seq[String],
       sumCol: String): DataFrame = {
-    val (f, p) = fs(spark, path)
-    recover(f, p)
-    val logical = merged(spark, path, keys, sumCol)
+    val logical = merged(spark, path, keys, sumCol) // rolls forward first
       .agg(count(lit(1)).as("n_keys"),
         sum(when(col(sumCol) === 0, 1).otherwise(0)).cast("long")
           .as("n_cancelled"),
@@ -750,9 +691,9 @@ object SegmentStore {
       .withColumn("tombstone_due", col("n_cancelled") > 0)
   }
 
-  /** Fold all segments into one, via sibling-temp-then-swap so the
-    * fold never overwrites its own input and a full copy of the store
-    * survives any single failure (see class doc).
+  /** Fold all segments into one, as one [[Publish]] transaction that
+    * replaces the store: the fold never overwrites its own input, and a
+    * read sees the old segments or the fold (see class doc).
     *
     * `dropCancelled = true` additionally removes keys whose partials
     * sum EXACTLY to zero — the physical reclaim for retraction
@@ -768,45 +709,33 @@ object SegmentStore {
     */
   def compact(spark: SparkSession, path: String, keys: Seq[String],
       sumCol: String, dropCancelled: Boolean = false): Unit = {
-    val (f, dst) = fs(spark, path)
-    recoverOwned(f, dst) // roll a crashed prior swap forward FIRST —
-    // only then is a surviving .old copy stale and safe to drop
-    // (owner form: compaction is owner-only, so a surviving
-    // .compacting sibling is always a crashed fold, never in-flight)
-    requireLayout(f, dst, wantWriter = false, "compact")
-    val (tmp, old) = stagePaths(dst)
-    f.delete(tmp, true)
-    f.delete(old, true)
-    // the fold keeps the MAX id it covers as its name — the
-    // processed-batch watermark [[appendExactlyOnce]] checks, so
-    // collapsing history never forgets which batch ids landed
-    val ids = segmentIds(spark, path)
-    val foldId = ids.lastOption.getOrElse(0L)
-    val xo = isXo(f, path, ids)
-    val folded = merged(spark, path, keys, sumCol)
-    val foldDir = s"$tmp/seg=$foldId"
-    (if (dropCancelled) folded.filter(col(sumCol) =!= 0) else folded)
-      .write.mode(SaveMode.Overwrite).parquet(foldDir)
-    // markers land BEFORE the swap publishes the fold: detectable as a
-    // fold (never a crashed partial) independent of Spark's _SUCCESS,
-    // and the store's exactly-once mode survives the collapse
-    touch(f, new HPath(foldDir, FoldMarker))
-    if (xo) touch(f, new HPath(foldDir, XoMarker))
-    if (!f.rename(dst, old))
-      throw new java.io.IOException(s"compact: cannot stage $dst aside")
-    if (!f.rename(tmp, dst)) {
-      f.rename(old, dst) // roll back; the store is intact either way
-      throw new java.io.IOException(s"compact: cannot publish $tmp")
+    rollForward(spark, path)
+    val (f, p) = fs(spark, path)
+    requireLayout(f, p, wantWriter = false, "compact")
+    Publish.commit(spark, path) { txn =>
+      // the fold keeps the MAX id it covers as its name — the
+      // processed-batch watermark [[appendExactlyOnce]] checks, so
+      // collapsing history never forgets which batch ids landed
+      val ids = segmentIds(spark, path)
+      val foldDir = s"$txn/fold/seg=${ids.lastOption.getOrElse(0L)}"
+      val folded = merged(spark, path, keys, sumCol)
+      (if (dropCancelled) folded.filter(col(sumCol) =!= 0) else folded)
+        .write.parquet(foldDir)
+      // markers land BEFORE the commit point: detectable as a fold (never
+      // a crashed partial) independent of Spark's _SUCCESS, and the
+      // store's exactly-once mode survives the collapse
+      touch(f, new HPath(foldDir, FoldMarker))
+      if (isXo(f, path, ids)) touch(f, new HPath(foldDir, XoMarker))
+      Seq(Publish.replace(s"$txn/fold", path))
     }
-    f.delete(old, true)
   }
 
   /** [[compact]] of one writer's subtree of a multi-writer store — the
-    * fold, its watermark, and the crash-safe swap all scope to that
-    * writer; other producers ingest concurrently, and a root reader
-    * during the swap sees either the subtree or nothing (its staging
-    * siblings are hidden from partition discovery), never a retired
-    * copy as data.
+    * fold, its watermark, and the crash-safe publish all scope to that
+    * writer; other producers ingest concurrently. The transaction is the
+    * hidden `.writer=<id>.publish` inside the root, which partition
+    * discovery skips, so a root reader while the fold stages, or after
+    * it crashed, sees the old subtree or the fold, never neither.
     */
   def compactWriter(spark: SparkSession, path: String, writer: String,
       keys: Seq[String], sumCol: String,

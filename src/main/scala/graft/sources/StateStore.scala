@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Literal, XxHash64}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -275,8 +275,10 @@ object StateStore {
     Publish.recover(spark, dir)
     val recorded = recordedBuckets(spark, dir)
     val n = recorded.getOrElse(DefaultBuckets)
-    val buckets = snaps.select(bucketCol(col("dist"), n)).distinct()
-      .collect().map(_.getLong(0)).toSeq // bounded by nBuckets, driver-safe
+    // deduped per partition, then on the driver: one job, no exchange
+    val buckets = snaps.select(bucketCol(col("dist"), n)).as(Encoders.scalaLong)
+      .mapPartitions(_.toSet.iterator)(Encoders.scalaLong)
+      .collect().distinct.sorted.toSeq // bounded by nBuckets, driver-safe
     if (buckets.isEmpty) return
     val counts = readBuckets(spark, dir, n, buckets)
       .select(col("dist"), col("bin"), col("count"), col(BucketCol), lit(0).as("src"))

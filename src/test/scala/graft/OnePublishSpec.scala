@@ -5,10 +5,10 @@ import java.io.File
 import org.scalatest.funsuite.AnyFunSuite
 
 /** One publish: stores replace paths only through
-  * [[graft.sources.Publish]]. `SegmentStore` keeps its own compact swap,
-  * whose root recovery rolls back and defers to a fold in flight. Only
-  * `Publish` renames through Hadoop's `FileContext`: on a local store it
-  * moves paths without it.
+  * [[graft.sources.Publish]], so no other source renames or moves a
+  * path, through Hadoop, `java.io` or `java.nio`. Only `Publish`
+  * renames through Hadoop's `FileContext`: on a local store it moves
+  * paths without it.
   */
 class OnePublishSpec extends AnyFunSuite {
 
@@ -31,9 +31,9 @@ class OnePublishSpec extends AnyFunSuite {
     } yield s"${f.getPath}:${i + 1}: ${line.trim}"
   }
 
-  test("no source outside Publish and SegmentStore renames a path or sets partitionOverwriteMode") {
-    val found = offenders(Set("Publish.scala", "SegmentStore.scala"))(line =>
-      line.contains(".rename(") || line.contains("partitionOverwriteMode"))
+  test("no source outside Publish renames a path or sets partitionOverwriteMode") {
+    val found = offenders(Set("Publish.scala"))(line =>
+      Seq(".rename(", "renameTo(", "Files.move(", "partitionOverwriteMode").exists(line.contains))
     assert(found.isEmpty, found.mkString("\n"))
   }
 

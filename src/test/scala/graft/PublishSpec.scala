@@ -69,8 +69,11 @@ class PublishSpec extends AnyFunSuite {
   /** Crash `publish` at every step. `prepare` builds the store before
     * the publish; `observe` is a read of the store, returning its
     * visible state; `publish` is rerun as the store's next write.
+    * `root` maps the store to the root the publish replaces under, and
+    * `check` runs against the published store once it is whole.
     */
-  private def crashEverywhere[S](name: String)(prepare: String => Unit)(
+  private def crashEverywhere[S](name: String, root: String => String = identity,
+      check: String => Unit = _ => ())(prepare: String => Unit)(
       publish: String => Unit)(observe: String => S): Unit = {
     val base = Files.createTempDirectory(s"graft_crash_${name}_").toString
     def store(d: String) = s"crash://$base/$d"
@@ -83,6 +86,7 @@ class PublishSpec extends AnyFunSuite {
     val (neu, healthy) = publishWarnings(observe(store("clean")))
     assert(healthy.isEmpty, s"$name: a healthy read logged $healthy")
     assert(neu != old, s"$name: the publish changed nothing")
+    check(store("clean"))
     val marker = steps.indexWhere(s =>
       s.startsWith("rename ") && s.endsWith(s"/${Publish.Marker}")) + 1
     assert(marker > 0, s"$name: no commit marker among ${steps.mkString("; ")}")
@@ -91,7 +95,7 @@ class PublishSpec extends AnyFunSuite {
     for (k <- 1 to steps.size) {
       val dir = store(s"k$k")
       copyTree(s"$base/seed", s"$base/k$k")
-      val txn = Publish.txnDir(dir)
+      val txn = Publish.txnDir(root(dir))
       val fs = txn.getFileSystem(spark.sparkContext.hadoopConfiguration)
       CrashFs.arm(k)
       val crashed = scala.util.Try(publish(dir))
@@ -121,6 +125,7 @@ class PublishSpec extends AnyFunSuite {
         if (parkedTxn) recovered(dropped, "dropping the uncommitted")
         else assert(dropped.isEmpty, s"$at: logged $dropped")
       }
+      check(dir)
     }
   }
 
@@ -187,6 +192,54 @@ class PublishSpec extends AnyFunSuite {
       Seq("a", "b"), BpeStore.Meta(2L, 12L, 28L))) { dir =>
       (BpeStore.load(spark, dir), BpeStore.loadAlphabet(spark, dir),
         BpeStore.loadMeta(spark, dir))
+    }
+  }
+
+  private def segBatch(rows: (String, Long)*): DataFrame = {
+    import spark.implicits._
+    rows.toDF("k", "c")
+  }
+
+  /** A segment store's visible state: its merged rows, and per subtree
+    * (the root, or each writer's) the live segment ids with the
+    * `_GRAFT_*` markers each holds.
+    */
+  private def segState(dir: String, subs: Seq[String]) = {
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    (SegmentStore.merged(spark, dir, Seq("k"), "c").collect().toSet,
+      subs.map(sub => SegmentStore.segmentIds(spark, sub).map { id =>
+        id -> fs.listStatus(new Path(s"$sub/seg=$id")).map(_.getPath.getName)
+          .filter(_.startsWith("_GRAFT_")).toSet
+      }))
+  }
+
+  test("SegmentStore compact of a flat exactly-once store: a crash at any step leaves the old segments or the fold") {
+    // a re-delivered batch stays ingested once, folded or not
+    crashEverywhere("segment", check = dir => for (b <- 0L to 1L)
+      assert(!SegmentStore.appendExactlyOnce(segBatch("a" -> 9L), dir, b), s"batch $b re-ingested")) { dir =>
+      assert(SegmentStore.appendExactlyOnce(segBatch("a" -> 1L, "b" -> 2L), dir, 0L))
+      assert(SegmentStore.appendExactlyOnce(segBatch("a" -> 4L, "c" -> 0L), dir, 1L))
+    }(SegmentStore.compact(spark, _, Seq("k"), "c")) { dir =>
+      val st = segState(dir, Seq(dir))
+      assert(Set(Seq(0L -> Set("_GRAFT_XO"), 1L -> Set("_GRAFT_XO")),
+        Seq(1L -> Set("_GRAFT_XO", "_GRAFT_FOLD"))).contains(st._2.head), st)
+      assert(st._1 == Set(Row("a", 5L), Row("b", 2L), Row("c", 0L)), st)
+      st
+    }
+  }
+
+  test("SegmentStore compactWriter on a two-writer store: a crash at any step leaves the old subtree or the fold") {
+    crashEverywhere("writer", root = SegmentStore.writerPath(_, "wa"), check = dir => for (b <- 0L to 1L)
+      assert(!SegmentStore.appendExactlyOnce(segBatch("a" -> 9L), dir, "wa", b), s"batch $b re-ingested")) { dir =>
+      assert(SegmentStore.appendExactlyOnce(segBatch("a" -> 1L), dir, "wa", 0L))
+      assert(SegmentStore.appendExactlyOnce(segBatch("a" -> 2L, "b" -> 3L), dir, "wa", 1L))
+      assert(SegmentStore.appendExactlyOnce(segBatch("b" -> 5L), dir, "wb", 0L))
+    }(SegmentStore.compactWriter(spark, _, "wa", Seq("k"), "c")) { dir =>
+      val st = segState(dir, Seq("wa", "wb").map(SegmentStore.writerPath(dir, _)))
+      assert(Set(Seq(0L -> Set("_GRAFT_XO"), 1L -> Set("_GRAFT_XO")),
+        Seq(1L -> Set("_GRAFT_XO", "_GRAFT_FOLD"))).contains(st._2.head), st)
+      assert(st._1 == Set(Row("a", 3L), Row("b", 8L)), st)
+      st
     }
   }
 

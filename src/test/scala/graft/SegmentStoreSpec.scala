@@ -1,6 +1,8 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -10,9 +12,9 @@ import graft.sources.SegmentStore
 
 /** Log-structured segment mechanics: one seg=N directory per append,
   * read-time merge across segments, the auto-compaction policy's hard
-  * bound, and the sibling-temp-then-swap compact (no in-place
-  * overwrite: a full copy of the store exists at every instant, and no
-  * orphan staging dirs survive a successful fold).
+  * bound, and the compact published through [[graft.sources.Publish]]
+  * (no in-place overwrite: a full copy of the store exists at every
+  * instant, and no staging survives a successful fold).
   */
 class SegmentStoreSpec extends AnyFunSuite {
 
@@ -284,7 +286,7 @@ class SegmentStoreSpec extends AnyFunSuite {
     val m = SegmentStore.merged(spark, path, Seq("k"), "c")
       .orderBy("k").collect().map(r => (r.getString(0), r.getLong(1)))
     assert(m.toSeq == Seq("a" -> 3L, "b" -> 7L))
-    // neither the .compacting staging dir nor the .old copy survives
+    // no transaction directory survives
     val parent = new java.io.File(path).getParentFile
     val names = parent.listFiles.map(_.getName).toSet
     assert(names == Set("segments"), s"staging debris: $names")
@@ -400,20 +402,29 @@ class SegmentStoreSpec extends AnyFunSuite {
     }
   }
 
+  private def mergedRows(path: String): Seq[(String, Long)] =
+    SegmentStore.merged(spark, path, Seq("k"), "c")
+      .orderBy("k").collect().map(r => (r.getString(0), r.getLong(1))).toSeq
+
   test("a crashed per-writer fold swap rolls forward on the next store access; hidden staging is invisible to readers") {
-    val path = tmpStore
+    CrashFs.register(spark)
+    val local = tmpStore
+    val path = s"crash://$local"
     assert(SegmentStore.appendExactlyOnce(batch("a" -> 1L), path, "wa", 0L))
+    assert(SegmentStore.appendExactlyOnce(batch("a" -> 2L), path, "wa", 1L))
     assert(SegmentStore.appendExactlyOnce(batch("b" -> 2L), path, "wb", 0L))
-    // simulate a crash between compactWriter's two renames: wa's
-    // subtree parked at its hidden .old sibling, live path absent
-    val live = new java.io.File(s"$path/writer=wa")
-    val parked = new java.io.File(s"$path/.writer=wa.old")
-    assert(live.renameTo(parked))
-    // a root read rolls the subtree forward and sees the full store
-    val m = SegmentStore.merged(spark, path, Seq("k"), "c")
-      .orderBy("k").collect().map(r => (r.getString(0), r.getLong(1)))
-    assert(m.toSeq == Seq("a" -> 1L, "b" -> 2L))
-    assert(new java.io.File(s"$path/writer=wa").exists() && !parked.exists())
+    // crash past the commit marker, at the move that puts the fold in
+    // place: wa's live subtree is retired into its hidden transaction
+    CrashFs.crashWhere(CrashFs.renameOnto(s"$path/writer=wa")) {
+      SegmentStore.compactWriter(spark, path, "wa", Seq("k"), "c")
+    }
+    val live = new java.io.File(s"$local/writer=wa")
+    val txn = new java.io.File(s"$local/.writer=wa.publish")
+    assert(!live.exists() && txn.exists())
+    // a root read rolls the fold forward and sees the full store
+    assert(mergedRows(path) == Seq("a" -> 3L, "b" -> 2L))
+    assert(live.exists() && !txn.exists())
+    assert(SegmentStore.segmentIds(spark, SegmentStore.writerPath(path, "wa")) == Seq(1L))
   }
 
   test("multi-writer policy appends: the fold bound holds per writer; counts survive") {
@@ -702,38 +713,36 @@ class SegmentStoreSpec extends AnyFunSuite {
     assert(e.getMessage.contains("plain-append"))
   }
 
-  test("cross-writer recovery leaves an in-flight fold alone: a parked subtree with a .compacting sibling is the owner's to resume") {
-    import java.nio.file.{Files => JF, Paths, StandardCopyOption}
-    val path = tmpStore
+  test("an uncommitted per-writer fold is left to its owner's next append") {
+    CrashFs.register(spark)
+    val local = tmpStore
+    val path = s"crash://$local"
     assert(SegmentStore.appendExactlyOnce(batch("a" -> 1L), path, "wa", 0L))
     assert(SegmentStore.appendExactlyOnce(batch("a" -> 2L), path, "wa", 1L))
     assert(SegmentStore.appendExactlyOnce(batch("b" -> 4L), path, "wb", 0L))
-    // simulate wa's compact crashed (or racing) between its two renames:
-    // subtree parked at .writer=wa.old, fold staged at .writer=wa.compacting
-    SegmentStore.compactWriter(spark, path, "wa", Seq("k"), "c")
-    JF.move(Paths.get(s"$path/writer=wa"),
-      Paths.get(s"$path/.writer=wa.compacting"),
-      StandardCopyOption.ATOMIC_MOVE) // stand-in complete fold staging
-    assert(SegmentStore.appendExactlyOnce(batch("a" -> 100L), path, "wa2", 0L))
-    JF.move(Paths.get(s"$path/writer=wa2"), Paths.get(s"$path/.writer=wa.old"),
-      StandardCopyOption.ATOMIC_MOVE) // stand-in retired pre-fold copy
-    // ANOTHER producer's ingest (root-level shared recovery) must NOT
-    // resurrect wa's parked copy while the .compacting sibling exists
+    // wa's fold crashes at its commit marker (or is still staging): the
+    // fold is staged in the hidden transaction, nothing live has moved
+    CrashFs.crashWhere(s => s.startsWith("rename ") &&
+        s.endsWith(s"/${graft.sources.Publish.Marker}")) {
+      SegmentStore.compactWriter(spark, path, "wa", Seq("k"), "c")
+    }
+    val txn = Paths.get(s"$local/.writer=wa.publish")
+    def staged = Files.walk(txn).iterator().asScala.map(p => (txn.relativize(p).toString,
+      if (Files.isRegularFile(p)) Files.size(p) else -1L)).toSet
+    val parked = staged
+    assert(parked.exists(_._1.startsWith("fold/seg=1/part-")), parked)
+    // ANOTHER producer's ingest must leave wa's fold alone
     assert(SegmentStore.appendExactlyOnce(batch("b" -> 6L), path, "wb", 1L))
-    assert(!JF.exists(Paths.get(s"$path/writer=wa")),
-      "shared recovery resurrected a subtree whose fold is in flight")
-    // ...and a root READER sees only the live writers meanwhile
-    val mid = SegmentStore.merged(spark, path, Seq("k"), "c")
-      .orderBy("k").collect().map(r => (r.getString(0), r.getLong(1)))
-    assert(mid.toSeq == Seq("b" -> 10L))
-    // the OWNER's next entry point resumes: parked copy rolls forward,
-    // stale fold staging dropped, and its ingest lands on top
+    assert(staged == parked, "another writer touched an uncommitted fold")
+    // ...and a root READER sees every writer's rows meanwhile
+    assert(mergedRows(path) == Seq("a" -> 3L, "b" -> 10L))
+    assert(staged == parked, "a reader touched an uncommitted fold")
+    // the OWNER's next entry point drops the stale fold staging, and its
+    // ingest lands on top
     assert(SegmentStore.appendExactlyOnce(batch("a" -> 5L), path, "wa", 2L))
-    assert(!JF.exists(Paths.get(s"$path/.writer=wa.old")))
-    assert(!JF.exists(Paths.get(s"$path/.writer=wa.compacting")))
-    val m = SegmentStore.merged(spark, path, Seq("k"), "c")
-      .orderBy("k").collect().map(r => (r.getString(0), r.getLong(1)))
-    assert(m.toSeq == Seq("a" -> 105L, "b" -> 10L))
+    assert(!Files.exists(txn))
+    assert(SegmentStore.segmentIds(spark, SegmentStore.writerPath(path, "wa")) == Seq(0L, 1L, 2L))
+    assert(mergedRows(path) == Seq("a" -> 8L, "b" -> 10L))
   }
 
   test("global as-of at a vector watermark == the union of per-writer snapshots; takedowns audit in one call") {

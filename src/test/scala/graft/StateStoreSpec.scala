@@ -24,10 +24,11 @@ class StateStoreSpec extends AnyFunSuite {
 
   private def tmpDir = Files.createTempDirectory("graft_state_").toString
 
-  /** Spark jobs of an upsert: the bucket collect, then the counts and
-    * the meta write, each a shuffle and its write.
+  /** Spark jobs of an upsert: the bucket collect (deduped per
+    * partition, no shuffle), then the counts and the meta write, each a
+    * shuffle and its write.
     */
-  private val UpsertJobs = 6
+  private val UpsertJobs = 5
 
   private def fixture: ForgetTable =
     ForgetTable.fromEvents(Tables.events(spark, "/root/testdata/sf0.001"))
