@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.LongRefExpr
+
 /** Read-time decay/query parameters (one reference HTTP request's knobs).
   *
   * @param rate     decays per second (`-default-rate`, goforget/forget.go:22)
@@ -52,9 +54,11 @@ final case class ForgetParams(
   *   - Top-K uses `row_number` over (dist, count desc) + `<= k` filter,
   *     which Spark's WindowGroupLimit rewrites into a per-partition
   *     group-limit before the shuffle — distributed partial top-K.
-  *   - All decay arithmetic is built from `functions._` columns plus the
-  *     codegen `PoissonDecayExpr`, so every read path — including Sampled
-  *     mode — stays inside whole-stage codegen.
+  *   - All decay arithmetic is [[Decay.amount]]: `functions._` columns
+  *     plus the codegen `PoissonDecayExpr`, so every read path — including
+  *     Sampled mode — stays inside whole-stage codegen. `nowEpoch` enters
+  *     the plan as a `LongRefExpr`, which generated code reads by
+  *     reference, so reads at different clocks share compiled classes.
   */
 final class ForgetTable(val counts: DataFrame, val meta: DataFrame) {
 
@@ -184,7 +188,7 @@ final class ForgetTable(val counts: DataFrame, val meta: DataFrame) {
     val survivors = decayed.filter(col("new_count") > 0L)
       .select(col("dist"), col("bin"), col("new_count").as("count"))
     val newMeta = survivors.groupBy("dist").agg(sum("count").as("z"))
-      .withColumn("t", lit(params.nowEpoch))
+      .withColumn("t", LongRefExpr.lit(params.nowEpoch))
       .withColumn("rate", lit(params.rate))
     new ForgetTable(survivors, newMeta)
   }
@@ -208,10 +212,8 @@ final class ForgetTable(val counts: DataFrame, val meta: DataFrame) {
     val decayed = withDecayedCount(joinMeta(counts), params)
     decayed.filter(col("new_count") > 0L)
       .groupBy("dist").agg(max("new_count").as("max_count"))
-      .withColumn("eta", sqrt(col("max_count").cast("double") / lit(params.rate)))
-      .withColumn("expire_sec",
-        floor((lit(params.sigma) + col("eta")) * col("eta")).cast("long"))
-      .withColumn("expire_at", lit(params.nowEpoch) + col("expire_sec"))
+      .withColumn("expire_sec", ttlSec(col("max_count"), params))
+      .withColumn("expire_at", LongRefExpr.lit(params.nowEpoch) + col("expire_sec"))
       .select("dist", "max_count", "expire_sec", "expire_at")
       .orderBy("dist")
   }
@@ -224,10 +226,8 @@ final class ForgetTable(val counts: DataFrame, val meta: DataFrame) {
     val decayed = withDecayedCount(joinMeta(counts), params)
     val exp = decayed.filter(col("new_count") > 0L)
       .groupBy(col("dist"), col("t")).agg(max("new_count").as("max_count"))
-      .withColumn("eta", sqrt(col("max_count").cast("double") / lit(params.rate)))
-      .withColumn("expire_at",
-        col("t") + floor((lit(params.sigma) + col("eta")) * col("eta")).cast("long"))
-    exp.filter(lit(params.nowEpoch) < col("expire_at")).select("dist")
+      .withColumn("expire_at", col("t") + ttlSec(col("max_count"), params))
+    exp.filter(LongRefExpr.lit(params.nowEpoch) < col("expire_at")).select("dist")
   }
 
   // -------------------------------------------------------------- helpers
@@ -241,23 +241,15 @@ final class ForgetTable(val counts: DataFrame, val meta: DataFrame) {
   private def joinMeta(df: DataFrame): DataFrame =
     df.join(meta.select("dist", "z", "t"), "dist")
 
-  private def seedCol(params: ForgetParams): Column =
-    xxhash64(col("dist"), col("bin"), lit(params.nowEpoch))
-
   /** Adds `l` (clamped decay) and `new_count` columns. */
-  private def withDecayedCount(df: DataFrame, params: ForgetParams): DataFrame = {
-    val dt = lit(params.nowEpoch) - col("t")
-    val raw = Decay.rawAmount(params.mode, col("count"), dt, params.rate, seedCol(params))
-    params.mode match {
-      case DecayMode.Proportional =>
-        // pyforget clamp: floor the decayed value at 1 (distribution.py:60)
-        df.withColumn("l_raw", raw)
-          .withColumn("new_count", Decay.newCountPy(col("l_raw"), col("count")))
-          .withColumn("l", col("count") - col("new_count"))
-      case _ =>
-        df.withColumn("l", Decay.clampGo(raw, col("count"), params.prune))
-          .withColumn("new_count", col("count") - col("l"))
-    }
+  private def withDecayedCount(df: DataFrame, params: ForgetParams): DataFrame =
+    df.withColumn("l", Decay.amount(params, col("dist"), col("bin"), col("count"), col("t")))
+      .withColumn("new_count", col("count") - col("l"))
+
+  /** O9 TTL in seconds, `floor((sigma + eta) * eta)` (see [[expiry]]). */
+  private def ttlSec(maxCount: Column, params: ForgetParams): Column = {
+    val eta = sqrt(maxCount.cast("double") / lit(params.rate))
+    floor((lit(params.sigma) + eta) * eta).cast("long")
   }
 
   /** Decay the (already selected) rows against the STORED Z: the /get and

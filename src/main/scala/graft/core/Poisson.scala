@@ -18,8 +18,9 @@ package graft.core
   * `(lambda, seed)`. Spark recomputes partitions on task retry and on
   * stage re-execution; a non-deterministic expression would yield
   * different results per attempt and corrupt exactly-once sinks. Seeding
-  * per-row (e.g. `xxhash64(dist, bin, now)`) keeps the distributional
-  * behaviour while staying replay-stable.
+  * per-row — with the one seed [[Decay]] defines for batch and stream,
+  * `xxhash64(dist, bin, now)` — keeps the distributional behaviour while
+  * staying replay-stable.
   */
 object Poisson {
   final val MaxIter = 1000
@@ -58,27 +59,14 @@ object Poisson {
   def sample(lambda: Double, seed: Long): Int =
     sampleWithUniform(lambda, uniform(seed))
 
-  /** Seeded draw with the `-1 => 0` caller contract applied
-    * (`goforget/decay.go:50-54`: a non-converged sample decays nothing).
-    * Static entry point for generated code — see
-    * `graft.functions.PoissonDecayExpr`.
+  /** The one decay draw: the seeded sample with the `-1 => 0` caller
+    * contract applied (`goforget/decay.go:50-54`: a non-converged sample
+    * decays nothing). [[Decay]] adds the `count < 1 => 0` rule
+    * (`decay.go:41-43`) around it, once for generated code (through
+    * `graft.functions.PoissonDecayExpr`) and once for the stream.
     */
   def decayDraw(lambda: Double, seed: Long): Long = {
     val k = sampleWithUniform(lambda, uniform(seed))
-    if (k == -1) 0L else k.toLong
-  }
-
-  /** Decay amount for one bin, mirroring `goforget/decay.go:40-56`
-    * (`DecayTime`): count < 1 decays by 0; a non-converged sample (-1)
-    * decays by 0; otherwise the Poisson draw with lambda = rate * dtSec.
-    * The draw is INDEPENDENT of the bin's count — every bin of a
-    * distribution loses the same expected number of counts per second
-    * (goforget semantics; contrast pyforget's proportional variant,
-    * `pyforget/distribution.py:29`).
-    */
-  def decayAmount(count: Long, rate: Double, dtSec: Long, seed: Long): Long = {
-    if (count < 1) return 0L
-    val k = sample(rate * dtSec.toDouble, seed)
     if (k == -1) 0L else k.toLong
   }
 }

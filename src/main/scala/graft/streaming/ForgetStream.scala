@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{Dataset, Encoders}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-import graft.core.Poisson
+import graft.core.Decay
 
 /** Per-distribution streaming state — the live analog of the reference's
   * three Redis keys (counts sorted-set, `._Z`, `._T`;
@@ -44,7 +44,9 @@ object FtRequest {
   *   - increments merge into the counts map, bump Z, SETNX T
   *   - every update lazily decays the distribution (seeded Poisson — the
   *     reference's stochastic semantics, but replay-stable so micro-batch
-  *     retries converge) and prunes empty bins
+  *     retries converge) and prunes empty bins. The decay is
+  *     [[graft.core.Decay.sampler]], the batch reads' Sampled mode: the
+  *     same seed, `dt` and clamp, so stream and store decay alike
   *   - the state timeout is set to the O9 expiry formula
   *     `(sigma + eta) * eta`, `eta = sqrt(maxCount / rate)` — on timeout
   *     the state is removed, exactly Redis `EXPIRE` of all three keys
@@ -68,31 +70,20 @@ object ForgetStream {
   def transition(dist: String, incrs: Seq[FtRequest], prev: Option[DistState],
                  nowSec: Long, p: Params): DistState = {
     val base = prev.getOrElse(DistState(Map.empty, 0L, incrs.headOption.map(_.tsSec).getOrElse(nowSec)))
-    // ZINCRBY + INCRBY: counts and Z grow by the batch's increments
+    // ZINCRBY: counts grow by the batch's increments (settle re-sums Z)
     val merged = incrs.foldLeft(base.counts) { (m, e) =>
       m.updated(e.bin, m.getOrElse(e.bin, 0L) + e.n)
     }
-    val z = base.z + incrs.map(_.n).sum
     // lazy decay at read-repair time (UpdateDistribution: Fill -> Decay ->
     // Normalize; goforget/redis_utils.go:146-152)
-    val dt = math.max(0L, nowSec - base.t)
-    val decayed = merged.map { case (bin, count) => bin -> decayBin(dist, bin, count, dt, nowSec, p) }
-    val pruned = if (p.prune) decayed.filter(_._2 > 0L) else decayed
-    DistState(pruned, pruned.values.sum, nowSec)
+    val decay = Decay.sampler(dist, base.t, nowSec, p.rate, p.prune)
+    settle(merged.map { case (bin, count) => bin -> decay(bin, count) }, nowSec, p)
   }
 
-  /** One bin's count after `dt` seconds of seeded Poisson decay, with the
-    * goforget clamp: a draw that would take the bin to or below zero
-    * removes it (prune) or leaves 1.
-    */
-  private def decayBin(dist: String, bin: String, count: Long, dt: Long, nowSec: Long,
-                       p: Params): Long = {
-    val seed = scala.util.hashing.MurmurHash3.stringHash(s"$dist:$bin").toLong ^ (nowSec << 20)
-    val raw = Poisson.decayAmount(count, p.rate, dt, seed)
-    val l =
-      if (raw >= count) { if (p.prune) count else count - 1 }
-      else raw
-    count - l
+  /** The write-back after a decay: prune, `Z = Σ counts`, `T = now`. */
+  private def settle(counts: Map[String, Long], nowSec: Long, p: Params): DistState = {
+    val kept = if (p.prune) counts.filter(_._2 > 0L) else counts
+    DistState(kept, kept.values.sum, nowSec)
   }
 
   /** Partial read-repair: decay ONLY the `k` most-probable bins and
@@ -116,13 +107,11 @@ object ForgetStream {
     */
   def topKDecay(dist: String, s: DistState, k: Int, nowSec: Long,
                 p: Params): (DistState, Seq[(String, Long)]) = {
-    val dt = math.max(0L, nowSec - s.t)
+    val decay = Decay.sampler(dist, s.t, nowSec, p.rate, p.prune)
     val head = s.counts.toSeq.sortBy { case (b, c) => (-c, b) }(
       Ordering.Tuple2(Ordering.Long, Ordering.String.reverse)).take(k)
-    val decayedHead = head.map { case (bin, count) => bin -> decayBin(dist, bin, count, dt, nowSec, p) }
-    val merged = s.counts ++ decayedHead
-    val pruned = if (p.prune) merged.filter(_._2 > 0L) else merged
-    (DistState(pruned, pruned.values.sum, nowSec), decayedHead)
+    val decayedHead = head.map { case (bin, count) => bin -> decay(bin, count) }
+    (settle(s.counts ++ decayedHead, nowSec, p), decayedHead)
   }
 
   /** Fold a micro-batch of mixed requests through the state, mirroring

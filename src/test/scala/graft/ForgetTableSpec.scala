@@ -108,6 +108,20 @@ class ForgetTableSpec extends AnyFunSuite {
     assert(a.toSeq == b.toSeq)
   }
 
+  test("a read at a clock before the dist's t decays nothing, in every mode (dt = max(0, now - t))") {
+    val stored = Map(("colors", "red") -> 3L, ("colors", "blue") -> 1L, ("pets", "cat") -> 5L)
+    for (mode <- Seq(DecayMode.Expected, DecayMode.Proportional, DecayMode.Sampled);
+         prune <- Seq(true, false)) {
+      val p = ForgetParams(rate = 0.5, nowEpoch = T0 - 1000, prune = prune, mode = mode)
+      val read = fixture.dist(p).collect()
+        .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
+      val state = fixture.decayedState(p).collect()
+        .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
+      assert(read == stored, s"$mode prune=$prune")
+      assert(state == stored, s"$mode prune=$prune")
+    }
+  }
+
   test("proportional mode decays big bins faster and floors at 1 (pyforget)") {
     import spark.implicits._
     val counts = Seq(("d", "big", 1000L), ("d", "small", 2L)).toDF("dist", "bin", "count")

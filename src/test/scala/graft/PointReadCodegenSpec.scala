@@ -9,11 +9,11 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.core.{ForgetParams, ForgetTable}
 import graft.sources.{StateStore, Tables}
 
-/** A warm point read compiles nothing: the distribution name and its
-  * bucket reach the generated code only as references, never as
-  * literals, so a read of another distribution reuses every class the
-  * first read compiled (with the codegen cache sized in
-  * [[graft.sources.GraftSession]]).
+/** A warm point read compiles nothing: the distribution name, its
+  * bucket and the read's `nowEpoch` reach the generated code only as
+  * references, never as literals, so a read of another distribution, or
+  * at another clock, reuses every class the first read compiled (with
+  * the codegen cache sized in [[graft.sources.GraftSession]]).
   */
 class PointReadCodegenSpec extends AnyFunSuite {
 
@@ -36,11 +36,11 @@ class PointReadCodegenSpec extends AnyFunSuite {
     val before = compiles
     reads(b, Seq("2", "5", "absent"), params).foreach(_.collect())
     assert(compiles - before == 0, "a warm point read compiled generated classes")
-    // `nowEpoch` is a long literal inlined into the decay arithmetic, so
-    // a later `now` does compile; reported, not pinned
+    // `nowEpoch` too is a reference (`LongRefExpr`), so a later `now`
+    // reuses the same classes
     val warm = compiles
     reads(b, Seq("2", "5", "absent"), params.copy(nowEpoch = params.nowEpoch + 1))
       .foreach(_.collect())
-    info(s"get + topK + dist at a new nowEpoch compiled ${compiles - warm} classes")
+    assert(compiles - warm == 0, "a point read at a new nowEpoch compiled generated classes")
   }
 }

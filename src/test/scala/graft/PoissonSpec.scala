@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.core.Poisson
+import graft.core.{Decay, Poisson}
 
 /** Unit + property-style tests for the seeded Poisson sampler, mirroring
   * the guard structure of the reference sampler (goforget/decay.go:12-34).
@@ -51,15 +51,15 @@ class PoissonSpec extends AnyFunSuite {
     }
   }
 
-  test("decayAmount: count < 1 decays by 0 (decay.go:41-43)") {
-    assert(Poisson.decayAmount(0L, 0.5, 100000L, 42L) == 0L)
-    assert(Poisson.decayAmount(-3L, 0.5, 100000L, 42L) == 0L)
+  test("Decay.draw: count < 1 decays by 0 (decay.go:41-43)") {
+    assert(Decay.draw(0L, 0.5 * 100000L, 42L) == 0L)
+    assert(Decay.draw(-3L, 0.5 * 100000L, 42L) == 0L)
   }
 
-  test("decayAmount is independent of count when count >= 1 (goforget semantics)") {
+  test("Decay.draw is independent of count when count >= 1 (goforget semantics)") {
     for ((c1, c2, dt) <- cases(500)(r =>
         (1L + r.nextInt(1000000), 1L + r.nextInt(1000000), 1L + r.nextInt(30)))) {
-      assert(Poisson.decayAmount(c1, 0.3, dt, 5L) == Poisson.decayAmount(c2, 0.3, dt, 5L))
+      assert(Decay.draw(c1, 0.3 * dt, 5L) == Decay.draw(c2, 0.3 * dt, 5L))
     }
   }
 

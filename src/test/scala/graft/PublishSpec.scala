@@ -6,10 +6,10 @@ import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.Path
-import org.apache.logging.log4j.LogManager
+import org.apache.logging.log4j.{Level, LogManager}
 import org.apache.logging.log4j.core.{LogEvent, Logger => CoreLogger}
 import org.apache.logging.log4j.core.appender.AbstractAppender
-import org.apache.logging.log4j.core.config.Property
+import org.apache.logging.log4j.core.config.{Configurator, Property}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -50,6 +50,20 @@ class PublishSpec extends AnyFunSuite {
     finally { logger.removeAppender(appender); appender.stop() }
   }
 
+  /** Spark logs each crash injected into a job commit with its full
+    * stack: an ERROR from the writer and two WARNs from the commit
+    * protocol's aborts. [[crashEverywhere]] silences these two loggers
+    * while it runs; every other test keeps logging write failures.
+    */
+  private def quietInjectedCrashes[T](body: => T): T = {
+    val loggers = Seq("org.apache.spark.sql.execution.datasources.FileFormatWriter",
+      "org.apache.spark.sql.execution.datasources.SQLHadoopMapReduceCommitProtocol")
+    val levels = loggers.map(n => n -> LogManager.getLogger(n).getLevel)
+    loggers.foreach(Configurator.setLevel(_, Level.OFF))
+    try body
+    finally levels.foreach { case (n, l) => Configurator.setLevel(n, l) }
+  }
+
   private def copyTree(from: String, to: String): Unit = {
     val src = Paths.get(from)
     Files.walk(src).iterator().asScala.foreach { p =>
@@ -74,7 +88,7 @@ class PublishSpec extends AnyFunSuite {
     */
   private def crashEverywhere[S](name: String, root: String => String = identity,
       check: String => Unit = _ => ())(prepare: String => Unit)(
-      publish: String => Unit)(observe: String => S): Unit = {
+      publish: String => Unit)(observe: String => S): Unit = quietInjectedCrashes {
     val base = Files.createTempDirectory(s"graft_crash_${name}_").toString
     def store(d: String) = s"crash://$base/$d"
     prepare(store("seed"))

@@ -457,6 +457,44 @@ class StateStoreSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
+  test("warm restart at a non-zero rate: the stream's read-repair equals the batch Sampled compaction") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import graft.core.DecayMode
+    import graft.streaming.{BinSnapshot, ForgetStream, FtRequest}
+    implicit val sqlCtx = spark.sqlContext
+    val dir = tmpDir
+    StateStore.save(fixture, dir, nBuckets = 8)
+    val restored = StateStore.load(spark, dir)
+    val last = restored.meta.orderBy(col("t").desc, col("dist")).head()
+    val (name, now) = (last.getString(0), last.getLong(2) + 1000L)
+    // lambda = 0.5 over the dist's 1000 s: each bin's draw, and so its
+    // count, turns on its own seed
+    val rate = 0.0005
+    val batch = StateStore.load(spark, dir)
+      .compacted(ForgetParams(rate = rate, nowEpoch = now, mode = DecayMode.Sampled))
+      .counts.filter(col("dist") === name)
+      .collect().map(r => r.getString(1) -> r.getLong(2)).toMap
+    val stored = restored.counts.filter(col("dist") === name)
+      .collect().map(r => r.getString(1) -> r.getLong(2)).toMap
+    assert(batch != stored, "the decay changed no bin; the test cannot see the seed")
+
+    val mem = MemoryStream[FtRequest]
+    val out = ForgetStream.requests(mem.toDS(), ForgetStream.Params(rate = rate),
+      clock = () => now, withExpiry = false,
+      initial = Some(ForgetStream.initialStateFrom(restored.counts, restored.meta)))
+    val q = out.writeStream.outputMode(
+        org.apache.spark.sql.streaming.OutputMode.Update())
+      .format("memory").queryName("warm_restart_decay").start()
+    try {
+      mem.addData(FtRequest.dist(name, now))
+      q.processAllAvailable()
+      val got = spark.table("warm_restart_decay").as[BinSnapshot].collect()
+        .map(r => r.bin -> r.count).toMap
+      assert(got == batch)
+    } finally q.stop()
+  }
+
   test("streaming write-back: micro-batches replace whole distributions in the store") {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
