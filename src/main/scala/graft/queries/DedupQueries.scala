@@ -349,7 +349,9 @@ object DedupQueries {
     * cross-component batch pairs — batch-bounded, a few rounds over a
     * tiny frame); (3) rewrite ONLY the label partitions the remap
     * touches (the AnnIndex upsert discipline: read touched `part`
-    * dirs, remap, dynamic-overwrite, drop fully-vacated dirs).
+    * dirs, remap, replace them in ONE
+    * [[graft.sources.Publish.replaceParts]] transaction, which drops
+    * fully-vacated dirs).
     * Correctness is an invariant, not a hope: if the store holds
     * min-label components of all pairs seen so far, merging components
     * by label-graph CC with `least` labels yields min-label components
@@ -359,7 +361,8 @@ object DedupQueries {
   /** Register a batch of NEW docs as singleton components before their
     * pairs ingest — the missing half of [[ccIngest]]'s contract (it
     * merges labels of docs the store already knows). Touched `part`
-    * dirs are read + unioned + dynamically overwritten (the AnnIndex
+    * dirs are read + unioned + replaced in ONE
+    * [[graft.sources.Publish.replaceParts]] transaction (the AnnIndex
     * upsert discipline); ids must be fresh (an id the store already
     * holds would duplicate its row — the caller's batch contract).
     */
@@ -768,9 +771,9 @@ object DedupQueries {
     // Incremental dedup against a MAINTAINED index: same cross-snapshot
     // semantics as dedup_incremental, but the stored signature table is
     // built in two installments — saveMinhash on half the corpus, then
-    // AnnIndex.upsertMinhash for the rest (dynamic overwrite of the
-    // touched pmod(doc_id) directories only, signature family frozen in
-    // meta). The maintained index is row-identical to a full rebuild
+    // AnnIndex.upsertMinhash for the rest (the touched pmod(doc_id)
+    // directories only, replaced in one Publish.replaceParts
+    // transaction; signature family frozen in meta). The maintained index is row-identical to a full rebuild
     // (AnnIndexSpec convergence), so the dedup_incremental oracle gates
     // the whole build -> upsert -> probe cycle: the shape where
     // yesterday's index absorbs today's crawl without re-signing the

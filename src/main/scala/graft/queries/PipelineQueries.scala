@@ -446,22 +446,24 @@ object PipelineQueries {
     * `exportDir` is an empty artifact, so the same call bootstraps a
     * fresh store on its first micro-batch.
     *
-    * Crash contract: the dynamic overwrite is per-shard-dir, so a
-    * crash mid-write leaves a MIX of new and old dirs — and that is
-    * already healed by the call's own idempotence: shard offsets are
+    * Crash contract: the touched shard dirs are replaced by ONE
+    * [[graft.sources.Publish.replaceParts]] transaction, so a crash at
+    * any step leaves exactly the old artifact or exactly the new one —
+    * the next read rolls a committed publish forward, the next write
+    * drops an uncommitted one. Replay converges too: shard offsets are
     * shard-LOCAL (no cross-dir state), so re-running the same batch
-    * converges every dir regardless of which ones the crash caught
-    * (spec-pinned in StreamingMaintenanceSpec). No marker files or
-    * recovery scan needed; replay IS recovery.
+    * rewrites every touched dir to the same content (spec-pinned in
+    * StreamingMaintenanceSpec).
     */
   /** LOUD guards for the touched-shard re-packs — both silent-failure
     * modes of a mis-derived `touched` set, checked on every call (cost:
     * <= [[PackShards]]-row collects):
     *
     *   - a batch (`extra`) row landing in a shard OUTSIDE `touched`
-    *     would dynamic-overwrite that dir with ONLY the batch's rows —
-    *     the stored survivors there were never read (the scan is
-    *     pruned to `touched`): silent DATA LOSS;
+    *     would replace that dir with ONLY the batch's rows (the
+    *     publish moves every dir the staged write produced) — the
+    *     stored survivors there were never read (the scan is pruned
+    *     to `touched`): silent DATA LOSS;
     *   - a retraction (`without`) doc whose shard is outside `touched`
     *     is never seen by the anti-join — the takedown silently
     *     NO-OPS and the retracted (GDPR) document's rows stay in the
@@ -716,14 +718,15 @@ object PipelineQueries {
     * Concurrency contract: ONE maintainer per artifact. The repack
     * derives each touched shard's offsets from the artifact's current
     * state, so two maintainers racing the same shard dir would each
-    * overwrite the other's read under dynamic overwrite — last write
-    * wins, the loser's batch silently vanishes. That is the
+    * publish over the other's read — last publish wins, the loser's
+    * batch silently vanishes (and two publishes of one root share its
+    * [[graft.sources.Publish]] transaction directory). That is the
     * [[graft.sources.SegmentStore]] multi-writer problem, and it has
     * the same answer here: a `foreachBatch` sink is serialized per
     * query (the spec-driven shape), and many producers either funnel
     * through one maintenance stream or own disjoint artifacts. Crash
-    * recovery needs no second writer — replay of the same batch IS
-    * recovery (idempotence above).
+    * recovery needs no second writer: the next read finishes a
+    * committed publish, and replay of the same batch is idempotent.
     */
   private[graft] def seqTokensMaintain(s: SparkSession, dir: String,
       exportDir: String, adds: Option[DataFrame],
@@ -756,26 +759,12 @@ object PipelineQueries {
       batchFn: (SparkSession, String, DataFrame) => DataFrame,
       repackFn: (SparkSession, String, Seq[Long], Option[DataFrame],
         Option[DataFrame]) => Unit): Unit = {
-    // stage-timing receipts for scale runs (BASELINE.md's "Round-17
-    // artifact maintenance at 100x" used it; attributing a fraction-law
-    // violation needs the per-stage split, not the lump sum). Off
-    // unless the env asks.
-    val timing = sys.env.contains("SPARK_GRAFT_MAINTAIN_TIMING")
-    def timed[T](stage: String)(f: => T): T =
-      if (!timing) f else {
-        val t0 = System.nanoTime()
-        val r = f
-        System.err.println(
-          f"[maintain-time] $stage ${(System.nanoTime() - t0) / 1e9}%.2fs")
-        r
-      }
     val batch = adds.map { a =>
       // pass the payload through when the batch carries it — the
       // row-local render path; an id-only frame takes the corpus
       // semi-join fallback (see batchPieceLists)
       val cols = a.columns.filter(Set("doc_id", "text")).map(col)
-      timed("batch-render")(
-        batchFn(s, dir, a.select(cols: _*)).localCheckpoint(true))
+      batchFn(s, dir, a.select(cols: _*)).localCheckpoint(true)
     }
     val retr = retracts.map(_.select("doc_id").localCheckpoint(true))
     // The maintained artifact stays self-identifying: the frozen decode
@@ -794,7 +783,7 @@ object PipelineQueries {
           bit_xor(graft.functions.Md5Long60Expr(
             concat_ws(":", col("piece"), col("token_id")), PackSalt)).as("fp"))
           .collect()(0).getLong(0) // 1 row; vocab nonempty by construction
-        val cur = timed("drift-gate")(fpOf(TextQueries.bpeVocab(s, dir)))
+        val cur = fpOf(TextQueries.bpeVocab(s, dir))
         val shipped = fpOf(s.read.parquet(s"$exportDir/_tokenizer/vocab"))
         require(cur == shipped,
           s"slotMaintain: tokenizer drift — the corpus-derived vocab " +
@@ -825,15 +814,14 @@ object PipelineQueries {
       // which is the path that legitimately pays the training cost.
       shipTokenizer(s, dir, exportDir)
     }
-    val addShards = timed("shard-derive")(batch.map(_.select("shard").distinct()
+    val addShards = batch.map(_.select("shard").distinct()
       .collect().map(_.getLong(0)).toSet) // <= PackShards rows
-      .getOrElse(Set.empty[Long]))
+      .getOrElse(Set.empty[Long])
     val retrShards = retr.map(_
       .select(docShard(col("doc_id")).as("shard"))
       .distinct().collect().map(_.getLong(0)).toSet) // <= PackShards rows
       .getOrElse(Set.empty[Long])
-    timed("repack")(
-      repackFn(s, exportDir, (addShards ++ retrShards).toSeq, batch, retr))
+    repackFn(s, exportDir, (addShards ++ retrShards).toSeq, batch, retr)
   }
 
   /** The token artifact in its DATALOADER-FINAL shape: one row per
@@ -969,8 +957,9 @@ object PipelineQueries {
     * spans themselves (a doc's last span ends at its n_toks — the
     * artifact is self-describing), `without` ids leave, the `extra`
     * batch joins, and the survivors re-run [[seqSpansOfCounts]]
-    * shard-locally under dynamic partition overwrite; a directory the
-    * re-pack fully vacates is dropped. Untouched dirs are never
+    * shard-locally; the touched dirs are replaced in ONE
+    * [[graft.sources.Publish.replaceParts]] transaction, which drops a
+    * directory the re-pack fully vacates. Untouched dirs are never
     * rewritten — byte-identical to a full re-pack by the layout
     * argument above.
     */

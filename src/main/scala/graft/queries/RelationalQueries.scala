@@ -564,9 +564,9 @@ object RelationalQueries {
 
   /** Append `batch` rows whose key combo is NEW to the store; rows for
     * existing keys are dropped (first-batch-wins / set-union). Same
-    * stage/anti-join/publish choreography as the
-    * AnnIndex.upsert* family with the precedence flipped (stored rows
-    * win here; upserts there replace).
+    * stage/anti-join/publish choreography as
+    * [[graft.sources.AnnIndex.upsertRowsInParts]] with the precedence
+    * flipped (stored rows win here; upserts there replace).
     */
   private def retentionAppendNew(s: SparkSession, path: String,
       batch: DataFrame, keys: Seq[String]): Unit = {

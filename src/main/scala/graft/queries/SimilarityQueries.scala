@@ -841,8 +841,9 @@ object SimilarityQueries {
 
     // The INCREMENTALLY-MAINTAINED index path: build the LSH index on
     // a subset of the corpus, upsert the remainder as a later batch
-    // (AnnIndex.upsertLsh — dynamic partition overwrite of touched
-    // directories only, hash family frozen in the stored meta), then
+    // (AnnIndex.upsertLsh — the touched directories only, replaced in
+    // one Publish.replaceParts transaction; hash family frozen in the
+    // stored meta), then
     // serve the probe from the store. By the upsert convergence
     // property (AnnIndexSpec) the maintained index is row-identical to
     // a full rebuild, so the sim_ann_lsh oracle checks the whole
@@ -1134,12 +1135,13 @@ object SimilarityQueries {
     // corpus snapshot (trainPq — the frozen quantizer artifact), then
     // bulk-load 2/3 of the corpus and append the remaining third as a
     // later batch through the SAME upsertPq path (encode-only against
-    // the stored codebooks, dynamic overwrite of touched
-    // part = pmod(vec_id, parts) directories). Because every code
-    // derives from the stored codebooks, the maintained codes table is
-    // row-identical to a one-shot savePq build — so the sim_ann_pq
-    // oracle hash-gates the whole train -> load -> append -> probe
-    // cycle, the daily-crawl-append shape for the compressed index.
+    // the stored codebooks; the touched part = pmod(vec_id, parts)
+    // directories replaced in one Publish.replaceParts transaction).
+    // Because every code derives from the stored codebooks, the
+    // maintained codes table is row-identical to a one-shot savePq
+    // build — so the sim_ann_pq oracle hash-gates the whole train ->
+    // load -> append -> probe cycle, the daily-crawl-append shape for
+    // the compressed index.
     // pq_code_stats is the retrain trigger when drift makes the frozen
     // codebooks stale.
     "sim_ann_pq_upsert" -> ((s, dir) => {

@@ -31,9 +31,10 @@ import graft.operators.{Dedup, Multimodal, Similarity}
   *     the win is not recomputing shingles + k hash passes per run.
   *
   * Index writes are `Overwrite` — rebuild-in-place; an incremental
-  * upsert replaces only its touched partition directories (bucket/cell
-  * is the partition key) and a retrain replaces the whole index, both
-  * as one [[Publish]] transaction.
+  * upsert ([[upsertRowsInParts]]) or takedown ([[deleteRowsInParts]])
+  * replaces only its touched partition directories (bucket/cell is the
+  * partition key) and a retrain replaces the whole index, each as one
+  * [[Publish]] transaction.
   */
 object AnnIndex {
 
@@ -44,9 +45,10 @@ object AnnIndex {
   final val DefaultParts = 64
 
   /** Upsert-batch precondition shared by every maintenance path: the
-    * anti-join merge removes STORED rows only, so a batch carrying one
-    * key twice would insert both copies. Batch-sized check over an
-    * already-materialized stage.
+    * anti-join merge ([[upsertRowsInParts]]) removes STORED rows only,
+    * so a batch carrying one key twice would insert both copies.
+    * Batch-sized check over an already-materialized stage, run before
+    * any store mutation.
     */
   private def requireUniqueKeys(staged: DataFrame, keyCol: String): Unit = {
     val dup = staged.groupBy(keyCol).count()
@@ -69,23 +71,76 @@ object AnnIndex {
       partIds: Seq[Long]): Unit = {
     if (partIds.isEmpty) return
     val cur = readTable(spark, tablePath)
-    val dataCols = cur.columns.filterNot(_ == partCol)
-    val kept = cur.filter(col(partCol).isin(partIds.map(Long.box): _*))
-      .join(del.select(keyCol), Seq(keyCol), "left_anti")
-      .select(dataCols.map(col) :+ col(partCol).cast("long").as(partCol): _*)
-    Publish.replaceParts(spark, tablePath, partCol, partIds, kept)
+    Publish.replaceParts(spark, tablePath, partCol, partIds,
+      storedRowsBut(cur, cur.columns, keyCol, partCol, partIds, del))
   }
 
-  /** Touched-partition ids for a CONTENT-derived layout: one
-    * column-pruned scan of (keyCol, partCol) semi-joined to the ids.
+  /** Shared upsert engine for every key-addressed layout — the mirror of
+    * [[deleteRowsInParts]], and [[StateStore.upsertDistributions]]'
+    * touched-partition rule (the reference's write-back rewrites only
+    * what the write touched, goforget `redis_utils.go:156-191`).
+    * `staged` is the materialized batch in the table's row shape, its
+    * keys unique ([[requireUniqueKeys]]). The touched partitions are the
+    * batch's own plus, for a CONTENT-derived partition
+    * (`contentDerived`: LSH bucket, IVF cell — a re-inserted key can
+    * move), the partitions where the batch's keys live now, found by
+    * [[locateParts]]'s scan ([[partsOfKeys]]) in the same collect.
+    * Only those partitions' stored rows are read; they survive minus
+    * the batch's keys, and kept ∪ staged replaces them as ONE
+    * [[Publish.replaceParts]] transaction, which retires a directory
+    * every row moved out of. A table holding no partition yet (a
+    * quantizer trained without codes, or emptied by takedowns) is
+    * bootstrapped from the batch alone. An empty batch changes
+    * nothing. Cost is batch-bounded, not index-sized.
+    */
+  private def upsertRowsInParts(spark: SparkSession, table: String,
+      keyCol: String, partCol: String, staged: DataFrame,
+      contentDerived: Boolean): Unit = {
+    Publish.recover(spark, table)
+    if (!hasPartData(spark, table, partCol)) {
+      Publish.replaceParts(spark, table, partCol, Nil, staged)
+      return
+    }
+    val cur = spark.read.parquet(table)
+    val batchParts = staged.select(col(partCol).cast("long"))
+    val partIds = partIdsOf(
+      if (contentDerived) batchParts.union(partsOfKeys(cur, keyCol, partCol, staged))
+      else batchParts)
+    if (partIds.isEmpty) return
+    Publish.replaceParts(spark, table, partCol, partIds,
+      storedRowsBut(cur, staged.columns, keyCol, partCol, partIds, staged)
+        .unionByName(staged))
+  }
+
+  /** The stored rows of partitions `partIds` whose key is not in `keys`,
+    * as `cols` with the partition value a long (the directory name reads
+    * back as an int).
+    */
+  private def storedRowsBut(cur: DataFrame, cols: Seq[String], keyCol: String,
+      partCol: String, partIds: Seq[Long], keys: DataFrame): DataFrame =
+    cur.filter(col(partCol).isin(partIds.map(Long.box): _*))
+      .join(keys.select(keyCol), Seq(keyCol), "left_anti")
+      .select(cols.map(c => if (c == partCol) col(c).cast("long").as(c) else col(c)): _*)
+
+  /** The partition of each stored row whose key is in `keys`: one
+    * column-pruned scan of (keyCol, partCol) joined to the ids.
+    */
+  private def partsOfKeys(cur: DataFrame, keyCol: String, partCol: String,
+      keys: DataFrame): DataFrame =
+    cur.join(keys.select(keyCol), Seq(keyCol)).select(col(partCol).cast("long"))
+
+  /** The distinct values of a one-column long frame of partition ids —
+    * bounded by the directory fan-out, so driver-safe.
+    */
+  private def partIdsOf(parts: DataFrame): Seq[Long] =
+    parts.distinct().collect().map(_.getLong(0)).toSeq
+
+  /** Touched-partition ids of a takedown in a CONTENT-derived layout.
     * At extreme scale an id→partition sidecar replaces the scan.
     */
   private def locateParts(spark: SparkSession, tablePath: String,
       keyCol: String, partCol: String, del: DataFrame): Seq[Long] =
-    readTable(spark, tablePath)
-      .join(del.select(keyCol), Seq(keyCol))
-      .select(col(partCol).cast("long")).distinct()
-      .collect().map(_.getLong(0)).toSeq // bounded by the dir fan-out
+    partIdsOf(partsOfKeys(readTable(spark, tablePath), keyCol, partCol, del))
 
   // -------------------------------------------------------------- LSH
 
@@ -143,16 +198,16 @@ object AnnIndex {
     replaceIndex(spark, dir)(saveLsh(live, newNBits, dim, _, parts))
   }
 
-  /** Incremental index maintenance — [[StateStore.upsertDistributions]]'
-    * touched-partition publish applied to the LSH layout: the
-    * batch's vectors are bucketed with the STORED hyperplanes (read from
-    * meta, so a new batch can never fork the hash family), only the
-    * partition directories their buckets fold into are rewritten, and
-    * existing rows in those directories survive via anti-join + union
-    * (re-inserted vec_ids take the new vector). Cost scales with the
-    * touched directories — batch-bounded — not the index size: the
-    * property that makes daily crawl appends viable against an index
-    * orders of magnitude larger than any one batch.
+  /** Incremental index maintenance — [[upsertRowsInParts]] on the LSH
+    * layout: the batch's vectors are bucketed with the STORED
+    * hyperplanes (read from meta, so a new batch can never fork the
+    * hash family), and only the partition directories they fold into,
+    * plus those a re-inserted vec_id moves out of (a changed vector can
+    * hash to a different bucket), are rewritten; re-inserted vec_ids
+    * take the new vector. Cost scales with the touched directories —
+    * batch-bounded — not the index size: the property that makes daily
+    * crawl appends viable against an index orders of magnitude larger
+    * than any one batch.
     */
   def upsertLsh(spark: SparkSession, dir: String, vecs: DataFrame): Unit = {
     val meta = readIndex(spark, dir, "meta").head()
@@ -164,27 +219,10 @@ object AnnIndex {
         Similarity.lshBucket(col("v"), signs).as("bucket"))
       .withColumn("part", pmod(col("bucket"), lit(parts.toLong)))
       .localCheckpoint(true) // the probes and the merge below read it
-    if (staged.isEmpty) return
+    if (staged.isEmpty) return // an empty micro-batch skips the key check too
     requireUniqueKeys(staged, "vec_id")
-    // Touched directories are BOTH sides of the move: where the new rows
-    // land AND where any re-inserted vec_id currently lives (a changed
-    // vector can hash to a different bucket — rewriting only the target
-    // directory would leave the stale row behind in the old one).
-    val newParts = staged.select("part").distinct()
-      .collect().map(_.getLong(0)) // bounded by parts, driver-safe
-    val oldParts = readIndex(spark, dir, "corpus")
-      .join(staged.select("vec_id"), Seq("vec_id"))
-      .select(col("part").cast("long")).distinct()
-      .collect().map(_.getLong(0))
-    val partIds = (newParts ++ oldParts).distinct
-    val kept = readIndex(spark, dir, "corpus")
-      .filter(col("part").isin(partIds.map(Long.box): _*))
-      .join(staged.select("vec_id"), Seq("vec_id"), "left_anti")
-      .select(col("vec_id"), col("v"), col("bucket"),
-        col("part").cast("long").as("part"))
-    // a directory whose every row moved out (none in) is retired
-    Publish.replaceParts(spark, s"$dir/corpus", "part", partIds,
-      kept.unionByName(staged.select("vec_id", "v", "bucket", "part")))
+    upsertRowsInParts(spark, s"$dir/corpus", "vec_id", "part", staged,
+      contentDerived = true)
   }
 
   /** The bucket-target width rule, integer-exact: the
@@ -273,9 +311,8 @@ object AnnIndex {
       .withColumn("part", pmod(col("vec_id"), lit(parts.toLong)))
       .localCheckpoint(true)
     if (del.isEmpty || !pathExists(spark, s"$dir/codes")) return
-    val partIds = del.select("part").distinct()
-      .collect().map(_.getLong(0)).toSeq // bounded by parts, driver-safe
-    deleteRowsInParts(spark, s"$dir/codes", "vec_id", "part", del, partIds)
+    deleteRowsInParts(spark, s"$dir/codes", "vec_id", "part", del,
+      partIdsOf(del.select("part")))
   }
 
   /** TAKEDOWN for the two-level IVF+PQ codes table (cell-partitioned,
@@ -449,52 +486,45 @@ object AnnIndex {
       k: Int, sampleSize: Int, iters: Int, dim: Int, salt: Int,
       minMeanCcos: Double,
       minBatchMeanCcos: Double = Double.NegativeInfinity,
-      checkEvery: Int = 1, gaugeSampleMod: Long = 1L): Boolean = {
+      checkEvery: Int = 1, gaugeSampleMod: Long = 1L): Boolean =
+    retrainOnDrift(spark, dir, upsertIvfBatch(spark, dir, batch),
+      minBatchMeanCcos, checkEvery,
+      ivfDriftStats(spark, dir, lit(true), gaugeSampleMod), minMeanCcos)(
+      retrainIvf(spark, dir, k, sampleSize, iters, dim, salt))
+
+  /** Incremental IVF maintenance — [[upsertRowsInParts]] on the cell
+    * layout: the batch is assigned against the STORED centroids (the
+    * quantizer never moves on upsert, so cell membership of untouched
+    * vectors cannot drift), only the touched cell directories rewrite —
+    * both where new rows land and where any re-inserted vec_id
+    * currently lives — and a cell directory emptied by a moved vector
+    * is dropped. Cost is batch-bounded; centroid RETRAINING (when the
+    * corpus distribution drifts) is [[retrainIvf]] — an offline
+    * rebuild + swap, deliberately not an upsert.
+    */
+  def upsertIvf(spark: SparkSession, dir: String, vecs: DataFrame): Unit = {
+    upsertIvfBatch(spark, dir, vecs)
+    ()
+  }
+
+  /** The one IVF batch path [[upsertIvf]] and [[upsertIvfWithPolicy]]
+    * share: assign `vecs` against the stored centroids, materialize the
+    * stage, check its keys, land it. Returns the batch dial over the
+    * stage's own-centroid cosines.
+    */
+  private def upsertIvfBatch(spark: SparkSession, dir: String,
+      vecs: DataFrame): () => Option[Double] = {
     // no broadcast hint: assignIvf collects the k-row frame driver-side
     // (a hint here rides a joinless plan — HintErrorLogger noise)
-    val cents = ivfCentroids(spark, dir)
-    val staged = assignIvf(batch, cents).localCheckpoint(true)
+    val staged = assignIvf(vecs, ivfCentroids(spark, dir)).localCheckpoint(true)
     // the kernel assignment is row-1:1 (no rank window to collapse a
     // duplicate key), so the uniqueness gate reads the materialized
     // stage instead of re-deriving the raw batch — and still throws
     // before any store mutation
-    requireUniqueKeys(staged.select("vec_id"), "vec_id")
-    upsertIvfStaged(spark, dir, staged.drop("ccos"))
-    // bump ONCE per ingest call, before any retrain (the counter file
-    // dies with the dir on the swap — a healed store restarts cadence)
-    val storeCheckDue = policyCounterBump(spark, dir, checkEvery)
-    def retrain(): Boolean = {
-      retrainIvf(spark, dir, k, sampleSize, iters, dim, salt)
-      true
-    }
-    if (stagedMeanCcos(staged).exists(_ < minBatchMeanCcos)) retrain()
-    else if (storeCheckDue &&
-      ivfDriftStats(spark, dir, lit(true), gaugeSampleMod)
-        .collect()(0).getDouble(2) < minMeanCcos) retrain()
-    else false
-  }
-
-  /** Incremental IVF maintenance — same touched-partition publish as
-    * [[upsertLsh]]: the batch is assigned against the STORED
-    * centroids (the quantizer never moves on upsert, so cell membership
-    * of untouched vectors cannot drift), only the touched cell
-    * directories rewrite — both where new rows land and where any
-    * re-inserted vec_id currently lives — and a cell directory emptied
-    * by a moved vector is dropped. Cost is batch-bounded; centroid
-    * RETRAINING (when the corpus distribution drifts) is
-    * [[retrainIvf]] — an offline rebuild + swap, deliberately not an
-    * upsert.
-    */
-  def upsertIvf(spark: SparkSession, dir: String, vecs: DataFrame): Unit = {
-    // no broadcast hint: assignIvf collects the k-row frame driver-side
-    val cents = ivfCentroids(spark, dir)
-    val staged = assignIvf(vecs, cents).drop("ccos").localCheckpoint(true)
-    // the kernel assignment is row-1:1 (no rank window to collapse a
-    // duplicate key), so the uniqueness gate reads the materialized
-    // stage instead of re-deriving the raw batch — and still throws
-    // before any store mutation (upsertPq/upsertIvfPq use the same order)
-    requireUniqueKeys(staged.select("vec_id"), "vec_id")
-    upsertIvfStaged(spark, dir, staged)
+    requireUniqueKeys(staged, "vec_id")
+    upsertRowsInParts(spark, s"$dir/assign", "vec_id", "cell",
+      staged.drop("ccos"), contentDerived = true)
+    () => stagedMeanCcos(staged)
   }
 
   /** Nearest-stored-centroid assignment, KEEPING each row's own-centroid
@@ -516,27 +546,6 @@ object AnnIndex {
         rows.map(_._2), rows.map(_._1)))
       .select(col("vec_id"), col("_best.cell").as("cell"), col("v"),
         col("_best.ccos").as("ccos"))
-  }
-
-  /** The merge half of [[upsertIvf]], over an already-materialized
-    * `(vec_id, cell, v)` stage.
-    */
-  private def upsertIvfStaged(spark: SparkSession, dir: String,
-                              staged: DataFrame): Unit = {
-    if (staged.isEmpty) return
-    val newCells = staged.select("cell").distinct()
-      .collect().map(_.getLong(0)) // bounded by k, driver-safe
-    val oldCells = readIndex(spark, dir, "assign")
-      .join(staged.select("vec_id"), Seq("vec_id"))
-      .select(col("cell").cast("long")).distinct()
-      .collect().map(_.getLong(0))
-    val cellIds = (newCells ++ oldCells).distinct
-    val kept = readIndex(spark, dir, "assign")
-      .filter(col("cell").isin(cellIds.map(Long.box): _*))
-      .join(staged.select("vec_id"), Seq("vec_id"), "left_anti")
-      .select(col("vec_id"), col("cell").cast("long").as("cell"), col("v"))
-    Publish.replaceParts(spark, s"$dir/assign", "cell", cellIds,
-      kept.unionByName(staged.select("vec_id", "cell", "v")))
   }
 
   /** Top-`k` cosine neighbors of each query from the stored IVF index,
@@ -830,6 +839,27 @@ object AnnIndex {
     due
   }
 
+  /** The two-dial retrain decision the IVF, PQ and IVF+PQ policy arms
+    * share, run after the batch has landed: the BATCH dial first (the
+    * landed batch's own gauge below `minBatchMeanCcos`, O(batch), every
+    * batch), then, only on a batch [[policyCounterBump]] says is due,
+    * the store-wide gauge's mean (`storeGauge`'s `mean_ccos`) below
+    * `minMeanCcos`. Runs `retrain` and returns true iff a dial tripped.
+    * A batch-dial retrain skips the counter: the swap replaces the dir
+    * and the counter file with it, so the healed store starts a fresh
+    * cadence either way.
+    */
+  private def retrainOnDrift(spark: SparkSession, dir: String,
+      batchMeanCcos: () => Option[Double], minBatchMeanCcos: Double,
+      checkEvery: Int, storeGauge: => DataFrame, minMeanCcos: Double)(
+      retrain: => Unit): Boolean = {
+    val tripped = batchMeanCcos().exists(_ < minBatchMeanCcos) ||
+      (policyCounterBump(spark, dir, checkEvery) &&
+        storeGauge.collect()(0).getDouble(2) < minMeanCcos)
+    if (tripped) retrain
+    tripped
+  }
+
   /** Deterministic hash-sample of an index relation for the amortized
     * store-wide gauges: keeps rows whose `pmod(xxhash64(vec_id),
     * sampleMod) = 0` — 1/sampleMod of the store, the SAME rows every
@@ -876,66 +906,63 @@ object AnnIndex {
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
-  /** True iff `path` holds at least one `part=` partition directory —
-    * the presence gate for partitioned stores whose deletes can vacate
+  /** True iff `path` holds at least one `partCol=` partition directory
+    * — the presence gate for partitioned stores whose deletes can vacate
     * EVERY partition while the root (with its `_SUCCESS`) survives.
     */
-  private def hasPartData(spark: SparkSession, path: String): Boolean = {
+  private def hasPartData(spark: SparkSession, path: String,
+      partCol: String): Boolean = {
     val p = new org.apache.hadoop.fs.Path(path)
     val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    f.exists(p) && f.listStatus(p).exists(_.getPath.getName.startsWith("part="))
+    f.exists(p) && f.listStatus(p).exists(_.getPath.getName.startsWith(s"$partCol="))
   }
 
   /** Incremental PQ maintenance — encode-only append with the quantizer
     * frozen: the batch is encoded against the STORED codebooks (read
     * from `dir/codebook/`, so a batch can never fork the code space)
-    * and only the `part = pmod(vec_id, parts)` directories it touches
-    * are rewritten, existing rows surviving via anti-join + union (a
-    * re-inserted vec_id takes the new codes). `part` is a pure function
-    * of vec_id — the [[upsertMinhash]] property — so re-inserts land in
-    * their old directory by construction: no cross-directory moves, no
-    * emptied-directory cleanup. Works as the BULK LOAD too (first call
-    * after [[trainPq]] — no codes table yet). Cost is batch-bounded;
-    * codebook retraining (when `pq_code_stats` shows dead/dominant
-    * codes) is a rebuild via [[savePq]], deliberately not an upsert.
+    * and [[upsertRowsInParts]] rewrites only the
+    * `part = pmod(vec_id, parts)` directories it touches (a re-inserted
+    * vec_id takes the new codes). `part` is a pure function of vec_id —
+    * the [[upsertMinhash]] property — so re-inserts land in their old
+    * directory by construction: no locate scan, no cross-directory
+    * moves. Works as the BULK LOAD too (first call after [[trainPq]] —
+    * no codes table yet). Cost is batch-bounded; codebook retraining
+    * (when `pq_code_stats` shows dead/dominant codes) is [[retrainPq]],
+    * deliberately not an upsert.
     */
   def upsertPq(spark: SparkSession, dir: String, vecs: DataFrame): Unit = {
+    upsertPqBatch(spark, dir, vecs)
+    ()
+  }
+
+  /** The one PQ batch path [[upsertPq]] and [[upsertPqWithPolicy]]
+    * share: encode `vecs` (through the stored OPQ permutation) against
+    * the stored codebooks, materialize the stage, check its keys, land
+    * it. Returns the batch dial: the stage's mean (row, subspace)
+    * cosine to its assigned sub-centroids.
+    */
+  private def upsertPqBatch(spark: SparkSession, dir: String,
+      vecs: DataFrame): () => Option[Double] = {
     val meta = readIndex(spark, dir, "meta").head()
     val m = meta.getAs[Int]("m")
     val sub = meta.getAs[Int]("sub")
     val parts = meta.getAs[Int]("parts")
-    val staged = encodeWithCodebooks(applyPerm(vecs, storedPerm(spark, dir), "v"),
-        m, sub, storedCodebooks(spark, dir, m))
+    val permuted = applyPerm(vecs, storedPerm(spark, dir), "v")
+    val staged = encodeWithCodebooks(permuted, m, sub,
+        storedCodebooks(spark, dir, m))
       .withColumn("part", pmod(col("vec_id"), lit(parts.toLong)))
       .localCheckpoint(true) // the key check and the merge read it
     // the kernel encode is row-1:1 (no rank window to collapse a
     // duplicate key), so the uniqueness gate reads the materialized
     // stage instead of re-deriving the raw batch — and still throws
     // before any store mutation
-    requireUniqueKeys(staged.select("vec_id"), "vec_id")
-    upsertPqStaged(spark, dir, staged)
-  }
-
-  /** The merge half of [[upsertPq]], over an already-materialized
-    * `(vec_id, code0..code{m-1}, part)` stage.
-    */
-  private def upsertPqStaged(spark: SparkSession, dir: String,
-                             staged: DataFrame): Unit = {
-    if (staged.isEmpty) return
-    val codesPath = s"$dir/codes"
-    val merged =
-      if (!pathExists(spark, codesPath)) staged
-      else {
-        val partIds = staged.select("part").distinct()
-          .collect().map(_.getLong(0)) // bounded by parts, driver-safe
-        readTable(spark, codesPath)
-          .filter(col("part").isin(partIds.map(Long.box): _*))
-          .join(staged.select("vec_id"), Seq("vec_id"), "left_anti")
-          .select(staged.columns.dropRight(1).map(col) :+ col("part").cast("long").as("part"): _*)
-          .unionByName(staged)
-      }
-    // every touched directory receives the batch's own rows
-    Publish.replaceParts(spark, codesPath, "part", Nil, merged)
+    requireUniqueKeys(staged, "vec_id")
+    upsertRowsInParts(spark, s"$dir/codes", "vec_id", "part", staged,
+      contentDerived = false)
+    () => pqMeanCcosFrame(spark, dir,
+        staged.join(permuted.select("vec_id", "v"), Seq("vec_id")),
+        m, sub, lit(true))
+      .collect().headOption.map(_.getDouble(2)) // <= 1 row: the batch
   }
 
   /** Quantization-quality gauge for the PQ retrain decision. The codes
@@ -1004,35 +1031,11 @@ object AnnIndex {
       batch: DataFrame, sampleSize: Int, iters: Int, salt: Int,
       minMeanCcos: Double,
       minBatchMeanCcos: Double = Double.NegativeInfinity,
-      checkEvery: Int = 1, gaugeSampleMod: Long = 1L): Boolean = {
-    val meta = readIndex(spark, dir, "meta").head()
-    val m = meta.getAs[Int]("m")
-    val sub = meta.getAs[Int]("sub")
-    val parts = meta.getAs[Int]("parts")
-    val permuted = applyPerm(batch, storedPerm(spark, dir), "v")
-    val staged = encodeWithCodebooks(permuted, m, sub,
-        storedCodebooks(spark, dir, m))
-      .withColumn("part", pmod(col("vec_id"), lit(parts.toLong)))
-      .localCheckpoint(true)
-    // row-1:1 kernel encode: the uniqueness gate reads the stage (see
-    // upsertPq)
-    requireUniqueKeys(staged.select("vec_id"), "vec_id")
-    upsertPqStaged(spark, dir, staged)
-    val storeCheckDue = policyCounterBump(spark, dir, checkEvery)
-    def retrain(): Boolean = {
-      retrainPq(spark, dir, store, sampleSize, iters, salt)
-      true
-    }
-    val batchMean = pqMeanCcosFrame(spark, dir,
-        staged.join(permuted.select("vec_id", "v"), Seq("vec_id")),
-        m, sub, lit(true))
-      .collect().headOption.map(_.getDouble(2)) // <= 1 row: the batch
-    if (batchMean.exists(_ < minBatchMeanCcos)) retrain()
-    else if (storeCheckDue &&
-      pqDriftStats(spark, dir, store, lit(true), gaugeSampleMod)
-        .collect()(0).getDouble(2) < minMeanCcos) retrain()
-    else false
-  }
+      checkEvery: Int = 1, gaugeSampleMod: Long = 1L): Boolean =
+    retrainOnDrift(spark, dir, upsertPqBatch(spark, dir, batch),
+      minBatchMeanCcos, checkEvery,
+      pqDriftStats(spark, dir, store, lit(true), gaugeSampleMod), minMeanCcos)(
+      retrainPq(spark, dir, store, sampleSize, iters, salt))
 
   /** Retrain the PQ codebooks over the live corpus and swap — the
     * response to [[pqDriftStats]] / `pq_code_stats` firing. Liveness
@@ -1171,9 +1174,10 @@ object AnnIndex {
     * what's scanned inside them, and the raw embeddings live outside
     * the index entirely (only a shortlist rerank ever reads them).
     * Rebuild-in-place; both quantizers are frozen artifacts — corpus
-    * drift means rebuild, incremental insert would follow [[upsertIvf]]
-    * (assign against stored centroids/codebooks, dynamic-overwrite the
-    * touched cell dirs).
+    * drift means [[retrainIvfPq]], and incremental inserts go through
+    * [[upsertIvfPq]] (route and encode against the stored quantizers,
+    * the touched cell dirs replaced in one [[Publish.replaceParts]]
+    * transaction).
     */
   def saveIvfPq(vecs: DataFrame, ivfK: Int, sampleSize: Int, iters: Int,
                 dim: Int, ivfSalt: Int, m: Int, sub: Int, pqK: Int,
@@ -1305,45 +1309,31 @@ object AnnIndex {
     * [[ivfpqDriftStats]] are the triggers.
     */
   def upsertIvfPq(spark: SparkSession, dir: String, vecs: DataFrame): Unit = {
+    upsertIvfPqBatch(spark, dir, vecs)
+    ()
+  }
+
+  /** The one IVF+PQ batch path [[upsertIvfPq]] and
+    * [[upsertIvfPqWithPolicy]] share: route and encode `vecs` (through
+    * the stored OPQ permutation) against the stored quantizers,
+    * materialize the stage, check its keys, land it. Returns the batch
+    * dial over the stage's own routing cosines.
+    */
+  private def upsertIvfPqBatch(spark: SparkSession, dir: String,
+      vecs: DataFrame): () => Option[Double] = {
     val meta = readIndex(spark, dir, "meta").head()
     val m = meta.getAs[Int]("m")
     val sub = meta.getAs[Int]("sub")
     val cents = readIndex(spark, dir, "centroids")
     val staged = encodeIvfPq(applyPerm(vecs, storedPerm(spark, dir), "v"),
         m, sub, cents, storedCodebooks(spark, dir, m))
-      .drop("ccos")
-      .localCheckpoint(true) // the key check and the merge read it
+      .localCheckpoint(true) // the key check, the merge and the gauge read it
     // row-1:1 kernel assignment+encode: the uniqueness gate reads the
-    // stage (see upsertPq)
-    requireUniqueKeys(staged.select("vec_id"), "vec_id")
-    upsertIvfPqStaged(spark, dir, staged)
-  }
-
-  /** The merge half of [[upsertIvfPq]], over an already-materialized
-    * `(vec_id, code0..code{m-1}, cell)` stage.
-    */
-  private def upsertIvfPqStaged(spark: SparkSession, dir: String,
-                                staged: DataFrame): Unit = {
-    if (staged.isEmpty) return
-    val codesPath = s"$dir/codes"
-    if (!pathExists(spark, codesPath)) {
-      Publish.replaceParts(spark, codesPath, "cell", Nil, staged)
-      return
-    }
-    val newCells = staged.select("cell").distinct()
-      .collect().map(_.getLong(0)) // bounded by ivfK, driver-safe
-    val oldCells = readTable(spark, codesPath)
-      .join(staged.select("vec_id"), Seq("vec_id"))
-      .select(col("cell").cast("long")).distinct()
-      .collect().map(_.getLong(0))
-    val cellIds = (newCells ++ oldCells).distinct
-    val dataCols = staged.columns.filterNot(_ == "cell")
-    val kept = spark.read.parquet(codesPath)
-      .filter(col("cell").isin(cellIds.map(Long.box): _*))
-      .join(staged.select("vec_id"), Seq("vec_id"), "left_anti")
-      .select(dataCols.map(col) :+ col("cell").cast("long").as("cell"): _*)
-    Publish.replaceParts(spark, codesPath, "cell", cellIds,
-      kept.unionByName(staged))
+    // stage (see upsertPqBatch)
+    requireUniqueKeys(staged, "vec_id")
+    upsertRowsInParts(spark, s"$dir/codes", "vec_id", "cell",
+      staged.drop("ccos"), contentDerived = true)
+    () => stagedMeanCcos(staged)
   }
 
   /** The composed index's arm of the wired retrain policy — the
@@ -1363,30 +1353,11 @@ object AnnIndex {
       iters: Int, dim: Int, ivfSalt: Int, pqSalt: Int,
       minMeanCcos: Double,
       minBatchMeanCcos: Double = Double.NegativeInfinity,
-      checkEvery: Int = 1, gaugeSampleMod: Long = 1L): Boolean = {
-    val meta = readIndex(spark, dir, "meta").head()
-    val m = meta.getAs[Int]("m")
-    val sub = meta.getAs[Int]("sub")
-    val cents = readIndex(spark, dir, "centroids")
-    val staged = encodeIvfPq(applyPerm(batch, storedPerm(spark, dir), "v"),
-        m, sub, cents, storedCodebooks(spark, dir, m))
-      .localCheckpoint(true)
-    // row-1:1 kernel assignment+encode: the uniqueness gate reads the
-    // stage (see upsertPq)
-    requireUniqueKeys(staged.select("vec_id"), "vec_id")
-    upsertIvfPqStaged(spark, dir, staged.drop("ccos"))
-    val storeCheckDue = policyCounterBump(spark, dir, checkEvery)
-    def retrain(): Boolean = {
-      retrainIvfPq(spark, dir, store, ivfK, sampleSize, iters, dim,
-        ivfSalt, pqSalt)
-      true
-    }
-    if (stagedMeanCcos(staged).exists(_ < minBatchMeanCcos)) retrain()
-    else if (storeCheckDue &&
-      ivfpqDriftStats(spark, dir, store, lit(true), gaugeSampleMod)
-        .collect()(0).getDouble(2) < minMeanCcos) retrain()
-    else false
-  }
+      checkEvery: Int = 1, gaugeSampleMod: Long = 1L): Boolean =
+    retrainOnDrift(spark, dir, upsertIvfPqBatch(spark, dir, batch),
+      minBatchMeanCcos, checkEvery,
+      ivfpqDriftStats(spark, dir, store, lit(true), gaugeSampleMod), minMeanCcos)(
+      retrainIvfPq(spark, dir, store, ivfK, sampleSize, iters, dim, ivfSalt, pqSalt))
 
   /** Two-stage probe of the stored IVF+PQ index: route each query to
     * its top-`nProbe` cells against the k-row stored centroids (scan =
@@ -1491,16 +1462,15 @@ object AnnIndex {
   def minhashSigs(spark: SparkSession, dir: String): DataFrame =
     readIndex(spark, dir, "sigs").select("doc_id", "sh", "sig", "keys")
 
-  /** Incremental MinHash maintenance — the [[upsertLsh]] treatment for
-    * the signature table: the batch's signatures are computed with the
+  /** Incremental MinHash maintenance — [[upsertRowsInParts]] on the
+    * signature table: the batch's signatures are computed with the
     * STORED family (k/bands/rowsPerBand from meta, so a batch can never
     * fork the hash family) and only the `part = pmod(doc_id, parts)`
-    * directories the batch touches are rewritten; existing rows there
-    * survive via anti-join + union (a re-inserted doc_id takes the new
-    * text). Because `part` is a pure function of doc_id — unlike the
-    * content-derived LSH bucket — a re-inserted doc lands in its old
-    * directory by construction: no cross-directory moves, no
-    * emptied-directory cleanup. Cost is batch-bounded, which is what
+    * directories the batch touches are rewritten (a re-inserted doc_id
+    * takes the new text). Because `part` is a pure function of doc_id —
+    * unlike the content-derived LSH bucket — a re-inserted doc lands in
+    * its old directory by construction: no locate scan, no
+    * cross-directory moves. Cost is batch-bounded, which is what
     * lets a daily crawl ride a maintained signature index instead of
     * re-signing the whole corpus.
     */
@@ -1516,18 +1486,10 @@ object AnnIndex {
       .withColumn("keys", Dedup.bandKeys(col("sig"), bands, rowsPerBand))
       .select(col("doc_id"), col("sh"), col("sig"), col("keys"),
         pmod(col("doc_id"), lit(parts.toLong)).as("part"))
-      .localCheckpoint(true) // the probes and the merge read it
-    if (staged.isEmpty) return
+      .localCheckpoint(true) // the key check and the merge read it
     requireUniqueKeys(staged, "doc_id")
-    val partIds = staged.select("part").distinct()
-      .collect().map(_.getLong(0)) // bounded by parts, driver-safe
-    val kept = readIndex(spark, dir, "sigs")
-      .filter(col("part").isin(partIds.map(Long.box): _*))
-      .join(staged.select("doc_id"), Seq("doc_id"), "left_anti")
-      .select(col("doc_id"), col("sh"), col("sig"), col("keys"),
-        col("part").cast("long").as("part"))
-    Publish.replaceParts(spark, s"$dir/sigs", "part", partIds,
-      kept.unionByName(staged))
+    upsertRowsInParts(spark, s"$dir/sigs", "doc_id", "part", staged,
+      contentDerived = false)
   }
 
   /** TAKEDOWN for the maintained signature table — [[upsertMinhash]]
@@ -1549,9 +1511,8 @@ object AnnIndex {
       .withColumn("part", pmod(col("doc_id"), lit(parts.toLong)))
       .localCheckpoint(true) // part probe + anti-join read it
     if (del.isEmpty) return
-    val partIds = del.select("part").distinct()
-      .collect().map(_.getLong(0)).toSeq // bounded by parts, driver-safe
-    deleteRowsInParts(spark, s"$dir/sigs", "doc_id", "part", del, partIds)
+    deleteRowsInParts(spark, s"$dir/sigs", "doc_id", "part", del,
+      partIdsOf(del.select("part")))
   }
 
   // ------------------------------------------- Perceptual media (pHash)
@@ -1645,14 +1606,13 @@ object AnnIndex {
     // posting of a doc lives in a part dir its own keys name — so
     // probing the batch's part dirs for its doc_ids is a complete
     // presence check
-    val touched = staged.select("part").distinct()
-      .collect().map(_.getLong(0)) // bounded by parts, driver-safe
+    val touched = partIdsOf(staged.select("part"))
     // gate on part-DATA presence, not bare directory existence: after a
     // takedown vacates every part= dir the root still exists (holding
     // only _SUCCESS), and reading it would throw "unable to infer
     // schema" instead of bulk-loading into the emptied store
     val existing =
-      if (hasPartData(spark, s"$dir/postings"))
+      if (hasPartData(spark, s"$dir/postings", "part"))
         spark.read.parquet(s"$dir/postings")
           .filter(col("part").isin(touched.map(Long.box): _*))
           .select("doc_id").distinct()
@@ -1732,7 +1692,7 @@ object AnnIndex {
       media: DataFrame, store: DataFrame, checkEvery: Int = 1): Boolean = {
     upsertPhash(spark, dir, media)
     if (!policyCounterBump(spark, dir, checkEvery)) return false
-    if (!hasPartData(spark, s"$dir/postings")) return false
+    if (!hasPartData(spark, s"$dir/postings", "part")) return false
     val nPatch = readIndex(spark, dir, "meta").head().getAs[Int]("n_patches")
     val nDocs = readIndex(spark, dir, "postings").count() /
       Multimodal.PHashBands
@@ -1790,8 +1750,7 @@ object AnnIndex {
     val inner = verify(innerCand, batchDocs, batchDocs)
     if (!pathExists(spark, s"$dir/postings")) return inner
     // cross pairs: pruned index read, equi join on (band, key)
-    val partIds = batch.select("part").distinct()
-      .collect().map(_.getLong(0)) // bounded by parts, driver-safe
+    val partIds = partIdsOf(batch.select("part"))
     if (partIds.isEmpty) return inner // empty batch: nothing to probe
     val stored = spark.read.parquet(s"$dir/postings")
       .filter(col("part").isin(partIds.map(Long.box): _*))

@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.graft.Bus
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -311,19 +312,110 @@ class AnnIndexSpec extends AnyFunSuite {
     }
   }
 
-  test("LSH upsert: a batch with duplicate vec_ids is rejected") {
-    // the anti-join merge removes STORED rows only — a within-batch dupe
-    // would break the "each vec_id exactly once" invariant silently
-    val vecs = synthVecs(100)
-    val dir = Files.createTempDirectory("graft_annidx_").toString
-    AnnIndex.saveLsh(vecs, NBits, Dim, dir)
-    val dupBatch = synthVecs(150).filter(col("vec_id") >= 100)
-      .unionByName(synthVecs(150).filter(col("vec_id") === 120))
+  /** A maintained index under a duplicate-key upsert: `build` writes it
+    * into a fresh directory, `upsert` lands a batch into it.
+    */
+  private case class DupKeyLayout(name: String, build: String => Unit,
+      batch: () => DataFrame, upsert: (String, DataFrame) => Unit)
+
+  /** Every file under `dir` (its tables' hidden transaction directories
+    * included), by relative path, with its bytes.
+    */
+  private def fileBytes(dir: String): Map[String, Seq[Byte]] = {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get(dir)
+    val walk = Files.walk(root)
+    try walk.iterator().asScala.filter(Files.isRegularFile(_))
+      .map(p => root.relativize(p).toString -> Files.readAllBytes(p).toSeq).toMap
+    finally walk.close()
+  }
+
+  /** 51 vectors (ids 100..149) with id 120 twice. */
+  private def dupVecBatch(): DataFrame = synthVecs(150).filter(col("vec_id") >= 100)
+    .unionByName(synthVecs(150).filter(col("vec_id") === 120))
+
+  private val dupKeyLayouts: Seq[DupKeyLayout] = {
+    def vecs = synthVecs(100)
+    def docs = spark.range(30).select(col("id").as("doc_id"),
+      concat(lit("alpha beta gamma delta epsilon zeta eta theta iota kappa doc"),
+        col("id").cast("string")).as("text"))
+    def ivf(d: String) = AnnIndex.saveIvf(vecs, k = 8, sampleSize = 128,
+      iters = 2, dim = Dim, salt = 7, dir = d)
+    def pq(d: String) = AnnIndex.savePq(vecs, m = 4, sub = 16, k = 8,
+      sampleSize = 128, iters = 2, salt = 11, dir = d)
+    def ivfPq(d: String) = AnnIndex.saveIvfPq(vecs, ivfK = 8, sampleSize = 128,
+      iters = 2, dim = Dim, ivfSalt = 7, m = 4, sub = 16, pqK = 8, pqSalt = 11,
+      dir = d)
+    Seq(
+      DupKeyLayout("LSH", AnnIndex.saveLsh(vecs, NBits, Dim, _), dupVecBatch,
+        AnnIndex.upsertLsh(spark, _, _)),
+      DupKeyLayout("IVF", ivf, dupVecBatch, AnnIndex.upsertIvf(spark, _, _)),
+      DupKeyLayout("PQ", pq, dupVecBatch, AnnIndex.upsertPq(spark, _, _)),
+      DupKeyLayout("IVF+PQ", ivfPq, dupVecBatch, AnnIndex.upsertIvfPq(spark, _, _)),
+      DupKeyLayout("MinHash", AnnIndex.saveMinhash(docs, 16, 4, 4, _),
+        () => docs.filter(col("doc_id") >= 20)
+          .unionByName(docs.filter(col("doc_id") === 25)),
+        AnnIndex.upsertMinhash(spark, _, _)),
+      DupKeyLayout("IVF policy", ivf, dupVecBatch, (d, b) =>
+        AnnIndex.upsertIvfWithPolicy(spark, d, b, 8, 128, 2, Dim, 7, -1.0)),
+      DupKeyLayout("PQ policy", pq, dupVecBatch, (d, b) =>
+        AnnIndex.upsertPqWithPolicy(spark, d, vecs, b, 128, 2, 11, -1.0)),
+      DupKeyLayout("IVF+PQ policy", ivfPq, dupVecBatch, (d, b) =>
+        AnnIndex.upsertIvfPqWithPolicy(spark, d, vecs, b, 8, 128, 2, Dim, 7, 11,
+          -1.0)))
+  }
+
+  /** The anti-join merge removes STORED rows only, so a within-batch
+    * dupe would break the "each key exactly once" invariant silently:
+    * the upsert must throw, and before it touches a byte of the store.
+    */
+  private def assertDupBatchRejected(layout: DupKeyLayout): Unit = {
+    val dir = Files.createTempDirectory("graft_dupidx_").toString
+    layout.build(dir)
+    val before = fileBytes(dir)
     assertThrows[IllegalArgumentException] {
-      AnnIndex.upsertLsh(spark, dir, dupBatch)
+      layout.upsert(dir, layout.batch())
     }
-    // and the index is untouched: still exactly the original 100 rows
-    assert(AnnIndex.lshCorpus(spark, dir).count() == 100L)
+    val after = fileBytes(dir)
+    val changed = (after.keySet ++ before.keySet).filter(k => after.get(k) != before.get(k))
+    assert(changed.isEmpty, s"${layout.name}: the rejected batch changed $changed")
+  }
+
+  test("LSH upsert: a batch with duplicate vec_ids is rejected") {
+    assertDupBatchRejected(dupKeyLayouts.head)
+  }
+
+  test("every other upsert and quantizer policy arm rejects a duplicate-key batch and leaves the store byte-identical") {
+    dupKeyLayouts.tail.foreach(assertDupBatchRejected)
+  }
+
+  /** Spark jobs of one upsert of 120 vectors (20 of them re-inserted
+    * ids) into a 300-vector index, for a content-derived partition (LSH
+    * bucket) and an id-derived one (PQ `pmod(vec_id, parts)`). Shared:
+    * the stage's checkpoint (1), its key check (2), the stored table's
+    * schema read (1), the touched-partition collect (2; 3 for LSH,
+    * whose collect also runs the locate scan) and the publish's write
+    * (3). LSH adds its meta read (2) and its empty-batch probe (1); PQ
+    * its meta and codebook reads (4).
+    */
+  private val LshUpsertJobs = 13
+  private val PqUpsertJobs = 13
+
+  test("upsert job counts: LSH and PQ") {
+    val all = synthVecs(400)
+    val batch = all.filter(col("vec_id") >= 280)
+    val lshDir = Files.createTempDirectory("graft_lshjobs_").toString
+    AnnIndex.saveLsh(all.filter(col("vec_id") < 300), NBits, Dim, lshDir)
+    val (_, lshJobs) = Bus.jobsIn(spark.sparkContext)(
+      AnnIndex.upsertLsh(spark, lshDir, batch))
+    val pqDir = Files.createTempDirectory("graft_pqjobs_").toString
+    AnnIndex.savePq(all.filter(col("vec_id") < 300), m = 4, sub = 16, k = 8,
+      sampleSize = 128, iters = 2, salt = 11, dir = pqDir)
+    val (_, pqJobs) = Bus.jobsIn(spark.sparkContext)(
+      AnnIndex.upsertPq(spark, pqDir, batch))
+    assert((lshJobs, pqJobs) == (LshUpsertJobs, PqUpsertJobs))
+    assert(AnnIndex.lshCorpus(spark, lshDir).count() == 400L)
+    assert(spark.read.parquet(s"$pqDir/codes").count() == 400L)
   }
 
   test("IVF: stored-index probe == the session quantizer path") {
@@ -926,6 +1018,24 @@ class AnnIndexSpec extends AnyFunSuite {
     AnnIndex.upsertPhash(spark, dir, media(ids.take(6)))
     val n = spark.read.parquet(s"$dir/postings").count()
     assert(n == 6 * graft.operators.Multimodal.PHashBands)
+  }
+
+  test("PQ and IVF+PQ upsert after a total takedown: the emptied codes table bootstraps from the batch") {
+    val all = synthVecs(100)
+    def ids(d: String) = spark.read.parquet(s"$d/codes").select("vec_id")
+      .collect().map(_.getLong(0)).sorted.toSeq
+    val pqDir = Files.createTempDirectory("graft_pqempty_").toString
+    AnnIndex.savePq(all, m = 4, sub = 16, k = 8, sampleSize = 64, iters = 2,
+      salt = 11, dir = pqDir)
+    AnnIndex.deletePq(spark, pqDir, all.select("vec_id"))
+    AnnIndex.upsertPq(spark, pqDir, all.filter(col("vec_id") < 5))
+    assert(ids(pqDir) == (0L until 5L))
+    val ivfPqDir = Files.createTempDirectory("graft_ivfpqempty_").toString
+    AnnIndex.saveIvfPq(all, ivfK = 4, sampleSize = 64, iters = 2, dim = Dim,
+      ivfSalt = 7, m = 4, sub = 16, pqK = 8, pqSalt = 11, dir = ivfPqDir)
+    AnnIndex.deleteIvfPq(spark, ivfPqDir, all.select("vec_id"))
+    AnnIndex.upsertIvfPq(spark, ivfPqDir, all.filter(col("vec_id") < 5))
+    assert(ids(ivfPqDir) == (0L until 5L))
   }
 
   test("IVFPQ retrain: both quantizers re-fit over the live set + full re-route/re-encode == one-shot build; gauge fires and recovers") {

@@ -1,11 +1,9 @@
 package graft
 
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.graft.Bus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.{CoalesceExec, FileSourceScanExec}
 import org.apache.spark.sql.functions._
@@ -33,21 +31,8 @@ class StateStoreSpec extends AnyFunSuite {
   private def fixture: ForgetTable =
     ForgetTable.fromEvents(Tables.events(spark, "/root/testdata/sf0.001"))
 
-  /** The Spark jobs `body` launches (listener bus drained both sides). */
-  private def jobsIn[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    Bus.drain(sc)
-    sc.addSparkListener(listener)
-    try {
-      val out = body
-      Bus.drain(sc)
-      (out, jobs.get)
-    } finally sc.removeSparkListener(listener)
-  }
+  /** The Spark jobs `body` launches. */
+  private def jobsIn[T](body: => T): (T, Int) = Bus.jobsIn(spark.sparkContext)(body)
 
   /** The root paths of the plan's file scans, as local paths. */
   private def scanRoots(df: DataFrame): Seq[String] =
