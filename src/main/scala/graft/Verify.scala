@@ -1,28 +1,15 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = graft.sources.GraftSession.local(s"local[$cpus]", cpus.toInt)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.session()
     new java.io.File(outDir).mkdirs()
     // Dev loop: SPARK_GRAFT_ONLY=a,b,c restricts the dump (driver leaves
-    // it unset -> full run).
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    // A typo'd name must fail loudly, not silently shrink the dump to
-    // the empty set (a dev loop that "passes" on zero queries).
-    only.foreach { names =>
-      val unknown = names.diff(SparkEntry.queries.keySet)
-      require(unknown.isEmpty,
-        s"SPARK_GRAFT_ONLY names not in SparkEntry.queries: ${unknown.toSeq.sorted.mkString(", ")}")
-    }
-    val selected = SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
+    // it unset -> full run); an unknown name fails it.
+    val selected = Bench.selected(sys.env, "SPARK_GRAFT_ONLY")
     // Queries dump CONCURRENTLY (SPARK_GRAFT_VERIFY_PAR threads,
     // default 4): each query is an independent Spark job writing its
     // own output dir, and one query's plan rarely saturates the local
@@ -36,7 +23,7 @@ object Verify {
     val par = math.max(1, sys.env.get("SPARK_GRAFT_VERIFY_PAR")
       .flatMap(_.trim.toIntOption).getOrElse(4))
     val pool = java.util.concurrent.Executors.newFixedThreadPool(par)
-    val tasks = selected.toSeq.map { case (name, fn) =>
+    val tasks = selected.map { case (name, fn) =>
       pool.submit(new Runnable {
         def run(): Unit = {
           val t0 = System.nanoTime()

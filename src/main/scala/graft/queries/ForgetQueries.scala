@@ -158,6 +158,37 @@ object ForgetQueries {
         .orderBy("dist", "page")
   }
 
+  /** Per-(dist, bin) event counts of `batch`: one SegmentStore
+    * partial of the `ft_counts` state.
+    */
+  private def partials(batch: DataFrame): DataFrame =
+    batch.groupBy(
+        col("event_type").as("dist"),
+        col("user_id").cast("string").as("bin"))
+      .agg(count(lit(1)).as("count"))
+
+  /** The retraction family's segment staging at `path`: the
+    * `ft_counts_incremental` ingests (three disjoint batches that
+    * partition the domain exhaustively, null `ts` in the last), then
+    * the opt-out takedown of users with `user_id % 10 = 7` as one
+    * append of negated partials, with zero reads. Four segments, none
+    * compacted.
+    */
+  private def stageRetracted(s: SparkSession, dir: String, path: String): Unit = {
+    import graft.sources.SegmentStore
+    val ev = Tables.events(s, dir)
+    val t = (d: String) => lit(s"2024-01-$d 00:00:00").cast("timestamp")
+    SegmentStore.append(partials(ev.filter(col("ts") < t("11"))), path)
+    SegmentStore.append(partials(
+      ev.filter(col("ts") >= t("11") && col("ts") < t("21"))), path)
+    SegmentStore.append(partials(
+      ev.filter(col("ts").isNull || col("ts") >= t("21"))), path)
+    SegmentStore.append(
+      partials(ev.filter(col("user_id") % 10 === 7))
+        .select(col("dist"), col("bin"), (-col("count")).as("count")),
+      path)
+  }
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "ft_counts" -> ((s, dir) =>
       ft(s, dir).counts.orderBy("dist", "bin")),
@@ -216,23 +247,7 @@ object ForgetQueries {
     "ft_counts_retract" -> ((s, dir) => {
       import graft.sources.SegmentStore
       val path = s"${graft.sources.TempDirs.scratch("graft_ftr_")}/segments"
-      val ev = Tables.events(s, dir)
-      val t = (d: String) => lit(s"2024-01-$d 00:00:00").cast("timestamp")
-      def partials(batch: org.apache.spark.sql.DataFrame) =
-        batch.groupBy(
-            col("event_type").as("dist"),
-            col("user_id").cast("string").as("bin"))
-          .agg(count(lit(1)).as("count"))
-      // the ft_counts_incremental staging (exhaustive domain partition)
-      SegmentStore.append(partials(ev.filter(col("ts") < t("11"))), path)
-      SegmentStore.append(partials(
-        ev.filter(col("ts") >= t("11") && col("ts") < t("21"))), path)
-      SegmentStore.append(partials(
-        ev.filter(col("ts").isNull || col("ts") >= t("21"))), path)
-      SegmentStore.append(
-        partials(ev.filter(col("user_id") % 10 === 7))
-          .select(col("dist"), col("bin"), (-col("count")).as("count")),
-        path) // the takedown: negated partials, zero reads
+      stageRetracted(s, dir, path)
       SegmentStore.compact(s, path, Seq("dist", "bin"), "count")
       SegmentStore.merged(s, path, Seq("dist", "bin"), "count")
         .filter(col("count") > 0) // the reference's prune filter
@@ -261,22 +276,7 @@ object ForgetQueries {
       import s.implicits._
       import graft.sources.SegmentStore
       val path = s"${graft.sources.TempDirs.scratch("graft_ftt_")}/segments"
-      val ev = Tables.events(s, dir)
-      val t = (d: String) => lit(s"2024-01-$d 00:00:00").cast("timestamp")
-      def partials(batch: org.apache.spark.sql.DataFrame) =
-        batch.groupBy(
-            col("event_type").as("dist"),
-            col("user_id").cast("string").as("bin"))
-          .agg(count(lit(1)).as("count"))
-      SegmentStore.append(partials(ev.filter(col("ts") < t("11"))), path)
-      SegmentStore.append(partials(
-        ev.filter(col("ts") >= t("11") && col("ts") < t("21"))), path)
-      SegmentStore.append(partials(
-        ev.filter(col("ts").isNull || col("ts") >= t("21"))), path)
-      SegmentStore.append(
-        partials(ev.filter(col("user_id") % 10 === 7))
-          .select(col("dist"), col("bin"), (-col("count")).as("count")),
-        path) // the takedown: negated partials, zero reads
+      stageRetracted(s, dir, path)
       val pre = SegmentStore.tombstoneStats(s, path, Seq("dist", "bin"),
         "count").head() // ONE row
       val before = SegmentStore.merged(s, path, Seq("dist", "bin"), "count")
@@ -317,22 +317,7 @@ object ForgetQueries {
     "ft_counts_asof" -> ((s, dir) => {
       import graft.sources.SegmentStore
       val path = s"${graft.sources.TempDirs.scratch("graft_ftao_")}/segments"
-      val ev = Tables.events(s, dir)
-      val t = (d: String) => lit(s"2024-01-$d 00:00:00").cast("timestamp")
-      def partials(batch: org.apache.spark.sql.DataFrame) =
-        batch.groupBy(
-            col("event_type").as("dist"),
-            col("user_id").cast("string").as("bin"))
-          .agg(count(lit(1)).as("count"))
-      SegmentStore.append(partials(ev.filter(col("ts") < t("11"))), path)
-      SegmentStore.append(partials(
-        ev.filter(col("ts") >= t("11") && col("ts") < t("21"))), path)
-      SegmentStore.append(partials(
-        ev.filter(col("ts").isNull || col("ts") >= t("21"))), path)
-      SegmentStore.append(
-        partials(ev.filter(col("user_id") % 10 === 7))
-          .select(col("dist"), col("bin"), (-col("count")).as("count")),
-        path) // the takedown: negated partials, zero reads
+      stageRetracted(s, dir, path)
       (0L to 3L).map { k =>
         SegmentStore.mergedAsOf(s, path, Seq("dist", "bin"), "count", k)
           .filter(col("count") > 0) // the reference's prune read
@@ -363,11 +348,6 @@ object ForgetQueries {
       val ev = Tables.events(s, dir)
       val t11 = lit("2024-01-11 00:00:00").cast("timestamp")
       val isWeb = col("user_id").isNotNull && col("user_id") % 2 === 0
-      def partials(batch: DataFrame) =
-        batch.groupBy(
-            col("event_type").as("dist"),
-            col("user_id").cast("string").as("bin"))
-          .agg(count(lit(1)).as("count"))
       // web: two batches split at day 11 (null ts rides the second)
       SegmentStore.appendExactlyOnce(
         partials(ev.filter(isWeb && col("ts") < t11)), path, "web", 0L)

@@ -1807,7 +1807,8 @@ object RelationalQueries {
     // (a one-row width CTE, the sim_knn_graph_scaled pattern), so one
     // static SQL text checks every derived width; at the driver SFs the
     // rule lands on 3 and the result coincides with rel_fuzzy_join —
-    // the ScaleProbe match-rate receipt is where the widths diverge.
+    // `graft.Bench scale N`'s match-rate lines are where the widths
+    // diverge.
     "rel_fuzzy_join_scaled" -> ((s, dir) => {
       val q = scaledFuzzyGram(Tables.customer(s, dir).count())
       val (dirty, verified0) = fuzzyVerified(s, dir, q)

@@ -36,7 +36,8 @@ object SimilarityQueries {
     * no matter the corpus size — stride 1 (the full corpus, bit-identical
     * to the uncapped form) at every driver test scale, kicking in only
     * beyond 4096 vectors. The uncapped fixed-width build stays available
-    * as [[knnGraphRes]] (ScaleProbe's quadratic contrast point); the
+    * as [[knnGraphRes]] (the quadratic contrast point of
+    * `graft.Bench scale N`'s knn_graph@bits line); the
     * production path is [[knnScaledBits]]'s derived-width
     * sim_knn_graph_scaled.
     */
@@ -125,7 +126,7 @@ object SimilarityQueries {
 
   /** The GROWTH-drift scenario for sim_ann_lsh_rebucket: the corpus
     * DOUBLES (a crawl wave of genuinely different vectors — each base
-    * vector rotated by one dimension, ScaleProbe's recipe — at offset
+    * vector rotated by one dimension, `graft.Bench scale`'s recipe — at offset
     * ids). Unlike [[driftWave]]'s concentrated cluster, this is the
     * drift that hurts LSH: hyperplanes are data-independent, so
     * per-bucket population N/2^w grows with every wave and probes scan
@@ -830,7 +831,8 @@ object SimilarityQueries {
     // reading: the driver contract requires self-contained queries, so
     // every invocation REBUILDS the index into a scratch dir — the
     // bench number is build + probe, not the probe a deployed service
-    // pays (ScaleProbe shows the probe side flat as the corpus grows).
+    // pays (BASELINE.md's round-7 and round-8 scaling probes show the
+    // probe side flat as the corpus grows).
     "sim_ann_lsh_idx" -> ((s, dir) => {
       val idxDir = graft.sources.TempDirs.scratch("graft_lshidx_")
       graft.sources.AnnIndex.saveLsh(vecs(s, dir), LshBits, Dim, idxDir)

@@ -66,7 +66,7 @@ object TextQueries {
     * (production tokenizers retrain on far smaller regressions; the
     * gate needs clear separation between the calm arm, ~0-150 across
     * corpora, and the drift arm, which bottoms out near ~470 on the
-    * least favorable corpus measured: ScaleProbe's 30x staging mixes
+    * least favorable corpus measured: `graft.Bench scale 30`'s staging mixes
     * 30 letter permutations, making the pair distribution
     * near-symmetric so token reversal destroys only ~half the
     * benefit). The dial is SCALE-FREE by construction: an absolute

@@ -847,13 +847,16 @@ object AnnIndex {
     * `minMeanCcos`. Runs `retrain` and returns true iff a dial tripped.
     * A batch-dial retrain skips the counter: the swap replaces the dir
     * and the counter file with it, so the healed store starts a fresh
-    * cadence either way.
+    * cadence either way. At the default `minBatchMeanCcos = -∞` the
+    * batch dial can never trip, so its gauge is not computed (2 Spark
+    * jobs per IVF or IVF+PQ call, 5 per PQ call).
     */
   private def retrainOnDrift(spark: SparkSession, dir: String,
       batchMeanCcos: () => Option[Double], minBatchMeanCcos: Double,
       checkEvery: Int, storeGauge: => DataFrame, minMeanCcos: Double)(
       retrain: => Unit): Boolean = {
-    val tripped = batchMeanCcos().exists(_ < minBatchMeanCcos) ||
+    val tripped = (minBatchMeanCcos > Double.NegativeInfinity &&
+        batchMeanCcos().exists(_ < minBatchMeanCcos)) ||
       (policyCounterBump(spark, dir, checkEvery) &&
         storeGauge.collect()(0).getDouble(2) < minMeanCcos)
     if (tripped) retrain

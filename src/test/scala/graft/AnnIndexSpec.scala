@@ -418,6 +418,39 @@ class AnnIndexSpec extends AnyFunSuite {
     assert(spark.read.parquet(s"$pqDir/codes").count() == 400L)
   }
 
+  /** Spark jobs of one quantizer policy call with the batch dial at its
+    * default `-∞`, where it can never trip and its gauge is skipped; the
+    * store dial is due (`checkEvery = 1`) and does not trip. Same
+    * 120-vector batch into a 300-vector index as the upsert counts.
+    */
+  private val PolicyUpsertJobs = Map("IVF" -> 17, "PQ" -> 21, "IVF+PQ" -> 25)
+
+  test("policy upsert job counts at the default batch dial: IVF, PQ and IVF+PQ") {
+    val all = synthVecs(400)
+    val batch = all.filter(col("vec_id") >= 280)
+    val base = all.filter(col("vec_id") < 300)
+    def jobs(save: String => Unit, upsert: String => Boolean): Int = {
+      val dir = Files.createTempDirectory("graft_policyjobs_").toString
+      save(dir)
+      val (retrained, n) = Bus.jobsIn(spark.sparkContext)(upsert(dir))
+      assert(!retrained)
+      n
+    }
+    val counts = Map(
+      "IVF" -> jobs(d => AnnIndex.saveIvf(base, k = 8, sampleSize = 128, iters = 2,
+          dim = Dim, salt = 7, dir = d),
+        AnnIndex.upsertIvfWithPolicy(spark, _, batch, 8, 128, 2, Dim, 7, -1.0)),
+      "PQ" -> jobs(d => AnnIndex.savePq(base, m = 4, sub = 16, k = 8, sampleSize = 128,
+          iters = 2, salt = 11, dir = d),
+        AnnIndex.upsertPqWithPolicy(spark, _, all, batch, 128, 2, 11, -1.0)),
+      "IVF+PQ" -> jobs(d => AnnIndex.saveIvfPq(base, ivfK = 8, sampleSize = 128,
+          iters = 2, dim = Dim, ivfSalt = 7, m = 4, sub = 16, pqK = 8, pqSalt = 11,
+          dir = d),
+        AnnIndex.upsertIvfPqWithPolicy(spark, _, all, batch, 8, 128, 2, Dim, 7, 11,
+          -1.0)))
+    assert(counts == PolicyUpsertJobs)
+  }
+
   test("IVF: stored-index probe == the session quantizer path") {
     val vecs = synthVecs(500)
     val dir = Files.createTempDirectory("graft_ivfidx_").toString

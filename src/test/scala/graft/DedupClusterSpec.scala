@@ -103,6 +103,35 @@ class DedupClusterSpec extends AnyFunSuite {
     }
   }
 
+  test("bulk-staged cluster store equals singleton seeding plus one ccIngest of the full pair stream, row for row") {
+    import graft.queries.DedupQueries
+    val dir = "/root/testdata/sf0.001"
+    val ids = DedupQueries.corpus(spark, dir).select(col("doc_id").as("id"))
+    val pairs = DedupQueries.minhashPairsOverSigs(
+        DedupQueries.minhashSigsOver(DedupQueries.corpus(spark, dir)))
+      .select("id_a", "id_b").localCheckpoint(true)
+    val root = graft.sources.TempDirs.scratch("graft_ccbulk_")
+    val staged = s"$root/staged/assign"
+    val bulk = s"$root/bulk/assign"
+    ids.select(col("id"), col("id").as("label"))
+      .withColumn("part", pmod(col("label"), lit(DedupQueries.CcParts)))
+      .write.partitionBy("part").parquet(staged)
+    DedupQueries.ccIngest(spark, staged, pairs)
+    DedupQueries.ccBulkStage(spark, bulk, ids, pairs)
+    def rows(p: String) = graft.sources.Publish.readParquet(spark, p)
+      .select(col("id"), col("label"), col("part").cast("long")) // dir-name partition values infer as int
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted.toSeq
+    val want = rows(staged)
+    assert(want.size == ids.count())
+    // the pair stream merged components: not a singleton-vs-singleton compare
+    assert(want.exists { case (id, label, _) => id != label })
+    val got = rows(bulk)
+    val (bulkOnly, stagedOnly) = (got.diff(want), want.diff(got))
+    if (bulkOnly.nonEmpty || stagedOnly.nonEmpty)
+      fail(s"${bulkOnly.size} bulk-only rows (${bulkOnly.take(5).mkString(", ")}), " +
+        s"${stagedOnly.size} staged-only rows (${stagedOnly.take(5).mkString(", ")})")
+  }
+
   test("transitive chain closes into one cluster labeled by its min id") {
     // a-b, b-c, c-d: no (a,d) pair ever surfaced, yet all four must join.
     // A chain is also the worst case for propagation rounds (diameter 3).
