@@ -72,11 +72,13 @@ object Decay {
 
   /** The stream's twin of [[amount]] in Sampled mode: one dist's decay
     * from clock `t` to `now` as `(bin, count) => new count`, hashing
-    * `dist` once (42 is Catalyst `xxhash64`'s seed).
+    * `dist` once (42 is Catalyst `xxhash64`'s seed). At `lambda = 0`
+    * every draw is 0, so only the clamp acts and nothing is hashed.
     */
   def sampler(dist: String, t: Long, now: Long, rate: Double,
               prune: Boolean): (String, Long) => Long = {
     val lambda = rate * math.max(0L, now - t).toDouble
+    if (lambda == 0.0) return (_, count) => count - clampGo(0L, count, prune)
     val distHash = XXH64.hashUTF8String(UTF8String.fromString(dist), 42L)
     (bin, count) => {
       val seed = XXH64.hashLong(now, XXH64.hashUTF8String(UTF8String.fromString(bin), distHash))

@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 import graft.operators.{Dedup, Multimodal, Similarity}
 
@@ -667,7 +668,7 @@ object AnnIndex {
     */
   private def storedPerm(spark: SparkSession, dir: String): Seq[Int] =
     if (!pathExists(spark, s"$dir/perm")) Seq.empty
-    else spark.read.parquet(s"$dir/perm")
+    else readFrozen(spark, s"$dir/perm")
       .orderBy("pos").collect().map(_.getAs[Int]("src")).toSeq // Dim rows
 
   /** Reorder `vecCol` by a 1-based source-index permutation; identity
@@ -897,7 +898,36 @@ object AnnIndex {
     */
   private def readIndex(spark: SparkSession, dir: String, sub: String): DataFrame = {
     Publish.recover(spark, dir)
-    readTable(spark, s"$dir/$sub")
+    if (Frozen(sub)) readFrozen(spark, s"$dir/$sub") else readTable(spark, s"$dir/$sub")
+  }
+
+  /** The small flat tables an index writes once per build or retrain,
+    * one file each.
+    */
+  private val Frozen = Set("meta", "codebook", "centroids")
+
+  /** A frozen table, typed by the schema Spark wrote into its first
+    * file's footer (read on the driver), so the read runs no
+    * schema-inference job; inferred as usual when no file carries one.
+    */
+  private def readFrozen(spark: SparkSession, path: String): DataFrame = {
+    Publish.recover(spark, path)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val p = new org.apache.hadoop.fs.Path(path)
+    val written = p.getFileSystem(conf).listStatus(p)
+      .filter(_.getPath.getName.endsWith(".parquet")).sortBy(_.getPath.getName)
+      .headOption.flatMap { st =>
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
+        // the key Spark's parquet writer stores the row schema under
+        try Option(r.getFooter.getFileMetaData.getKeyValueMetaData
+          .get("org.apache.spark.sql.parquet.row.metadata"))
+        finally r.close()
+      }
+    written.map(DataType.fromJson(_)) match {
+      case Some(schema: StructType) => spark.read.schema(schema).parquet(path)
+      case _ => readTable(spark, path)
+    }
   }
 
   /** A partitioned index table, after recovering its own publishes. */

@@ -1,5 +1,7 @@
 package graft.streaming
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.{Dataset, Encoders}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -69,21 +71,17 @@ object ForgetStream {
     */
   def transition(dist: String, incrs: Seq[FtRequest], prev: Option[DistState],
                  nowSec: Long, p: Params): DistState = {
-    val base = prev.getOrElse(DistState(Map.empty, 0L, incrs.headOption.map(_.tsSec).getOrElse(nowSec)))
-    // ZINCRBY: counts grow by the batch's increments (settle re-sums Z)
-    val merged = incrs.foldLeft(base.counts) { (m, e) =>
-      m.updated(e.bin, m.getOrElse(e.bin, 0L) + e.n)
+    val w = new Work(dist, nowSec, p)
+    prev match {
+      case Some(s) => w.seed(s)
+      case None => w.open(incrs.headOption.map(_.tsSec).getOrElse(nowSec))
     }
+    // ZINCRBY: counts grow by the batch's increments
+    incrs.foreach(e => w.add(e.bin, e.n))
     // lazy decay at read-repair time (UpdateDistribution: Fill -> Decay ->
     // Normalize; goforget/redis_utils.go:146-152)
-    val decay = Decay.sampler(dist, base.t, nowSec, p.rate, p.prune)
-    settle(merged.map { case (bin, count) => bin -> decay(bin, count) }, nowSec, p)
-  }
-
-  /** The write-back after a decay: prune, `Z = Σ counts`, `T = now`. */
-  private def settle(counts: Map[String, Long], nowSec: Long, p: Params): DistState = {
-    val kept = if (p.prune) counts.filter(_._2 > 0L) else counts
-    DistState(kept, kept.values.sum, nowSec)
+    w.decayAll()
+    w.state
   }
 
   /** Partial read-repair: decay ONLY the `k` most-probable bins and
@@ -107,11 +105,10 @@ object ForgetStream {
     */
   def topKDecay(dist: String, s: DistState, k: Int, nowSec: Long,
                 p: Params): (DistState, Seq[(String, Long)]) = {
-    val decay = Decay.sampler(dist, s.t, nowSec, p.rate, p.prune)
-    val head = s.counts.toSeq.sortBy { case (b, c) => (-c, b) }(
-      Ordering.Tuple2(Ordering.Long, Ordering.String.reverse)).take(k)
-    val decayedHead = head.map { case (bin, count) => bin -> decay(bin, count) }
-    (settle(s.counts ++ decayedHead, nowSec, p), decayedHead)
+    val w = new Work(dist, nowSec, p)
+    w.seed(s)
+    val fetched = w.topK(k)
+    (w.state, fetched)
   }
 
   /** Fold a micro-batch of mixed requests through the state, mirroring
@@ -129,41 +126,165 @@ object ForgetStream {
     * never existed) and the rows each op emitted: incr runs emit the
     * whole post-decay distribution, reads emit exactly the bins they
     * fetched.
+    *
+    * Cost: the batch folds through one mutable working copy of the
+    * distribution, seeded once from `prev`; an increment is one map
+    * update. Every decay in a batch runs at the batch's clock, so only
+    * the first can see `dt > 0`: that one decays every bin, and each
+    * later one (`dt = 0`, where every draw is 0) only clamps or prunes
+    * the bins that can hold a count below 1 — those below 1 in `prev`
+    * and those an increment touched since. A `topk` read is O(n log k)
+    * through a `k`-bounded heap, not a sort of every bin. `Z` is kept
+    * as a running sum. Emitting a whole distribution stays O(n).
     */
   def transitionRequests(dist: String, reqs: Seq[FtRequest], prev: Option[DistState],
                          nowSec: Long, p: Params): (Option[DistState], Vector[BinSnapshot]) = {
-    var out = Vector.empty[BinSnapshot]
-    var state: Option[DistState] = prev
-    var run = Vector.empty[FtRequest]
-    def flushIncrs(): Unit = if (run.nonEmpty) {
-      val s = transition(dist, run, state, nowSec, p)
-      out ++= s.counts.map { case (b, c) => BinSnapshot(dist, b, c, s.z, s.t) }
-      state = Some(s)
-      run = Vector.empty
+    def alive(s: DistState) = !(s.z == 0L && p.prune)
+    if (reqs.isEmpty) return (prev.filter(alive), Vector.empty)
+    val w = new Work(dist, nowSec, p)
+    prev.foreach(w.seed)
+    val out = Vector.newBuilder[BinSnapshot]
+    var run = false // an increment run is merged and its decay is pending
+    def flushIncrs(): Unit = if (run) {
+      w.decayAll()
+      w.emit(out)
+      run = false
     }
-    reqs.toVector.sortBy(_.tsSec).foreach { r =>
-      if (r.op == "incr") run :+= r
-      else {
+    reqs.sortBy(_.tsSec).foreach { r =>
+      if (r.op == "incr") {
+        // a new distribution's clock opens at its earliest increment
+        if (!w.exists) w.open(r.tsSec)
+        w.add(r.bin, r.n)
+        run = true
+      } else {
         flushIncrs()
-        state match {
-          case None => // absent distribution: empty response, nothing to repair
-          case Some(s) =>
-            r.op match {
-              case "topk" =>
-                val (next, fetched) = topKDecay(dist, s, r.k, nowSec, p)
-                out ++= fetched.map { case (b, c) => BinSnapshot(dist, b, c, next.z, next.t) }
-                state = Some(next)
-              case _ => // "dist": full lazy read-repair
-                val next = transition(dist, Seq.empty, Some(s), nowSec, p)
-                out ++= next.counts.map { case (b, c) => BinSnapshot(dist, b, c, next.z, next.t) }
-                state = Some(next)
-            }
+        // an absent distribution: empty response, nothing to repair
+        if (w.exists) r.op match {
+          case "topk" =>
+            val fetched = w.topK(r.k)
+            fetched.foreach { case (b, c) => out += BinSnapshot(dist, b, c, w.z, w.t) }
+          case _ => // "dist": full lazy read-repair
+            w.decayAll()
+            w.emit(out)
         }
       }
     }
     flushIncrs()
-    val terminal = state.filterNot(s => s.z == 0L && p.prune)
-    (terminal, out)
+    (if (w.exists) Some(w.state).filter(alive) else None, out.result())
+  }
+
+  /** `ZREVRANGEBYSCORE` order: the sort key `(-count, bin)` ascending,
+    * with `bin` descending on ties (redis_utils.go:218).
+    */
+  private val RevRange: Ordering[(String, Long)] = (x, y) => {
+    val c = java.lang.Long.compare(-x._2, -y._2)
+    if (c != 0) c else y._1.compareTo(x._1)
+  }
+
+  /** One distribution's mutable working copy for one fold: the counts,
+    * their running sum `z`, the clock `t`, and the dirty set. Invariant:
+    * every bin outside `dirty` holds a count of at least 1, which the
+    * Sampled decay at `dt = 0` leaves as it is.
+    */
+  private final class Work(dist: String, nowSec: Long, p: Params) {
+    private val counts = mutable.HashMap.empty[String, Long]
+    private val dirty = mutable.HashSet.empty[String]
+    var z = 0L
+    var t = 0L
+    /** False until the state exists: seeded, or opened by an increment. */
+    var exists = false
+
+    def seed(s: DistState): Unit = {
+      counts.sizeHint(s.counts.size)
+      s.counts.foreachEntry { (b, c) =>
+        counts.update(b, c)
+        z += c
+        if (c < 1L) dirty += b
+      }
+      t = s.t
+      exists = true
+    }
+
+    def open(t0: Long): Unit = {
+      t = t0
+      exists = true
+    }
+
+    def add(bin: String, n: Long): Unit = {
+      counts.update(bin, counts.getOrElse(bin, 0L) + n)
+      z += n
+      dirty += bin
+    }
+
+    /** `bin`'s count becomes `c`; under prune a count of 0 or less
+      * drops the bin (the write-back's ZREM).
+      */
+    private def put(bin: String, old: Long, c: Long): Unit = {
+      if (p.prune && c <= 0L) counts.remove(bin) else counts.update(bin, c)
+      z += c - old
+    }
+
+    /** The full lazy read-repair, then the write-back: decay every bin
+      * from `t` to now, prune, `T = now`. At `dt = 0` only the dirty
+      * bins can move.
+      */
+    def decayAll(): Unit = {
+      val decay = Decay.sampler(dist, t, nowSec, p.rate, p.prune)
+      if (t < nowSec) {
+        // decay in place, then prune in a second pass: writing to the map
+        // from inside its own filterInPlace loses bins
+        counts.mapValuesInPlace(decay)
+        if (p.prune) counts.filterInPlace((_, c) => c > 0L)
+        z = counts.valuesIterator.sum
+      } else dirty.foreach(b => counts.get(b).foreach(c => put(b, c, decay(b, c))))
+      dirty.clear()
+      t = nowSec
+    }
+
+    /** [[topKDecay]] on the working copy: decay the `k` most-probable
+      * bins, prune every bin at 0 or less, `T = now`. Returns the fetched
+      * bins, post-decay, in [[RevRange]] order.
+      */
+    def topK(k: Int): Vector[(String, Long)] = {
+      val decay = Decay.sampler(dist, t, nowSec, p.rate, p.prune)
+      val fetched = head(k).map { case (b, c) =>
+        val d = decay(b, c)
+        put(b, c, d)
+        b -> d
+      }
+      if (p.prune) {
+        // a bin below 1 outside the head is dirty; every other one is >= 1
+        dirty.foreach(b => counts.get(b).foreach(c => if (c <= 0L) {
+          counts.remove(b)
+          z -= c
+        }))
+        dirty.clear()
+      }
+      t = nowSec
+      fetched
+    }
+
+    /** The `k` first bins in [[RevRange]] order, from a `k`-bounded heap
+      * whose top is the worst bin kept.
+      */
+    private def head(k: Int): Vector[(String, Long)] =
+      if (k <= 0) Vector.empty
+      else {
+        val heap = mutable.PriorityQueue.empty[(String, Long)](RevRange)
+        counts.foreach { e =>
+          if (heap.size < k) heap.enqueue(e)
+          else if (RevRange.lt(e, heap.head)) {
+            heap.dequeue()
+            heap.enqueue(e)
+          }
+        }
+        heap.dequeueAll.reverseIterator.toVector
+      }
+
+    def emit(out: mutable.Growable[BinSnapshot]): Unit =
+      counts.foreachEntry((b, c) => out += BinSnapshot(dist, b, c, z, t))
+
+    def state: DistState = DistState(counts.toMap, z, t)
   }
 
   /** Expiry timeout (seconds) for a state snapshot — O9. */
@@ -171,6 +292,21 @@ object ForgetStream {
     val maxCount = if (s.counts.isEmpty) 0L else s.counts.values.max
     val eta = math.sqrt(maxCount.toDouble / p.rate)
     ((p.sigma + eta) * eta).toLong
+  }
+
+  /** Spark sets a timeout's deadline to `now + duration` in ms, so a
+    * duration past this bound could overflow it into the past.
+    */
+  private final val MaxTimeoutMs = Long.MaxValue / 2
+
+  /** The state timeout in ms: [[expirySec]], at least one second, and
+    * saturated at [[MaxTimeoutMs]]. At `rate = 0` the expiry is
+    * `Long.MaxValue` s, which a plain `* 1000` overflows to a negative
+    * duration that Spark rejects.
+    */
+  def expiryMs(s: DistState, p: Params): Long = {
+    val sec = math.max(1L, expirySec(s, p))
+    if (sec > MaxTimeoutMs / 1000L) MaxTimeoutMs else sec * 1000L
   }
 
   def requestsFn(p: Params, clock: () => Long, withExpiry: Boolean = true)(
@@ -184,8 +320,7 @@ object ForgetStream {
       next match {
         case Some(s) =>
           state.update(s)
-          if (withExpiry)
-            state.setTimeoutDuration(math.max(1L, expirySec(s, p)) * 1000L)
+          if (withExpiry) state.setTimeoutDuration(expiryMs(s, p))
         case None if state.exists => state.remove()
         case None =>
       }

@@ -395,11 +395,12 @@ class AnnIndexSpec extends AnyFunSuite {
     * the stage's checkpoint (1), its key check (2), the stored table's
     * schema read (1), the touched-partition collect (2; 3 for LSH,
     * whose collect also runs the locate scan) and the publish's write
-    * (3). LSH adds its meta read (2) and its empty-batch probe (1); PQ
-    * its meta and codebook reads (4).
+    * (3). LSH adds its meta read (1) and its empty-batch probe (1); PQ
+    * its meta and codebook reads (2). Those small tables are read with
+    * the schema in their footer, so neither runs a schema-inference job.
     */
-  private val LshUpsertJobs = 13
-  private val PqUpsertJobs = 13
+  private val LshUpsertJobs = 12
+  private val PqUpsertJobs = 11
 
   test("upsert job counts: LSH and PQ") {
     val all = synthVecs(400)
@@ -423,7 +424,7 @@ class AnnIndexSpec extends AnyFunSuite {
     * store dial is due (`checkEvery = 1`) and does not trip. Same
     * 120-vector batch into a 300-vector index as the upsert counts.
     */
-  private val PolicyUpsertJobs = Map("IVF" -> 17, "PQ" -> 21, "IVF+PQ" -> 25)
+  private val PolicyUpsertJobs = Map("IVF" -> 15, "PQ" -> 17, "IVF+PQ" -> 21)
 
   test("policy upsert job counts at the default batch dial: IVF, PQ and IVF+PQ") {
     val all = synthVecs(400)
